@@ -16,7 +16,8 @@ materialization on executors, zero driver collect — so timings reflect
 the whole plan (scan → shuffle → UDF → write), not a pruned count().
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_REPLICATE (default 20).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+SPARK_GRAFT_BENCH_REPLICATE (default 20).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from luzzu_spark.fixtures import as_webpages, load_table  # noqa: E402
-from luzzu_spark.session import get_spark  # noqa: E402
+from luzzu_spark.session import default_cpus, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "20"))
@@ -320,11 +321,11 @@ def _latest_scaling_run() -> dict:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     # box-ceiling control FIRST (before the JVM exists): pure-CPU md5
     # serial + full-width — recorded in the output JSON so a contended
     # host is visible in the artifact itself (VERDICT r03 item 2)
-    control = host_control(int(cpus))
+    control = host_control(cpus)
     spark = get_spark("luzzu_spark_bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -366,39 +367,35 @@ def main() -> None:
     for name, ts in trials.items():
         timings[name] = round(min(ts), 3)
 
-    # round-3 operators, timed the same way but kept OUT of the
-    # headline total: the 12-query headline set is the stable
-    # baseline-comparable contract (BASELINE.md bands); these rows give
-    # per-operator visibility for the newer ops without moving it
-    extended = ["text_c4_line_scrub", "dedup_dup_span_removal",
-                "dedup_cluster_quality_survivors", "text_nfc_normalize",
-                "dsir_weighted_sample"]
-    extended_r04 = ["text_html_extract", "dedup_cross_doc_paragraphs",
-                    "split_leakage_audit"]
-    extended_r05 = ["dedup_bloom_paragraph_scrub"]
+    # newer operators and the crawl ingest legs, timed the same way but
+    # kept OUT of the headline total: the 12-query headline set is the
+    # stable baseline-comparable contract (BASELINE.md bands); these
+    # rows give per-operator visibility without moving it
+    extended = [n for n in ["text_c4_line_scrub", "dedup_dup_span_removal",
+                            "dedup_cluster_quality_survivors",
+                            "text_nfc_normalize", "dsir_weighted_sample",
+                            "text_html_extract",
+                            "dedup_cross_doc_paragraphs",
+                            "split_leakage_audit",
+                            "dedup_bloom_paragraph_scrub"]
+                if n in catalog]
     # build INSIDE the timed region: iterative queries (connected
     # components) execute their rounds during construction, so a
     # build-once/noop-twice split would undercount them
-    ext_trials = {n: [] for n in extended + extended_r04 + extended_r05
-                  if n in catalog}
+    ext_trials: dict[str, list[float]] = {n: [] for n in extended}
     for _ in range(2):
-        for name in ext_trials:
+        for name in extended:
             t0 = time.perf_counter()
             run_noop(catalog[name](spark, SF_DIR))
             ext_trials[name].append(time.perf_counter() - t0)
-    timings_extended = {n: round(min(ts), 3)
-                        for n, ts in ext_trials.items() if n in extended}
-    timings_extended_r04 = {n: round(min(ts), 3)
-                            for n, ts in ext_trials.items()
-                            if n in extended_r04}
-    timings_extended_r05 = {n: round(min(ts), 3)
-                            for n, ts in ext_trials.items()
-                            if n in extended_r05}
 
-    # r05: crawl-native ingest paths (WET parse / raw-WARC HTML
-    # extraction) feeding the full assessment — the round's flagship
-    # capability measured with the same min-of-interleaved discipline
+    # crawl-native ingest paths (WET parse / raw-WARC HTML extraction)
+    # feeding the full assessment, with the same min-of-interleaved
+    # discipline
     ingest = bench_ingest(spark, SF_DIR)
+    timings_extended = {**{n: round(min(ts), 3)
+                           for n, ts in ext_trials.items()},
+                        **ingest["timings"]}
 
     total = round(sum(timings.values()), 3)
     # Second degraded-host signal (r05 close observation): a contended
@@ -434,10 +431,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "queries_extended_r03": timings_extended,
-        "queries_extended_r04": timings_extended_r04,
-        "queries_extended_r05": {**ingest["timings"],
-                                 **timings_extended_r05},
+        "queries_extended": timings_extended,
         "ingest_docs": ingest["ingest_docs"],
         "wet_docs_per_sec": ingest["wet_docs_per_sec"],
         "warc_docs_per_sec": ingest["warc_docs_per_sec"],
@@ -450,7 +444,7 @@ def main() -> None:
         "pipeline_single_trial_sec": round(sec_single, 3),
         "docs_per_sec_single_trial": round(n_docs / sec_single, 1),
         "replicate_factor": REPLICATE,
-        "cpus": int(cpus),
+        "cpus": cpus,
         # pure-CPU md5 ceiling measured immediately before the Spark
         # session started — if host_suspect is true, treat the wall
         # times above as host-inflated (the r03 anomaly's signature)

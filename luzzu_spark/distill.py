@@ -23,8 +23,8 @@ fully distributes:
   Catalyst, with exact BIGINT entries (oracle-checkable:
   `distill_gram_stats`).
 * **The solve is the only driver step.** (XᵀX + λI) w = Xᵀy over
-  collected aggregates: ≤ 65k + 256 rows (~2 MB — same bounded-driver
-  budget class as the IVF training sample), then one deterministic
+  collected aggregates: ≤ 65k + 256 rows (~2 MB, bounded by the
+  feature width, not the corpus), then one deterministic
   numpy `solve`.
 * **Scoring is a broadcast join.** The 256-row weight table joins the
   per-doc sparse counts; score = Σ cnt·w per doc — no UDF at all in

@@ -97,8 +97,9 @@ _CHANGED_SINCE_LAST_GREEN: tuple[str, ...] = (
     # threshold-straddling gaps sessionize differently — green by luck)
     "events_session_counts",
     # late-r05 review: the interpreted stopword HOF scan replaced by
-    # one-pass regex counts (same single-space token semantics, oracle
-    # untouched; CLAUDE.md rule 1)
+    # one-pass regex counts (same single-space token semantics;
+    # CLAUDE.md rule 1); since then \z for a final-newline stopword and
+    # NULL text as zero tokens on both engines (oracle changed too)
     "metrics_run_delta",
 )
 

@@ -106,41 +106,6 @@ def embed_lsh_multiprobe_topk(spark: SparkSession,
         "query_id", "neighbor_id", F.round("sim", 6).alias("sim"), "rnk")
 
 
-@register("embed_ivf_topk")  # rows-only: k-means cells are model-derived
-def embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k — the second ANN scale path: k-means
-    Voronoi cells (trained driver-side on a hash-sample, broadcast as
-    a numpy matrix), each query probes its nprobe nearest cells only.
-    Rows-only: cell boundaries are model-derived; the exactness twin
-    (nprobe == n_lists ≡ brute force) is pinned in
-    tests/test_dedup_similarity.py."""
-    from luzzu_spark.ivf import ivf_topk
-    e = _emb(spark, sf_dir)
-    q = e.where(F.col("vec_id") < 5)
-    return (ivf_topk(e, q, k=5, nprobe=4)
-            .select("query_id", "neighbor_id",
-                    F.round("sim", 6).alias("sim"), "rnk")
-            .orderBy("query_id", "rnk"))
-
-
-@register("embed_ivfpq_topk")  # rows-only: model-derived cells + codes
-def embed_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ approximate top-k — the compressed ANN path: corpus
-    vectors quantize to m=8 BYTES (32× smaller than the float column),
-    queries probe nprobe Voronoi cells, candidates score by asymmetric
-    distance, and the top k*refine shortlist re-ranks by exact cosine
-    fetched by id. Rows-only: cells/codebooks are model-derived; the
-    exactness knob (full probe + full refine ≡ brute force) and the
-    ADC error bound are pinned in tests/test_dedup_similarity.py."""
-    from luzzu_spark.pq import ivfpq_topk
-    e = _emb(spark, sf_dir)
-    q = e.where(F.col("vec_id") < 5)
-    return (ivfpq_topk(e, q, k=5, nprobe=4, n_lists=16, refine=3)
-            .select("query_id", "neighbor_id",
-                    F.round("sim", 6).alias("sim"), "rnk")
-            .orderBy("query_id", "rnk"))
-
-
 # ---- dedup family -------------------------------------------------------
 
 @register("dedup_minhash_pairs",
@@ -641,87 +606,6 @@ def dedup_incremental_pairs(spark: SparkSession,
     return dedup.incremental_minhash_pairs(
         spark, new, "inc_pairs_sigs_tmp", "inc_pairs_bands_tmp",
         threshold=0.5).orderBy("new_id", "old_id")
-
-
-@register("multimodal_frame_hashes", oracle="""
-WITH pages AS (
-  SELECT '<html><body>' || text || '</body></html>' AS html
-  FROM documents),
-f AS (
-  SELECT i.i AS frame_idx,
-         substr(html, i.i * GREATEST(len(html) // 4, 1) + 1, 8) AS c
-  FROM pages CROSS JOIN (SELECT UNNEST([0,1,2,3]) AS i) i)
-SELECT CAST(frame_idx AS INTEGER) AS frame_idx,
-       CAST(COUNT(*) AS BIGINT) AS n_frames,
-       CAST(SUM((ord(substr(c,1,1))
-          + ord(substr(c,2,1)) * 256
-          + ord(substr(c,3,1)) * 65536
-          + ord(substr(c,4,1)) * 16777216
-          + ord(substr(c,5,1)) * 4294967296
-          + ord(substr(c,6,1)) * 1099511627776
-          + ord(substr(c,7,1)) * 281474976710656
-          + ord(substr(c,8,1)) * 72057594037927936) % 1000000007)
-         AS BIGINT) AS hash_fold
-FROM f GROUP BY frame_idx ORDER BY frame_idx
-""")
-def multimodal_frame_hashes(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Video frame-sample plumbing, oracle-checked end-to-end: the
-    deterministic stub 'decoder' hashes the first 8 bytes of each of 4
-    evenly-strided payload chunks (the codec slot a real ffmpeg frame
-    grab drops into), and the fixture payloads are ASCII html, so the
-    little-endian chunk hash is exactly reproducible in SQL. Hashes are
-    folded mod 1e9+7 before summing (the raw sum overflows int64).
-    Exercises the real mapInPandas path: (url, payload) projection,
-    Arrow batch crossing, exploded typed output."""
-    from luzzu_spark import multimodal
-    from luzzu_spark.fixtures import as_webpages
-    pages = as_webpages(_docs(spark, sf_dir))
-    frames = multimodal.video_frame_samples(pages, n_frames=4)
-    return (frames.groupBy("frame_idx")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_frames"),
-                 F.sum(F.col("frame_hash") % 1000000007).cast("long")
-                 .alias("hash_fold"))
-            .orderBy("frame_idx"))
-
-
-@register("multimodal_image_features", oracle=r"""
-WITH pages AS (
-  SELECT doc_id, '<html><body>' || text || '</body></html>' AS html
-  FROM documents),
-b AS (SELECT UNNEST(range(8)) AS pos),
-cnt AS (SELECT doc_id, ord(c) // 32 AS pos, COUNT(*) AS n
-        FROM (SELECT doc_id, UNNEST(regexp_extract_all(html, '[\s\S]'))
-                     AS c
-              FROM pages) GROUP BY 1, 2),
-dense AS (SELECT p.doc_id, b.pos,
-                 CAST(CAST(COALESCE(cnt.n, 0) AS DOUBLE) / len(p.html)
-                      AS REAL) AS v
-          FROM pages p CROSS JOIN b
-          LEFT JOIN cnt ON cnt.doc_id = p.doc_id AND cnt.pos = b.pos)
-SELECT CAST(pos AS INTEGER) AS pos,
-       CAST(ROUND(AVG(CAST(v AS DOUBLE)), 6) AS DOUBLE) AS avg_mass,
-       CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM dense GROUP BY pos ORDER BY pos
-""")
-def multimodal_image_features(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Image featurizer plumbing, oracle-checked end-to-end: the stub
-    features are the payload's byte-histogram mass per 32-value bucket
-    (float32, fixed width 8 — the model slot a real forward pass drops
-    into), reproducible in SQL for ASCII payloads. Checks the Arrow
-    array<float> round-trip and the fixed-width feature contract."""
-    from luzzu_spark import multimodal
-    from luzzu_spark.fixtures import as_webpages
-    pages = as_webpages(_docs(spark, sf_dir))
-    feats = multimodal.image_features(pages)
-    return (feats.where(F.col("ok"))
-            .select(F.posexplode("feature").alias("pos", "v"))
-            .groupBy("pos")
-            .agg(F.round(F.avg(F.col("v").cast("double")), 6)
-                 .alias("avg_mass"),
-                 F.count(F.lit(1)).cast("long").alias("n_docs"))
-            .orderBy("pos"))
 
 
 @register("pipeline_confusion_f1", oracle=_verdict_oracle_sql(select="""

@@ -495,7 +495,9 @@ def _run_delta_oracle_sql() -> str:
     Spark side reads — one source of truth, two engines."""
     from luzzu_spark.rules import spec as _s
     from luzzu_spark.rules.stopwords import STOPWORDS as _SW
-    toks = "list_filter(string_split(trim(text), ' '), x -> x <> '')"
+    # NULL text is a zero-token doc (f_few fires), as on the Spark side
+    toks = ("list_filter(string_split(trim(coalesce(text, '')), ' '), "
+            "x -> x <> '')")
     sw = "[" + ", ".join(f"'{w}'" for w in sorted(_SW)) + "]"
     return f"""
 WITH flags AS (
@@ -551,14 +553,16 @@ def metrics_run_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was an interpreted O(tokens × |SW|) scan per row). Space-only
     # delimiters keep the counts EXACTLY equal to the oracle's
     # single-space split + list_contains semantics: a stopword glued to
-    # a newline/tab is one non-space token on both sides.
-    stop_re = r"(?:^| )(?:" + "|".join(sorted(_SW)) + r")(?= |$)"
+    # a newline/tab is one non-space token on both sides. \z, not $:
+    # Java's $ also matches before a final line terminator, which would
+    # count "the\n" at the end of a doc as a stopword.
+    stop_re = r"(?:^| )(?:" + "|".join(sorted(_SW)) + r")(?= |\z)"
+    # NULL text is a zero-token doc (f_few fires), as in the oracle
+    text = F.trim(F.coalesce("text", F.lit("")))
     d = _docs(spark, sf_dir).select(
         "doc_id", "n_chars",
-        F.regexp_count(F.trim(F.coalesce("text", F.lit(""))),
-                       F.lit("[^ ]+")).alias("n_toks"),
-        F.regexp_count(F.trim(F.coalesce("text", F.lit(""))),
-                       F.lit(stop_re)).alias("stop_hits"))
+        F.regexp_count(text, F.lit("[^ ]+")).alias("n_toks"),
+        F.regexp_count(text, F.lit(stop_re)).alias("stop_hits"))
     n_toks = F.col("n_toks")
     stop_frac = F.try_divide(F.col("stop_hits").cast("double"), n_toks)
     flags = d.select(

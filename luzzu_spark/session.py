@@ -34,12 +34,19 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def default_cpus() -> int:
+    """Local-mode thread count: ``SPARK_GRAFT_CPUS`` if set, else the
+    CPUs this process may run on (its affinity mask, not the host's
+    core count)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "luzzu_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]")
+        master or f"local[{default_cpus()}]")
     for k, v in DEFAULT_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

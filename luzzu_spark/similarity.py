@@ -158,19 +158,16 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     return topk_per_query(scored, k)
 
 
-def topk_per_query(scored: DataFrame, k: int,
-                   sort: bool = True) -> DataFrame:
+def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k of a (query_id, neighbor_id, sim) frame —
     deterministic rank (ties → lowest neighbor id). ONE definition for
-    the four ANN rankers (brute/LSH/multi-probe/IVF; review r05: the
-    block was copy-pasted, so a tie-break fix needed four patches).
-    ``sort=False`` skips the final global sort for callers whose
-    catalog wrapper orders the result itself (the IVF family)."""
+    the three ANN rankers (brute/LSH/multi-probe), so a tie-break fix
+    is one patch."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id"))
-    out = (scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-           .where(F.col("rnk") <= k))
-    return out.orderBy("query_id", "rnk") if sort else out
+    return (scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+            .where(F.col("rnk") <= k)
+            .orderBy("query_id", "rnk"))
 
 
 def hyperplane_bucket(vec_col: str = "embedding",

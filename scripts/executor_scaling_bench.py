@@ -33,12 +33,38 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from scaling_bench import make_pyfiles_zip, write_input  # noqa: E402
+
+def make_pyfiles_zip(dest: str) -> str:
+    """Package luzzu_spark/ for --py-files (the deployment artifact)."""
+    zpath = os.path.join(dest, "luzzu_spark.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        pkg = os.path.join(REPO, "luzzu_spark")
+        for root, _dirs, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, REPO))
+    return zpath
+
+
+def write_input(sf_dir: str, replicate: int, dest: str, n_files: int) -> int:
+    """Materialize the replicated document corpus as an n_files parquet
+    dir (deterministic; same corpus bench.py uses)."""
+    from luzzu_spark.session import get_spark
+    import bench
+    spark = get_spark("scaling_input")
+    spark.sparkContext.setLogLevel("ERROR")
+    docs = bench.replicated_pages(spark, sf_dir, replicate) \
+        .drop("html")  # pages shape minus the heavy binary copy
+    docs.repartition(n_files).write.mode("overwrite").parquet(dest)
+    n = spark.read.parquet(dest).count()
+    spark.stop()
+    return n
 
 
 def submit(cores: str, n_threads: int, zip_path: str, input_dir: str,

@@ -41,12 +41,6 @@ _TEXT_KEY = re.compile(
 # ---------------------------------------------------------------------
 _DRIVER_MAT_ALLOWED = {
     # (file, line-substring): why it is bounded
-    ("luzzu_spark/pq.py", "q.select(\"list_id\").distinct().collect()"):
-        "≤ nprobe×n_queries ids — scan-pruning hint, not data",
-    ("luzzu_spark/ivf.py", "q.select(\"list_id\").distinct().collect()"):
-        "≤ nprobe×n_queries ids — scan-pruning hint, not data",
-    ("luzzu_spark/ivf.py", ".limit(max_train).collect()"):
-        "k-means training sample hard-capped at max_train rows",
     ("luzzu_spark/distill.py", "gram_frame(feats).collect()"):
         "Gram matrix ≤ 256² rows by construction",
     ("luzzu_spark/distill.py", "xty_frame(feats).collect()"):
@@ -145,7 +139,7 @@ def _text_shuffle_keys(plan: str) -> list[str]:
 
 def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
     import __spark_entry__ as entry
-    spark = get_spark("plan_audit", master="local[8]")
+    spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     flagged = []

@@ -107,8 +107,7 @@ def on_disk_bytes(df) -> int:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("luzzu_shuffle_audit", master=f"local[{cpus}]",
+    spark = get_spark("luzzu_shuffle_audit",
                       extra_conf={"spark.ui.enabled": "true",
                                   "spark.ui.port": "4055",
                                   # keep every audited stage's metrics

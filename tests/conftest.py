@@ -11,7 +11,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="luzzu-tests", master="local[8]",
+    # master defaults to local[session.default_cpus()]
+    spark = get_spark(app_name="luzzu-tests",
                       extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     yield spark

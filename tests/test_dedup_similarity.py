@@ -175,18 +175,6 @@ def test_zero_and_null_embeddings_never_near_dup(spark):
     assert top[0].sim == 1.0
 
 
-def test_pq_nbits_over_8_raises(spark):
-    """Codes are byte-packed — a >8-bit codebook would silently wrap
-    codeword ids modulo 256 at encode time (review r05)."""
-    import numpy as np
-
-    from luzzu_spark import pq
-    train = np.arange(64, dtype=np.float64).reshape(8, 8)
-    cents = np.eye(2, 8)
-    with pytest.raises(ValueError, match="nbits"):
-        pq.train_pq_codebooks(train, cents, m=2, nbits=10)
-
-
 def test_cosine_near_dup_pairs_planted(spark):
     """The fixture's vectors are near-orthogonal (max pairwise sim
     ≈ 0.48), so near-dups are PLANTED: 20 vectors get a slightly
@@ -325,103 +313,6 @@ def test_near_dup_survivors_chain_keeps_one(spark):
     assert ids == {1, 50}, ids
 
 
-def test_ivf_full_probe_equals_brute_force(spark):
-    """nprobe == n_lists probes every cell, so IVF must degenerate to
-    the exact brute-force answer — the exactness end of the knob."""
-    from luzzu_spark import ivf
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3)
-    want = [(r["query_id"], r["neighbor_id"], r["rnk"])
-            for r in similarity.brute_force_topk(emb, q, k=5)
-            .select("query_id", "neighbor_id", "rnk")
-            .orderBy("query_id", "rnk").collect()]
-    got = [(r["query_id"], r["neighbor_id"], r["rnk"])
-           for r in ivf.ivf_topk(emb, q, k=5, nprobe=8, n_lists=8)
-           .orderBy("query_id", "rnk").collect()]
-    assert got == want
-
-
-def test_ivf_planted_twin_top1(spark):
-    """A barely-perturbed twin of each query lands in the same Voronoi
-    cell, so even nprobe=1 must return it as the top-1 neighbor."""
-    import pandas as pd
-    from luzzu_spark import ivf
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.toPandas()
-    planted = base.head(5).copy()
-    planted["vec_id"] = planted["vec_id"] + 100000
-    planted["embedding"] = planted["embedding"].map(
-        lambda v: [float(v[0]) * 1.0001 + 1e-5]
-        + [float(x) for x in v[1:]])
-    both = spark.createDataFrame(pd.concat([base, planted]),
-                                 schema=emb.schema)
-    q = both.where(F.col("vec_id") < 5)
-    got = {r["query_id"]: r["neighbor_id"]
-           for r in ivf.ivf_topk(both, q, k=1, nprobe=1, n_lists=8)
-           .collect()}
-    for qid in range(5):
-        assert got[qid] == qid + 100000, (qid, got)
-
-
-def test_ivf_scores_are_true_cosines(spark):
-    """IVF answers carry exact cosine scores (approx in recall only),
-    and the index is deterministic: two builds assign identically."""
-    import numpy as np
-    from luzzu_spark import ivf
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3)
-    bf = {(r["query_id"], r["neighbor_id"]): r["sim"]
-          for r in similarity.brute_force_topk(emb, q, k=500).collect()}
-    for r in ivf.ivf_topk(emb, q, k=5, nprobe=2, n_lists=8).collect():
-        key = (r["query_id"], r["neighbor_id"])
-        assert key in bf and abs(bf[key] - r["sim"]) < 1e-9
-    idx1, c1 = ivf.build_index(emb, n_lists=8)
-    idx2, c2 = ivf.build_index(emb, n_lists=8)
-    assert np.array_equal(c1, c2)
-    a1 = sorted((r["vec_id"], r["list_id"]) for r in idx1.collect())
-    a2 = sorted((r["vec_id"], r["list_id"]) for r in idx2.collect())
-    assert a1 == a2
-    assert np.allclose((c1 * c1).sum(axis=1), 1.0)
-
-
-def test_ivf_training_sample_is_bounded_and_deterministic(spark):
-    """With a corpus larger than max_train, the hash-cutoff sample must
-    stay bounded, be storage-order independent, and give both builds
-    identical centroids."""
-    import numpy as np
-    from luzzu_spark import ivf
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    m1 = ivf.sample_training_matrix(emb, max_train=100)
-    assert m1.shape == (100, 64)
-    # same rows regardless of partitioning/order
-    m2 = ivf.sample_training_matrix(emb.repartition(7), max_train=100)
-    assert np.array_equal(m1, m2)
-    c = ivf.train_centroids(m1, n_lists=8)
-    assert c.shape == (8, 64)
-    assert np.allclose((c * c).sum(axis=1), 1.0)
-
-
-def test_ivf_recall_at_nprobe(spark):
-    """Recall contract at the catalog's operating point (nprobe=4 of
-    16 cells): most true top-5 neighbors are found, and nprobe beyond
-    n_lists clamps instead of raising."""
-    from luzzu_spark import ivf
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 5)
-    truth = {(r["query_id"], r["neighbor_id"])
-             for r in similarity.brute_force_topk(emb, q, k=5).collect()}
-    got = {(r["query_id"], r["neighbor_id"])
-           for r in ivf.ivf_topk(emb, q, k=5, nprobe=4, n_lists=16)
-           .collect()}
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.5, recall
-    # nprobe > n_lists clamps to full probe == exact
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in ivf.ivf_topk(emb, q, k=5, nprobe=99, n_lists=8)
-             .collect()}
-    assert exact == truth
-
-
 def test_near_dup_clusters_random_graph_vs_union_find(spark):
     """Min-label propagation vs a pure-python union-find reference on a
     seeded random graph (200 edges / 80 nodes — many components, odd
@@ -451,92 +342,6 @@ def test_near_dup_clusters_random_graph_vs_union_find(spark):
     got = {r.doc_id: r.cluster
            for r in dedup.near_dup_clusters(pairs).collect()}
     assert got == want
-
-
-def test_ivfpq_full_probe_full_refine_equals_brute_force(spark):
-    """The IVF-PQ exactness knob: nprobe == n_lists probes every cell
-    and k*refine ≥ |corpus| puts every candidate on the exact-rerank
-    shortlist, so the result must equal brute force exactly — ADC then
-    only orders the shortlist, the refine pass scores it exactly."""
-    from luzzu_spark import pq
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3)
-    want = [(r["query_id"], r["neighbor_id"], r["rnk"], round(r["sim"], 9))
-            for r in similarity.brute_force_topk(emb, q, k=5)
-            .select("query_id", "neighbor_id", "rnk", "sim")
-            .orderBy("query_id", "rnk").collect()]
-    got = [(r["query_id"], r["neighbor_id"], r["rnk"], round(r["sim"], 9))
-           for r in pq.ivfpq_topk(emb, q, k=5, nprobe=8, n_lists=8,
-                                  refine=100)
-           .orderBy("query_id", "rnk").collect()]
-    assert got == want
-
-
-def test_ivfpq_codes_compressed_and_deterministic(spark):
-    """The index frame is (vec_id, list_id, code) ONLY — the float
-    vector column is dropped before anything shuffles — with exactly m
-    bytes per vector, and encoding is deterministic across builds and
-    partitionings."""
-    from luzzu_spark import pq
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents, books = pq.train_ivfpq(emb, n_lists=8, m=8)
-    assert books.shape[0] == 8 and books.shape[2] == 64 // 8
-    idx = pq.build_pq_index(emb, cents, books)
-    assert idx.columns == ["vec_id", "list_id", "code"]
-    rows1 = sorted((r["vec_id"], r["list_id"], bytes(r["code"]))
-                   for r in idx.collect())
-    assert all(len(c) == 8 for _, _, c in rows1)  # 32x vs 64 floats
-    rows2 = sorted(
-        (r["vec_id"], r["list_id"], bytes(r["code"])) for r in
-        pq.build_pq_index(emb.repartition(7), cents, books).collect())
-    assert rows1 == rows2
-
-
-def test_ivfpq_planted_twin_top1(spark):
-    """A barely-perturbed twin encodes to the same (or adjacent)
-    codewords and shares the query's Voronoi cell: nprobe=1 with the
-    default refine must return it top-1 with true cosine ≈ 1."""
-    import pandas as pd
-    from luzzu_spark import pq
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.toPandas()
-    planted = base.head(5).copy()
-    planted["vec_id"] = planted["vec_id"] + 100000
-    planted["embedding"] = planted["embedding"].map(
-        lambda v: [float(v[0]) * 1.0001 + 1e-5]
-        + [float(x) for x in v[1:]])
-    both = spark.createDataFrame(pd.concat([base, planted]),
-                                 schema=emb.schema)
-    q = both.where(F.col("vec_id") < 5)
-    got = {r["query_id"]: (r["neighbor_id"], r["sim"])
-           for r in pq.ivfpq_topk(both, q, k=1, nprobe=1, n_lists=8)
-           .collect()}
-    for qid in range(5):
-        nid, sim = got[qid]
-        assert nid == qid + 100000, (qid, got)
-        assert sim > 0.999, (qid, sim)
-
-
-def test_ivfpq_adc_approximation_quality(spark):
-    """ADC-only scores (refine=0) approximate true cosine: bounded
-    error on the fixture (measured max ≈ 0.10 with 256-codeword books)
-    and full-probe ADC recall@5 well above chance on RANDOM vectors —
-    the hard no-structure case (5/499 ≈ 0.01 at chance)."""
-    from luzzu_spark import pq
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 5)
-    truth = {(r["query_id"], r["neighbor_id"])
-             for r in similarity.brute_force_topk(emb, q, k=5).collect()}
-    allcos = {(r["query_id"], r["neighbor_id"]): r["sim"]
-              for r in similarity.brute_force_topk(emb, q,
-                                                   k=500).collect()}
-    out = pq.ivfpq_topk(emb, q, k=5, nprobe=8, n_lists=8,
-                        refine=0).collect()
-    got = {(r["query_id"], r["neighbor_id"]) for r in out}
-    assert len(got & truth) / len(truth) >= 0.4
-    errs = [abs(allcos[(r["query_id"], r["neighbor_id"])] - r["sim"])
-            for r in out]
-    assert max(errs) < 0.2, max(errs)
 
 
 def test_incremental_minhash_two_run_flow(spark, tmp_path):
@@ -816,53 +621,6 @@ def test_remove_dup_spans_char_offsets_preserve_structure(spark):
                       "with a tab."), repr(out[1])
     assert out[2] == "Other unique prefix here.  And a unique suffix tail."
     assert out[4] == "Uniq\xa0word here also fine.  End bit."
-
-
-def test_pq_residual_codebooks_beat_raw_on_clustered_data():
-    """The reason for residual (IVFPQ-style) coding, measured: on a
-    CLUSTERED corpus — the regime real embedding tables live in, and
-    the premise of IVF itself — quantizing x − centroid[cell(x)]
-    reconstructs with materially lower distortion than quantizing the
-    raw unit vector under the same codeword budget (the coarse
-    centroid absorbs the cluster's shared direction, so the codebooks
-    spend their bits on the small residual ball).
-
-    Measured here: ratio ≈ 0.58 at 32 tight clusters; asserted ≤ 0.75
-    with slack. Honesty note: on structure-free uniform-random vectors
-    (the sf fixture) residual coding is neutral-to-slightly-WORSE
-    (measured ≈ 1.3×) because 8 coarse cells capture almost nothing —
-    the ADC error bound on the fixture is pinned separately in
-    test_ivfpq_adc_approximation_quality and holds either way.
-    Pure numpy — exercises the driver-side training path only."""
-    from luzzu_spark.ivf import _unit_rows, train_centroids
-    from luzzu_spark.pq import PQ_M, _assign_rows, train_pq_codebooks
-
-    dim, m = 64, PQ_M
-    dsub = dim // m
-    rng = np.random.default_rng(12345)
-    centers = _unit_rows(rng.standard_normal((32, dim)))
-    n = 4000
-    X = _unit_rows(centers[np.arange(n) % 32]
-                   + 0.05 * rng.standard_normal((n, dim)))
-
-    def mean_sq_distortion(C: np.ndarray) -> float:
-        books = train_pq_codebooks(X, C, m=m)
-        a = _assign_rows(X, C)
-        R = (X - C[a]).reshape(n, m, dsub)
-        rec = np.empty_like(R)
-        for j in range(m):
-            d = (-2.0 * (R[:, j, :] @ books[j].T)
-                 + (books[j] * books[j]).sum(axis=1)[None, :])
-            rec[:, j, :] = books[j][d.argmin(axis=1)]
-        Xhat = C[a] + rec.reshape(n, dim)
-        return float(np.mean(np.sum((X - Xhat) ** 2, axis=1)))
-
-    d_residual = mean_sq_distortion(train_centroids(X, 32))
-    # one all-zero "centroid" routes every vector to cell 0 with zero
-    # correction — exactly the raw (non-residual) PQ scheme, through
-    # the same code path
-    d_raw = mean_sq_distortion(np.zeros((1, dim)))
-    assert d_residual <= 0.75 * d_raw, (d_residual, d_raw)
 
 
 def test_cluster_survivors_by_quality(spark):

@@ -78,27 +78,37 @@ _TEXTS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def edge_sf_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("edge_sf"))
+def _write_docs(spark, d: str, texts: list, langs: list[str]) -> str:
     pdf = pd.DataFrame({
-        "doc_id": range(len(_TEXTS)),
-        "text": _TEXTS,
-        "lang": ["en", "en", "de", "de", "en", "fr", "en", "en"],
-        "source": ["s0", "s1"] * (len(_TEXTS) // 2),
-        "n_chars": [len(t) for t in _TEXTS],
+        "doc_id": range(len(texts)),
+        "text": texts,
+        "lang": langs,
+        "source": ["s0", "s1"] * (len(texts) // 2),
+        "n_chars": [len(t or "") for t in texts],
     })
     spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(d, "documents.parquet"))
     return d
 
 
-@pytest.fixture(scope="module")
-def edge_ddb(edge_sf_dir):
+def _duckdb_over(sf_dir: str):
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{edge_sf_dir}/documents.parquet/*.parquet')")
+        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')")
+    return con
+
+
+@pytest.fixture(scope="module")
+def edge_sf_dir(spark, tmp_path_factory):
+    return _write_docs(spark, str(tmp_path_factory.mktemp("edge_sf")),
+                       _TEXTS,
+                       ["en", "en", "de", "de", "en", "fr", "en", "en"])
+
+
+@pytest.fixture(scope="module")
+def edge_ddb(edge_sf_dir):
+    con = _duckdb_over(edge_sf_dir)
     yield con
     con.close()
 
@@ -114,11 +124,9 @@ def _values_equal(a, b) -> bool:
     return a == b
 
 
-@pytest.mark.parametrize("name", SCORE_QUERIES)
-def test_score_query_parity_on_degenerate_docs(spark, edge_sf_dir,
-                                               edge_ddb, name):
-    sdf = entrymod.queries()[name](spark, edge_sf_dir)
-    res = edge_ddb.execute(entrymod.oracle_sql()[name])
+def _assert_parity(spark, sf_dir: str, con, name: str) -> None:
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    res = con.execute(entrymod.oracle_sql()[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
     spark_rows = [tuple(r) for r in sdf.collect()]
@@ -137,3 +145,25 @@ def test_score_query_parity_on_degenerate_docs(spark, edge_sf_dir,
                       canon(duck_rows, duck_cols)):
         for sv, dv in zip(sr, dr):
             assert _values_equal(sv, dv), (name, sr, dr)
+
+
+@pytest.mark.parametrize("name", SCORE_QUERIES)
+def test_score_query_parity_on_degenerate_docs(spark, edge_sf_dir,
+                                               edge_ddb, name):
+    _assert_parity(spark, edge_sf_dir, edge_ddb, name)
+
+
+def test_run_delta_parity_on_final_newline_and_null_text(spark,
+                                                         tmp_path):
+    """metrics_run_delta on the two rows outside _TEXTS' contract: a
+    stopword right before a final newline ("the\n" is one non-space
+    token, not a stopword, on both engines — Java's $ would match
+    before the newline) and NULL text (zero tokens, so word_count
+    fires on both engines)."""
+    d = _write_docs(spark, str(tmp_path), ["foo the\n", None],
+                    ["en", "en"])
+    con = _duckdb_over(d)
+    try:
+        _assert_parity(spark, d, con, "metrics_run_delta")
+    finally:
+        con.close()

@@ -134,61 +134,6 @@ def test_scrub_filter_not_recomputed_in_scan(spark):
                 "shingle pipeline duplicated into a Filter:\n" + line)
 
 
-def test_ivf_probe_join_is_broadcast_no_row_python(spark):
-    """IVF search: exploded query probes must BROADCAST onto the
-    indexed corpus (the corpus never shuffles for a search), and all
-    Python stages must be Arrow-vectorized."""
-    from luzzu_spark import ivf
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    plan = _plan(ivf.ivf_topk(emb, q, k=5, nprobe=2, n_lists=8))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_ivf_persisted_index_prunes_at_scan_time(spark, tmp_path):
-    """VERDICT r02 item 6: a search against the PERSISTED IVF index
-    (partitioned by list_id) must open only the probed cell
-    directories — PartitionFilters in the plan, probed dirs only in
-    inputFiles() — and return exactly what the in-memory path returns
-    with the same centroids/nprobe."""
-    import re
-
-    from luzzu_spark import ivf
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    indexed, centroids = ivf.build_index(emb, n_lists=8)
-    path = str(tmp_path / "ivf_index")
-    ivf.persist_index(indexed, path)
-
-    out = ivf.ivf_topk_over_index(spark, path, q, centroids,
-                                  k=5, nprobe=2)
-    plan = _plan(out)
-    m = re.search(r"PartitionFilters: \[[^\]]*list_id", plan)
-    assert m, plan
-
-    probed = {r["list_id"] for r in
-              ivf._probed_queries(q, centroids, 2, "vec_id", "embedding")
-              .select("list_id").distinct().collect()}
-    # inputFiles() lists PRE-pruning candidates; the executed scan's
-    # input_file_name() shows which cell directories were actually read
-    pruned_scan = (spark.read.parquet(path)
-                   .where(F.col("list_id").isin(sorted(probed))))
-    opened = {int(re.search(r"list_id=(\d+)", r["f"]).group(1))
-              for r in pruned_scan.select(
-                  F.input_file_name().alias("f")).distinct().collect()}
-    assert opened == probed, (opened, probed)
-    assert len(opened) < 8, "pruning read every cell"
-
-    want = sorted((r["query_id"], r["rnk"], r["neighbor_id"])
-                  for r in ivf.ivf_topk(emb, q, k=5, nprobe=2, n_lists=8,
-                                        centroids=centroids).collect())
-    got = sorted((r["query_id"], r["rnk"], r["neighbor_id"])
-                 for r in out.collect())
-    assert got == want
-
-
 def test_ngram_jaccard_no_cartesian(spark):
     """Exact-Jaccard pairs must block via the inverted shingle index —
     an equi-join on the shingle key, never an all-pairs product."""
@@ -256,37 +201,6 @@ def test_q17_subquery_is_decorrelated(spark):
     assert "scalar-subquery" not in opt.lower(), opt
     assert plan.count("Aggregate") >= 1 and "Join" in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_ivfpq_persisted_index_prunes_at_scan_time(spark, tmp_path):
-    """The compressed PQ index shares the production layout: persisted
-    partitioned by list_id, a search pushes its probe list into the
-    scan as a partition filter (PartitionFilters) and returns exactly
-    what the in-memory ivfpq path returns with the same models."""
-    import re
-
-    from luzzu_spark import ivf, pq
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    models = pq.train_ivfpq(emb, n_lists=8)
-    indexed = pq.build_pq_index(emb, *models)
-    path = str(tmp_path / "pq_index")
-    ivf.persist_index(indexed, path)
-
-    out = pq.ivfpq_topk_over_index(spark, path, q, models, emb,
-                                   k=5, nprobe=2)
-    plan = _plan(out)
-    assert re.search(r"PartitionFilters: \[[^\]]*list_id", plan), plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-    want = sorted((r["query_id"], r["rnk"], r["neighbor_id"])
-                  for r in pq.ivfpq_topk(emb, q, k=5, nprobe=2,
-                                         n_lists=8,
-                                         models=models).collect())
-    got = sorted((r["query_id"], r["rnk"], r["neighbor_id"])
-                 for r in out.collect())
-    assert got == want
 
 
 def test_incremental_minhash_committed_side_bucket_aligned(spark,
