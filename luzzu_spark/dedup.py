@@ -423,16 +423,20 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     """Band the signatures and self-join buckets → candidate pairs
     (id_a < id_b) with estimated Jaccard from full signatures.
 
+    The plan reads ``sigs`` four times (both self-join sides, both
+    verify joins). Spark shares those reads through a ReusedExchange
+    on some inputs but not on others, so callers hand in MATERIALIZED
+    signatures (minhash_dedup_pairs checkpoints them) and the MinHash
+    UDF runs once whatever the input.
+
     Scale shape (the 10^12-doc plan):
     - the band self-join ships (id, band, band_hash) ONLY — never the
       512-byte signatures (round-1 finding #3);
-    - `repartition` below the self-join makes both sides one shared
-      exchange (ReusedExchange) — banding+signatures compute once;
     - colliding-band pairs collapse via groupBy (no separate
       dropDuplicates shuffle) and only the surviving pairs join the
-      signature frame (twice, both joins reusing the sig exchange) to
-      count matching components for est_jaccard."""
-    sigs = sigs.repartition(F.col(id_col))  # one exchange, reused 3×
+      signature frame (twice) to count matching components for
+      est_jaccard."""
+    sigs = sigs.repartition(F.col(id_col))
     exploded = band_rows(sigs, id_col, bands).repartition(
         F.col("band"), F.col("bh"))
     left = exploded.select(F.col(id_col).alias("id_a"), "band", "bh")
@@ -466,8 +470,11 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     a terminal global orderBy here would range-partition every candidate
     pair at production scale for nothing. Pick `bands` so the banding
     collision curve covers the threshold (e.g. 16 bands of 2 rows for
-    thresholds near 0.35; the default 8×4 suits ≥0.5)."""
-    sigs = minhash_signatures(docs, id_col)
+    thresholds near 0.35; the default 8×4 suits ≥0.5).
+
+    The signatures are checkpointed eagerly (one Arrow pass), because
+    lsh_candidate_pairs reads them four times."""
+    sigs = minhash_signatures(docs, id_col).localCheckpoint(eager=True)
     return (lsh_candidate_pairs(sigs, id_col, bands=bands)
             .where(F.col("est_jaccard") >= threshold))
 
@@ -1160,14 +1167,11 @@ def commit_minhash_index(docs: DataFrame, sigs_table: str,
     Callers without a stable epoch (the batch CLI's day-N appends)
     leave ``epoch_id=None`` → plain append into the ``epoch=-1``
     partition, the pre-r04 at-least-once semantics."""
-    sigs = minhash_signatures(docs, id_col)
-    if mode == "append" and epoch_id is not None:
-        # the docs lineage reads these same tables (the incremental
-        # filter), and Spark refuses to overwrite a table it is
-        # reading from — checkpoint the (batch-sized) signature frame
-        # to cut the lineage; this also runs the Arrow signature pass
-        # exactly once for the two table writes below
-        sigs = sigs.localCheckpoint(eager=True)
+    # checkpoint the (batch-sized) signature frame: the two table
+    # writes below then share one Arrow signature pass, and an epoch
+    # append — whose docs lineage reads these same tables through the
+    # incremental filter — cuts the lineage Spark refuses to overwrite
+    sigs = minhash_signatures(docs, id_col).localCheckpoint(eager=True)
     epoch = F.lit(-1 if epoch_id is None else int(epoch_id)) \
         .cast("long").alias("epoch")
     band_df = band_rows(sigs, id_col, bands).select(
@@ -1492,12 +1496,13 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
     lineage so round N doesn't replan rounds 1..N-1 (the standard
     Spark iterative-algorithm discipline). No collect — the only
     driver value is the Σlabel convergence probe."""
-    edges = pairs.select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst"))
-    edges = (edges.unionByName(
-        edges.select(F.col("dst").alias("src"),
-                     F.col("src").alias("dst")))
-        .distinct().localCheckpoint())
+    # both edge directions from ONE read of pairs (a union of two
+    # reads would evaluate the pair plan twice)
+    both = F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+    edges = (pairs.select(F.explode(both).alias("e"))
+             .select("e.src", "e.dst").distinct().localCheckpoint())
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     prev_sum = None

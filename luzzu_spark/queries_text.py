@@ -384,7 +384,7 @@ def dedup_ngram_jaccard_exact(spark: SparkSession,
     # shingle-set size n, so the per-doc size frame (and its two extra
     # joins + re-evaluations of the UDF) disappears entirely. The
     # repartition on s below the self-join makes both sides one shared
-    # exchange (ReusedExchange) — lsh_candidate_pairs' discipline. A
+    # exchange (ReusedExchange) over this plain parquet scan. A
     # separate groupBy(doc_id) sizes branch would NOT share it: its
     # own doc_id exchange collapses the adjacent repartition and the
     # subtrees diverge.

@@ -233,9 +233,11 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     # persist discipline (review r05): every funnel count below is an
     # action, and without pinning each one re-runs the full upstream
     # DAG — the Arrow-UDF assessment (the single most expensive stage)
-    # would execute once PER COUNT. Pin the assessment output and the
-    # post-near-dup frame (the expensive join stage); unpersist
-    # everything before returning.
+    # would execute once PER COUNT. Pin the assessment output, the
+    # post-near-dup frame (the expensive join stage) and the
+    # decontaminated frame (its digest explode + anti-join would
+    # otherwise rerun for the sampling count, the pack window and the
+    # final pin); unpersist everything before returning.
     pinned: list = []
 
     def pin(df):
@@ -282,7 +284,7 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     if args.bench_input:
         bench = spark.read.parquet(args.bench_input)
-        kept = dedup.benchmark_decontaminate(kept, bench)
+        kept = pin(dedup.benchmark_decontaminate(kept, bench))
         funnel["after_decontamination"] = kept.count()
 
     if args.sample_rate < 1.0:

@@ -10,15 +10,16 @@ metrics API — which no multi-executor cluster experiences.
 
 This harness simulates executors faithfully:
 
-  N=1:  one spark-submit local[8] JVM pinned to CPUs 0-7
-  4N:   four spark-submit local[8] JVMs, pinned to disjoint CPU ranges
-        (0-7, 8-15, 16-23, 24-31), running CONCURRENTLY, each over the
+  N=1:  one spark-submit local[c] JVM pinned to the first c allowed
+        CPUs, where c = (CPUs in the process's affinity mask) // 4
+  4N:   four spark-submit local[c] JVMs, pinned to the four disjoint
+        c-CPU slices of the mask, running CONCURRENTLY, each over the
         full input
 
 Each JVM reports its own steady-state throughput (bench mode: warm-up
 run discarded, min of the remaining repeats). Aggregate 4N throughput =
 sum over the four concurrent JVMs; efficiency = agg / (4 × single).
-CPU pinning makes each "executor" an honest 8-core machine slice —
+CPU pinning makes each "executor" an honest c-core machine slice —
 Python UDF workers inherit the affinity mask.
 
 Prints one JSON line. Run exclusively (nothing else on the box).
@@ -67,11 +68,20 @@ def write_input(sf_dir: str, replicate: int, dest: str, n_files: int) -> int:
     return n
 
 
-def submit(cores: str, n_threads: int, zip_path: str, input_dir: str,
+def executor_slices() -> list[list[int]]:
+    """Four disjoint, equal CPU slices of the process's affinity mask."""
+    cpus = sorted(os.sched_getaffinity(0))
+    per = len(cpus) // 4
+    if per < 1:
+        raise SystemExit(f"need at least 4 allowed CPUs, have {len(cpus)}")
+    return [cpus[i * per:(i + 1) * per] for i in range(4)]
+
+
+def submit(cores: list[int], zip_path: str, input_dir: str,
            out: str, repeat: int) -> subprocess.Popen:
     cmd = [
-        "taskset", "-c", cores,
-        "spark-submit", "--master", f"local[{n_threads}]",
+        "taskset", "-c", ",".join(map(str, cores)),
+        "spark-submit", "--master", f"local[{len(cores)}]",
         "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", "run_filter.py"),
@@ -125,7 +135,6 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--replicate", type=int, default=100)
     ap.add_argument("--n-files", type=int, default=64)
-    ap.add_argument("--executor-cores", type=int, default=8)
     ap.add_argument("--repeat", type=int, default=4)
     ap.add_argument("--alternate", type=int, default=2,
                     help="interleaved solo/quad leg PAIRS (CLAUDE.md "
@@ -135,7 +144,7 @@ def main() -> None:
                          "leg put all host drift into the efficiency "
                          "denominator, ±30%% on an idle box)")
     args = ap.parse_args()
-    ec = args.executor_cores
+    slices = executor_slices()
 
     work = tempfile.mkdtemp(prefix="luzzu_execscale_")
     try:
@@ -149,22 +158,19 @@ def main() -> None:
         quad_each: list[list[float]] = []
         for rnd in range(max(1, args.alternate)):
             # N = 1 executor
-            p = submit(f"0-{ec - 1}", ec, zip_path, input_dir,
+            p = submit(slices[0], zip_path, input_dir,
                        os.path.join(work, f"single{rnd}"), args.repeat)
             single = _drain([p])[0]
             solo_tps.append(single["docs_per_sec"])
-            print(f"# round {rnd} 1 executor ({ec} cores): "
+            print(f"# round {rnd} 1 executor ({len(slices[0])} cores): "
                   f"{single['docs_per_sec']} docs/sec "
                   f"(trials {single['trials']})", file=sys.stderr)
 
             # 4N = 4 concurrent executors on disjoint CPU ranges
-            procs = []
-            for i in range(4):
-                cores = f"{i * ec}-{(i + 1) * ec - 1}"
-                procs.append(submit(cores, ec, zip_path, input_dir,
-                                    os.path.join(work,
-                                                 f"quad{rnd}_{i}"),
-                                    args.repeat))
+            procs = [submit(cores, zip_path, input_dir,
+                            os.path.join(work, f"quad{rnd}_{i}"),
+                            args.repeat)
+                     for i, cores in enumerate(slices)]
             quad = _drain(procs)
             tps = [r["docs_per_sec"] for r in quad]
             quad_each.append(tps)
@@ -183,7 +189,7 @@ def main() -> None:
         eff = agg / (4 * tp1)
         print(json.dumps({
             "n_docs": n_docs,
-            "executor_cores": ec,
+            "executor_cores": len(slices[0]),
             "alternate_rounds": max(1, args.alternate),
             "throughput_1_executor": tp1,
             "throughput_1_executor_rounds": solo_tps,

@@ -247,6 +247,24 @@ def test_incremental_minhash_committed_side_bucket_aligned(spark,
         spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
 
 
+def test_minhash_pairs_read_signatures_from_checkpoint(spark):
+    """The corpus funnel's near-dup input is exact_dedup over a
+    persisted frame, where the optimizer shares no exchange between
+    the signature frame's four reads (banding, both verify joins) —
+    each read re-ran the MinHash UDF. The signatures are materialized
+    once, so the pairs' executed plan carries no Arrow UDF at all."""
+    from luzzu_spark import dedup
+    kept = load_table(spark, SF, "documents").persist()
+    try:
+        pairs = dedup.minhash_dedup_pairs(dedup.exact_dedup(kept), 0.5)
+        pairs.collect()  # AQE finalizes the plan at execution
+        plan = _plan(pairs)
+        assert "ArrowEvalPython" not in plan, (
+            "signatures recomputed inside the pair plan:\n" + plan)
+    finally:
+        kept.unpersist()
+
+
 def test_aqe_splits_planted_skew_join(spark):
     """The 10^12-doc design claims AQE absorbs residual host skew that
     salting doesn't pre-treat (BASELINE.md design-scale table). Proven
