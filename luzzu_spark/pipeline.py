@@ -24,9 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from luzzu_spark.rules import spec
-from luzzu_spark.rules.heuristics import (TOKEN_HELPER_COLS,
-                                          with_token_columns)
+from luzzu_spark.rules.heuristics import with_token_columns
 from luzzu_spark.rules.registry import RuleRegistry, default_registry
 from luzzu_spark.rules.scrub import with_scrub
 
@@ -230,11 +228,3 @@ class QualityPipeline:
                    .parquet(f"{path}/{name}"))
         finally:
             slim.unpersist()
-
-
-def keep_expr_name() -> str:
-    return "keep"
-
-
-def rule_names() -> list[str]:
-    return list(spec.RULE_ORDER)

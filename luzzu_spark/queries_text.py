@@ -4,7 +4,8 @@ These exercise the quality-filter scalar surface (SURVEY.md §2.3) with
 DuckDB oracles. Token model shared with the oracle: whitespace split of
 trimmed text, empties removed — expressed in DuckDB as
 ``list_filter(string_split(text,' '), x -> x <> '')`` (fixture text is
-single-space separated; the Spark side splits on \\s+ which agrees).
+single-space separated; the Spark side splits on the str.isspace()
+class, rules/heuristics.WS_CLASS, which agrees).
 """
 
 from __future__ import annotations

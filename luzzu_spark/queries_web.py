@@ -1751,10 +1751,9 @@ def metrics_daq_hierarchy(spark: SparkSession,
     d = with_token_columns(
         spread(load_table(spark, sf_dir, "documents")))
     rules = {r.name: r for r in heuristic_rules()}
-    flags = d.select(*[
-        F.coalesce(rules[name].fires(rules[name].score())
-                   .cast("long"), F.lit(0)).alias(name)
-        for _, _, name in _DAQ_MAP])
+    flags = d.selectExpr(*[
+        f"coalesce(CAST({rules[name].inline_fire_sql} AS BIGINT), 0) "
+        f"AS {name}" for _, _, name in _DAQ_MAP])
     agg = flags.agg(
         F.count(F.lit(1)).alias("n_docs"),
         *[F.sum(name).alias(f"f_{name}") for _, _, name in _DAQ_MAP])
@@ -1976,9 +1975,9 @@ def docs_lang_profile_rates(spark: SparkSession,
     """Per-LANGUAGE stopword-profile firing rates — the multilingual
     rule surface (registry.multilingual_registry) exercised as an
     oracle-checked query: each document's language is predicted with
-    the replayable langid argmax, the PRODUCT rule expressions
-    (rules/heuristics.per_lang_stopword_rule — the exact score/fires
-    Columns the pipeline compiles) select that language's stopword
+    the replayable langid argmax, the PRODUCT rule SQL
+    (rules/heuristics.per_lang_stopword_rule — the exact score/fire
+    text the pipeline compiles) selects that language's stopword
     list + threshold, and the query reports per-profile doc counts,
     fire counts and integer hit/token sums.
 
@@ -1986,7 +1985,9 @@ def docs_lang_profile_rates(spark: SparkSession,
     hash-agg on a ≤|profiles| key — no joins, no Python, no text in
     the shuffle (the grouping key is a 2-char lang code)."""
     from luzzu_spark.rules.heuristics import (per_lang_stopword_rule,
-                                              stopword_token_re,
+                                              profile_case_sql,
+                                              profile_key_sql,
+                                              stopword_hits_sql,
                                               with_token_columns)
     from luzzu_spark.rules.stopwords import LANG_PROFILES, RULE_PROFILES
     d = with_token_columns(spread(load_table(spark, sf_dir,
@@ -2007,22 +2008,14 @@ def docs_lang_profile_rates(spark: SparkSession,
         pred = pred.when(F.col(f"s_{lg}") == best, F.lit(lg))
     d = d.withColumn("lang_pred", pred)
 
-    # the PRODUCT rule expressions, compiled over the attached columns
-    rule = per_lang_stopword_rule(tuple(sorted(RULE_PROFILES)))
-    non_en = [lg for lg in sorted(RULE_PROFILES) if lg != "en"]
-    key = F.when(F.col("lang_pred").isin(non_en),
-                 F.col("lang_pred")).otherwise(F.lit("en"))
-    hits = F.regexp_count(
-        F.coalesce(F.col("text"), F.lit("")),
-        F.lit(stopword_token_re(RULE_PROFILES["en"]["stopwords"])))
-    for lg in non_en:
-        hits = F.when(key == lg, F.regexp_count(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(stopword_token_re(RULE_PROFILES[lg]["stopwords"])))
-        ).otherwise(hits)
-    d = (d.withColumn("lang_key", key)
-         .withColumn("hits", hits.cast("long"))
-         .withColumn("fired", rule.fires(rule.score())))
+    # the PRODUCT rule SQL, compiled over the attached columns
+    profiles = tuple(sorted(RULE_PROFILES))
+    rule = per_lang_stopword_rule(profiles)
+    hits = profile_case_sql(profiles, lambda lg: stopword_hits_sql(
+        RULE_PROFILES[lg]["stopwords"]))
+    d = d.selectExpr("*", f"{profile_key_sql(profiles)} AS lang_key",
+                     f"CAST({hits} AS BIGINT) AS hits",
+                     f"{rule.inline_fire_sql} AS fired")
     return (d.groupBy("lang_key")
             # coalesce: zero-token docs score NULL (try_divide) so
             # fired is NULL; a group of ONLY such docs must sum to 0,

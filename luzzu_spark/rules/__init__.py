@@ -3,9 +3,9 @@
 Reference mapping (/root/reference/README.md:13 — "declarative quality
 metric specification language" + imperative plugin metrics):
 
-- declarative metric  → :mod:`luzzu_spark.rules.registry` Rule dataclass
-  whose ``expr`` builder returns a pure Catalyst ``Column`` (no Python at
-  run time);
+- declarative metric  → :mod:`luzzu_spark.rules.registry` Rule declared
+  as Spark SQL text (``sql_rule``: score expression + fire predicate),
+  compiled to Catalyst (no Python at run time);
 - imperative plugin   → vectorized pandas/Arrow UDF rules
   (:mod:`luzzu_spark.rules.langid`, :mod:`luzzu_spark.rules.perplexity`);
 - metric thresholds   → :mod:`luzzu_spark.rules.spec` frozen constants —

@@ -1,11 +1,21 @@
-"""C4/Gopher-style heuristic rules as pure Catalyst expressions.
+"""C4/Gopher-style heuristic rules, declared as Spark SQL text.
 
-Each rule is one vectorized expression over derived token columns —
-Luzzu's per-quad metric fold (/root/reference/README.md:7) recast so
-Catalyst whole-stage-codegens the whole batch: no Python in this path.
+Each rule is a :func:`~luzzu_spark.rules.registry.sql_rule`: one score
+expression plus a fire predicate over ``{score}``, with the thresholds
+read from rules/spec.py when the text is built. Luzzu's per-quad metric
+fold (reference README.md:7) recast so Catalyst
+whole-stage-codegens the whole batch: no Python in this path. The
+registry compiles these strings into one ``selectExpr`` per layer, and
+luzzu_spark/sqludf.py derives its SQL functions from the same strings.
 
-Derived columns (attached once by :func:`with_token_columns`):
+Derived columns (attached once by :func:`with_token_columns`, defined
+by :func:`token_cols_sql`):
   tokens:array<string>, n_tokens:int, n_chars:int
+
+Tokens are the maximal runs of characters outside :data:`WS_CLASS`,
+which holds exactly the characters Python's ``str.isspace()`` accepts —
+the split the plugin bundle and the pandas oracle make with
+``str.split()``.
 
 ANSI-safe: every ratio uses try_divide (Spark 4 ANSI mode would raise on
 /0 for empty docs).
@@ -13,101 +23,115 @@ ANSI-safe: every ratio uses try_divide (Spark 4 ANSI mode would raise on
 
 from __future__ import annotations
 
+import unicodedata
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from luzzu_spark.rules import spec
-from luzzu_spark.rules.registry import Rule
-from luzzu_spark.rules.stopwords import STOPWORDS
+from luzzu_spark.rules.registry import (Rule, sql_lit, sql_rule,
+                                        with_sql_columns)
+from luzzu_spark.rules.stopwords import (RULE_PROFILES, STOPWORDS,
+                                         rule_profile_langs)
 
-TOKEN_SPLIT_RE = r"\s+"
+
+def _isspace_class() -> str:
+    """Java-regex character class of exactly the characters for which
+    ``str.isspace()`` holds (all of them lie in the BMP). Java's
+    ``\\p{IsWhite_Space}`` holds for categories Zs/Zl/Zp, \\t-\\r and
+    NEL, all of which str.isspace() accepts; the characters it adds are
+    listed after the property. Every regex pass over the text tests
+    this class once per character: one property lookup costs about
+    half as much as testing the 13 ranges of the set one by one."""
+    space = {c for c in range(0x10000) if chr(c).isspace()}
+    white = {c for c in range(0x10000)
+             if unicodedata.category(chr(c)) in ("Zs", "Zl", "Zp")}
+    white |= set(range(0x9, 0xE)) | {0x85}
+    if not white <= space:
+        raise RuntimeError("str.isspace() lacks Unicode White_Space "
+                           f"characters {sorted(white - space)}")
+    return ("[\\p{IsWhite_Space}"
+            + "".join(f"\\x{{{c:x}}}" for c in sorted(space - white))
+            + "]")
 
 
-def tokens_expr(text: Column | str = "text") -> Column:
+WS_CLASS = _isspace_class()
+
+
+def tokens_sql(text: str = "text") -> str:
     # null-guard: a null doc behaves as the empty doc (SURVEY.md §2.2 —
     # Luzzu reports malformed inputs instead of crashing); without this,
     # null scores never fire any rule and a null doc would be KEPT.
-    c = F.col(text) if isinstance(text, str) else text
-    # array_remove drops the [""] that split() yields on an empty doc —
-    # keeps Spark's token list identical to Python's str.split() ([]).
-    return F.array_remove(
-        F.split(F.trim(F.coalesce(c, F.lit(""))), TOKEN_SPLIT_RE), "")
+    # array_remove drops the "" that split() yields on an empty doc or
+    # before leading whitespace trim() keeps — the token list equals
+    # Python's str.split().
+    return (f"array_remove(split(trim(coalesce({text}, '')), "
+            f"{sql_lit(WS_CLASS + '+')}), '')")
+
+
+def tokens_expr(text: str = "text") -> Column:
+    return F.expr(tokens_sql(text))
+
+
+def token_cols_sql(text: str = "text") -> dict[str, str]:
+    """The helper columns the rule SQL reads, in attach order
+    (n_tokens reads tokens)."""
+    return {"tokens": tokens_sql(text),
+            "n_chars": f"length(coalesce({text}, ''))",
+            "n_tokens": "size(tokens)"}
 
 
 def with_token_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach tokens/n_tokens/n_chars/token_hashes once; rules read these.
-
-    token_hashes is materialized as its own column so every shingle
-    expression slices bound long arrays instead of re-hashing strings —
-    higher-order functions are CodegenFallback (interpreted), so keeping
-    the per-element work to long copies instead of string concat is a
-    ~4× win on the repetition rule (measured at sf0.1 ×20)."""
-    return (df.withColumns({
-        "tokens": tokens_expr(text_col),
-        "n_chars": F.length(F.coalesce(F.col(text_col), F.lit(""))),
-    }).withColumn("n_tokens", F.size("tokens")))
-
-
-def with_token_hashes(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach token_hashes: array<long> (xxhash64 per token) — the base
-    column for dedup shingling. Materialized as its own column so shingle
-    expressions slice bound long arrays instead of re-hashing strings
-    (higher-order functions are CodegenFallback/interpreted; long copies
-    beat string concat ~4× on the shingle stage). Kept OUT of the main
-    quality pipeline, which computes repetition in the vectorized Arrow
-    plugin rule (rules/repetition.py) instead."""
-    if "tokens" not in df.columns:
-        df = with_token_columns(df, text_col)
-    return df.withColumn("token_hashes",
-                         F.transform("tokens", lambda t: F.xxhash64(t)))
-
-
-# columns with_token_columns attaches; the pipeline drops the arrays
-TOKEN_HELPER_COLS = ("tokens", "n_tokens", "n_chars")
-
-
-# -- per-rule score expressions (read the derived columns) -----------------
-
-def mean_word_len() -> Column:
-    # sum(len(token)) == count of non-whitespace chars (tokens ARE the
-    # maximal non-whitespace runs) — one codegen'd regex pass instead of
-    # an interpreted per-token aggregate fold
-    total = F.length(F.regexp_replace(
-        F.coalesce(F.col("text"), F.lit("")), r"\s+", ""))
-    return F.try_divide(total.cast("double"), F.col("n_tokens"))
-
-
-def max_word_len() -> Column:
-    return F.coalesce(
-        F.array_max(F.transform("tokens", F.length)), F.lit(0))
-
-
-def symbol_ratio(text_col: str = "text") -> Column:
-    pat = "[" + spec.SYMBOL_CHARS + "]"
-    return F.try_divide(F.regexp_count(F.col(text_col), F.lit(pat)),
-                        F.col("n_tokens"))
+    """Attach tokens/n_chars/n_tokens once; rules read these."""
+    cols = token_cols_sql(text_col)
+    df = with_sql_columns(df, {"tokens": cols["tokens"],
+                               "n_chars": cols["n_chars"]})
+    return with_sql_columns(df, {"n_tokens": cols["n_tokens"]})
 
 
 def stopword_token_re(words: tuple[str, ...]) -> str:
     """Whole-token stopword matcher for ONE codegen'd regexp_count
-    pass: (^|\\s)(alt...)(?=\\s|$) matches exactly the tokens equal to
+    pass: (^|ws)(alt...)(?=ws|$) matches exactly the tokens equal to
     a listed word (tokens are whitespace-delimited; Java regex
     backtracks through the alternation, so prefix words like a/an
     both match)."""
-    return r"(?:^|\s)(?:" + "|".join(sorted(words)) + r")(?=\s|$)"
+    return (f"(?:^|{WS_CLASS})(?:" + "|".join(sorted(words))
+            + f")(?={WS_CLASS}|$)")
 
 
-STOPWORD_TOKEN_RE = stopword_token_re(STOPWORDS)
-
-
-def stopword_frac() -> Column:
+def stopword_hits_sql(words: tuple[str, ...]) -> str:
     # whole-token stopword occurrences counted in ONE codegen'd regex
-    # pass (stopword_token_re). The interpreted form —
-    # filter(tokens, t -> array_contains(SW, t)) — cost
-    # O(tokens × |SW|) per row with boxing.
-    hits = F.regexp_count(F.coalesce(F.col("text"), F.lit("")),
-                          F.lit(STOPWORD_TOKEN_RE))
-    return F.try_divide(hits, F.col("n_tokens"))
+    # pass. The interpreted form — filter(tokens, t ->
+    # array_contains(SW, t)) — cost O(tokens × |SW|) per row with boxing.
+    return (f"regexp_count(coalesce(text, ''), "
+            f"{sql_lit(stopword_token_re(words))})")
+
+
+def stopword_frac_sql(words: tuple[str, ...]) -> str:
+    return f"try_divide({stopword_hits_sql(words)}, n_tokens)"
+
+
+def profile_key_sql(langs: tuple[str, ...]) -> str:
+    """The stopword profile a document is scored against: its predicted
+    language when ``langs`` registers it, else EN."""
+    non_en = [lg for lg in langs if lg != "en"]
+    if not non_en:
+        return "'en'"
+    return (f"CASE WHEN lang_pred IN ({', '.join(map(sql_lit, non_en))})"
+            " THEN lang_pred ELSE 'en' END")
+
+
+def profile_case_sql(langs: tuple[str, ...],
+                     branch: Callable[[str], str]) -> str:
+    """``branch(lg)`` for the document's profile language lg — a CASE
+    over :func:`profile_key_sql` (only the selected branch is evaluated
+    per row; Catalyst evaluates CASE lazily)."""
+    out = branch("en")
+    for lg in (lg for lg in langs if lg != "en"):
+        out = (f"CASE WHEN {profile_key_sql(langs)} = {sql_lit(lg)} "
+               f"THEN {branch(lg)} ELSE {out} END")
+    return out
 
 
 def per_lang_stopword_rule(langs: tuple[str, ...] | None = None) -> Rule:
@@ -123,100 +147,52 @@ def per_lang_stopword_rule(langs: tuple[str, ...] | None = None) -> Rule:
     identical to the default rule (byte-identity tested).
 
     Scale shape: identical to the EN rule × |langs| — one codegen'd
-    regexp_count per profile inside a CASE (only the selected branch's
-    count is consumed per row; Catalyst evaluates CASE lazily), no
-    joins, no Python."""
-    from luzzu_spark.rules.stopwords import RULE_PROFILES
-    langs = tuple(langs) if langs else tuple(sorted(RULE_PROFILES))
-    unknown = set(langs) - set(RULE_PROFILES)
-    if unknown:
-        raise ValueError(f"no rule profile for languages {sorted(unknown)}"
-                         f" (registered: {sorted(RULE_PROFILES)})")
-    non_en = [lg for lg in langs if lg != "en"]
-
-    def lang_key() -> Column:
-        lp = F.col("lang_pred")
-        return F.when(lp.isin(non_en), lp).otherwise(F.lit("en")) \
-            if non_en else F.lit("en")
-
-    def frac(lg: str) -> Column:
-        hits = F.regexp_count(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(stopword_token_re(RULE_PROFILES[lg]["stopwords"])))
-        return F.try_divide(hits, F.col("n_tokens"))
-
-    def score() -> Column:
-        expr = frac("en")
-        key = lang_key()
-        for lg in non_en:
-            expr = F.when(key == lg, frac(lg)).otherwise(expr)
-        return expr
-
-    def fires(s: Column) -> Column:
-        thr = F.lit(RULE_PROFILES["en"]["min_stopword_frac"])
-        key = lang_key()
-        for lg in non_en:
-            thr = F.when(key == lg,
-                         F.lit(RULE_PROFILES[lg]["min_stopword_frac"])
-                         ).otherwise(thr)
-        return s < thr
-
-    return Rule(
-        "stopword_frac", ("text",), fires=fires, score=score, late=True,
+    regexp_count per profile inside a CASE, no joins, no Python."""
+    langs = rule_profile_langs(langs)
+    return sql_rule(
+        "stopword_frac",
+        profile_case_sql(langs, lambda lg: stopword_frac_sql(
+            RULE_PROFILES[lg]["stopwords"])),
+        "{score} < " + profile_case_sql(langs, lambda lg: sql_lit(
+            RULE_PROFILES[lg]["min_stopword_frac"])),
+        late=True,
         description="Gopher stop-word fraction, per-language profile "
                     f"({', '.join(langs)}; others → EN fallback)")
-
-
-def ngram_hashes(n: int = spec.NGRAM_N,
-                 hashes_col: str = "token_hashes") -> Column:
-    """array<long>: xxhash64 over each n-token shingle of token hashes.
-
-    Empty array when the doc has fewer than n tokens. Used both for the
-    within-doc repetition score and (exploded) for corpus-level dedup.
-
-    The shingle hash is xxhash64(slice(token_hashes, i, n)) — hashing a
-    length-n long slice, not a re-joined string. Tokens come from
-    whitespace split (never contain spaces), so shingle equality is
-    identical to space-joined-string equality; only the 64-bit codes
-    differ. Distinctness/dedup semantics are unchanged while the
-    interpreted HOF cost drops from O(n·chars) string building to O(n)
-    long copies per position."""
-    h = F.col(hashes_col)
-    return F.when(
-        F.size(h) >= F.lit(n),
-        F.transform(
-            F.sequence(F.lit(1), F.size(h) - F.lit(n - 1)),
-            lambda i: F.xxhash64(F.slice(h, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
 
 
 def heuristic_rules() -> list[Rule]:
     s = spec
     return [
-        Rule("min_chars", ("text",),
-             score=lambda: F.col("n_chars").cast("double"),
-             fires=lambda c: c < F.lit(s.MIN_DOC_CHARS),
-             description="C4 minimum document length"),
-        Rule("word_count", ("text",),
-             score=lambda: F.col("n_tokens").cast("double"),
-             fires=lambda c: (c < F.lit(s.MIN_WORDS))
-             | (c > F.lit(s.MAX_WORDS)),
-             description="Gopher word-count bounds"),
-        Rule("mean_word_len", ("text",), score=mean_word_len,
-             fires=lambda c: (c < F.lit(s.MEAN_WORD_LEN_LO))
-             | (c > F.lit(s.MEAN_WORD_LEN_HI)),
-             description="Gopher mean word length bounds"),
-        Rule("max_word_len", ("text",),
-             score=lambda: max_word_len().cast("double"),
-             fires=lambda c: c > F.lit(s.MAX_WORD_LEN),
-             description="longest-token bound"),
-        Rule("symbol_ratio", ("text",), score=symbol_ratio,
-             fires=lambda c: c > F.lit(s.MAX_SYMBOL_WORD_RATIO),
-             description="Gopher symbol-to-word ratio"),
-        Rule("stopword_frac", ("text",), score=stopword_frac,
-             fires=lambda c: c < F.lit(s.MIN_STOPWORD_FRAC),
-             description="Gopher stop-word fraction"),
+        sql_rule("min_chars", "CAST(n_chars AS DOUBLE)",
+                 f"{{score}} < {sql_lit(s.MIN_DOC_CHARS)}",
+                 description="C4 minimum document length"),
+        sql_rule("word_count", "CAST(n_tokens AS DOUBLE)",
+                 f"{{score}} < {sql_lit(s.MIN_WORDS)} "
+                 f"OR {{score}} > {sql_lit(s.MAX_WORDS)}",
+                 description="Gopher word-count bounds"),
+        # sum(len(token)) == count of non-whitespace chars (tokens ARE
+        # the maximal non-whitespace runs) — one codegen'd regex pass
+        # instead of an interpreted per-token aggregate fold
+        sql_rule("mean_word_len",
+                 "try_divide(CAST(length(regexp_replace("
+                 f"coalesce(text, ''), {sql_lit(WS_CLASS + '+')}, '')) "
+                 "AS DOUBLE), n_tokens)",
+                 f"{{score}} < {sql_lit(s.MEAN_WORD_LEN_LO)} "
+                 f"OR {{score}} > {sql_lit(s.MEAN_WORD_LEN_HI)}",
+                 description="Gopher mean word length bounds"),
+        sql_rule("max_word_len",
+                 "CAST(coalesce(array_max(transform(tokens, "
+                 "t -> length(t))), 0) AS DOUBLE)",
+                 f"{{score}} > {sql_lit(s.MAX_WORD_LEN)}",
+                 description="longest-token bound"),
+        sql_rule("symbol_ratio",
+                 "try_divide(regexp_count(text, "
+                 f"{sql_lit('[' + s.SYMBOL_CHARS + ']')}), n_tokens)",
+                 f"{{score}} > {sql_lit(s.MAX_SYMBOL_WORD_RATIO)}",
+                 description="Gopher symbol-to-word ratio"),
+        sql_rule("stopword_frac", stopword_frac_sql(STOPWORDS),
+                 f"{{score}} < {sql_lit(s.MIN_STOPWORD_FRAC)}",
+                 description="Gopher stop-word fraction"),
         # dup_ngram_frac is a PLUGIN rule (rules/repetition.py): the
         # 13-gram hash array as a Catalyst HOF ran interpreted and
         # dominated the whole pipeline; the vectorized Arrow form rides

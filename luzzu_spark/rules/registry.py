@@ -2,38 +2,63 @@
 
 Luzzu registers metrics as pluggable observers, each folding the quad
 stream into a value plus a problem list (/root/reference/README.md:7,13).
-Here a :class:`Rule` declares
+Here a :class:`Rule` declares, as Spark SQL text only:
 
 - ``deps``: the input columns it reads (drives column pruning: the
   pipeline selects only the union of deps before any UDF stage, so
   Parquet ReadSchema stays minimal even across the Arrow boundary);
-- ``score``: a builder returning a Catalyst ``Column`` (declarative
-  rules) — or ``None`` for plugin rules whose score column is produced
-  by a vectorized pandas UDF stage;
-- ``fires``: drop-predicate builder over the score column.
+- ``score_sql``: the score expression — or ``None`` for plugin rules
+  whose score column is produced by a vectorized pandas UDF stage;
+- ``fire_sql``: the drop predicate, a template over ``{score}``.
 
-The registry compiles to ONE chained ``select`` — no per-rule passes, no
+Built-in and user rules share this one form (:func:`sql_rule` builds
+them all), so every formula and threshold is written once. Each layer
+of the registry compiles to ONE ``selectExpr``: no per-rule passes, no
 per-row Python for declarative rules; Catalyst sees a flat expression
-tree and whole-stage-codegens it.
+tree and whole-stage-codegens it. The SQL functions of
+:mod:`luzzu_spark.sqludf` are derived from the same strings.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from luzzu_spark.rules import spec
+
+
+def sql_lit(v: str | int | float) -> str:
+    """A Python value as a Spark SQL literal. Strings are single-quoted
+    with backslashes doubled for the default escaped-literal parser;
+    floats get the ``D`` suffix so they stay DOUBLE (a bare ``0.1`` is
+    DECIMAL)."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{v!r}D" if isinstance(v, float) else str(v)
+
+
+def with_sql_columns(df: DataFrame, cols: dict[str, str]) -> DataFrame:
+    """``df.withColumns`` over SQL text, in one ``selectExpr``: a name
+    already in ``df`` is replaced in place, the others are appended in
+    order."""
+    have = df.columns
+    if set(cols) & set(have):
+        kept = [f"{cols[c]} AS {c}" if c in cols
+                else "`" + c.replace("`", "``") + "`" for c in have]
+    else:
+        kept = ["*"]
+    return df.selectExpr(*kept, *[f"{sql} AS {name}"
+                                  for name, sql in cols.items()
+                                  if name not in have])
 
 
 @dataclass(frozen=True)
 class Rule:
     name: str
     deps: tuple[str, ...]
-    fires: Callable[[Column], Column]       # score col -> drop predicate
-    score: Callable[[], Column] | None = None  # None → plugin (UDF) rule
+    fire_sql: str                # boolean SQL template over {score}
+    score_sql: str | None = None  # None → plugin (UDF) rule
     description: str = ""
     # late rules compile their score AFTER the plugin-UDF stage (they
     # may reference plugin outputs like lang_pred); declarative order
@@ -42,7 +67,7 @@ class Rule:
 
     @property
     def is_plugin(self) -> bool:
-        return self.score is None
+        return self.score_sql is None
 
     @property
     def score_col(self) -> str:
@@ -51,6 +76,19 @@ class Rule:
     @property
     def fired_col(self) -> str:
         return f"fired_{self.name}"
+
+    def fires_on(self, score: str) -> str:
+        """The drop predicate over the SQL expression ``score``. A plain
+        substring replace, NOT str.format: rule SQL may legitimately
+        contain braces (regex quantifiers in rlike, map literals) that
+        .format would choke on (ADVICE r03)."""
+        return "(" + self.fire_sql.replace("{score}", score) + ")"
+
+    @property
+    def inline_fire_sql(self) -> str:
+        """The drop predicate with the score expression inlined — for a
+        declarative rule evaluated without its score column."""
+        return self.fires_on(f"({self.score_sql})")
 
 
 @dataclass
@@ -81,18 +119,18 @@ class RuleRegistry:
         """Attach score_* columns for declarative rules (one select).
         Late rules wait for :meth:`with_late_scores` (their expressions
         read plugin outputs such as lang_pred)."""
-        cols = {r.score_col: r.score() for r in self.ordered()
-                if not r.is_plugin and not r.late}
-        return df.withColumns(cols)
+        return with_sql_columns(df, {
+            r.score_col: r.score_sql for r in self.ordered()
+            if not r.is_plugin and not r.late})
 
     def with_late_scores(self, df: DataFrame) -> DataFrame:
         """Attach score_* columns for LATE declarative rules — called
         by the pipeline after the plugin-UDF stage, so these
         expressions can reference plugin outputs (lang_pred). A no-op
-        select for registries without late rules (the default)."""
-        cols = {r.score_col: r.score() for r in self.ordered()
+        for registries without late rules (the default)."""
+        cols = {r.score_col: r.score_sql for r in self.ordered()
                 if not r.is_plugin and r.late}
-        return df.withColumns(cols) if cols else df
+        return with_sql_columns(df, cols) if cols else df
 
     def with_verdict(self, df: DataFrame) -> DataFrame:
         """Attach fired_*, drop_reasons, keep, rule_scores.
@@ -100,21 +138,19 @@ class RuleRegistry:
         Expects every rule's score column present (plugin scores attached
         by the pipeline's UDF stage before this).
         """
-        fired = {r.fired_col: r.fires(F.col(r.score_col))
-                 for r in self.ordered()}
-        df = df.withColumns(fired)
-        reason_arrays = [
-            F.when(F.col(r.fired_col), F.array(F.lit(r.name)))
-            .otherwise(F.array().cast("array<string>"))
-            for r in self.ordered()
-        ]
-        names = F.array(*[F.lit(r.name) for r in self.ordered()])
-        scores = F.array(*[F.col(r.score_col).cast("double")
-                           for r in self.ordered()])
-        return df.withColumns({
-            "drop_reasons": F.concat(*reason_arrays),
-            "rule_scores": F.map_from_arrays(names, scores),
-        }).withColumn("keep", F.size("drop_reasons") == F.lit(0))
+        rules = self.ordered()
+        df = with_sql_columns(df, {r.fired_col: r.fires_on(r.score_col)
+                                   for r in rules})
+        reasons = ", ".join(
+            f"CASE WHEN {r.fired_col} THEN array({sql_lit(r.name)}) "
+            "ELSE CAST(array() AS array<string>) END" for r in rules)
+        names = ", ".join(sql_lit(r.name) for r in rules)
+        scores = ", ".join(f"CAST({r.score_col} AS DOUBLE)" for r in rules)
+        df = with_sql_columns(df, {
+            "drop_reasons": f"concat({reasons})",
+            "rule_scores": f"map_from_arrays(array({names}), "
+                           f"array({scores}))"})
+        return with_sql_columns(df, {"keep": "size(drop_reasons) = 0"})
 
 
 def default_registry() -> RuleRegistry:
@@ -124,35 +160,36 @@ def default_registry() -> RuleRegistry:
     reg = RuleRegistry()
     for rule in heuristics.heuristic_rules():
         reg.register(rule)
-    reg.register(Rule(
-        name="dup_ngram_frac", deps=("text",),
-        fires=lambda s: s > F.lit(spec.MAX_DUP_NGRAM_FRAC),
+    reg.register(sql_rule(
+        "dup_ngram_frac", None,
+        f"{{score}} > {sql_lit(spec.MAX_DUP_NGRAM_FRAC)}",
         description="within-doc 13-gram duplicate fraction (plugin "
                     "rule, vectorized rolling-hash pandas UDF)"))
-    reg.register(Rule(
-        name="langid_conf", deps=("text",),
-        fires=lambda s: s < F.lit(spec.MIN_LANGID_CONF),
+    reg.register(sql_rule(
+        "langid_conf", None,
+        f"{{score}} < {sql_lit(spec.MIN_LANGID_CONF)}",
         description="deterministic stop-word-profile language-ID "
                     "confidence (plugin rule, pandas UDF)"))
-    reg.register(Rule(
-        name="perplexity", deps=("text",),
-        fires=lambda s: s > F.lit(spec.MAX_PERPLEXITY),
+    reg.register(sql_rule(
+        "perplexity", None,
+        f"{{score}} > {sql_lit(spec.MAX_PERPLEXITY)}",
         description="char-trigram LM perplexity (plugin rule, pandas "
                     "UDF, embedded deterministic model)"))
     return reg
 
 
-def sql_rule(name: str, score_sql: str, fire_when_sql: str,
+def sql_rule(name: str, score_sql: str | None, fire_when_sql: str,
              deps: tuple[str, ...] = ("text",),
-             description: str = "") -> Rule:
+             description: str = "", late: bool = False) -> Rule:
     """Declare a quality metric in SQL ALONE — the executable LQML
     recast (/root/reference/README.md:11-13: Luzzu users declare
-    metrics without touching engine code).
+    metrics without touching engine code). Every built-in rule is
+    declared this way too.
 
     ``score_sql``: any SQL expression over the rule's dep columns and
-    the derived helpers (``tokens``/``n_tokens``/``n_chars``) —
-    compiled via F.expr, so it whole-stage-codegens exactly like the
-    built-in rules. ``fire_when_sql``: a boolean SQL template over
+    the derived helpers (``tokens``/``n_tokens``/``n_chars``), or
+    ``None`` for a plugin rule whose score column the UDF stage
+    attaches. ``fire_when_sql``: a boolean SQL template over
     ``{score}`` (substituted with the attached score column).
 
         sql_rule("digit_heavy",
@@ -168,13 +205,8 @@ def sql_rule(name: str, score_sql: str, fire_when_sql: str,
     (+ coalesce to pin the fire decision for zero-token docs,
     CLAUDE.md rule 15)."""
     return Rule(
-        name=name, deps=tuple(deps),
-        score=lambda: F.expr(score_sql),
-        fires=lambda _c: F.expr(
-            # plain substring replace, NOT str.format: rule SQL may
-            # legitimately contain braces (regex quantifiers in rlike,
-            # map literals) that .format would choke on (ADVICE r03)
-            fire_when_sql.replace("{score}", f"score_{name}")),
+        name=name, deps=tuple(deps), fire_sql=fire_when_sql,
+        score_sql=score_sql, late=late,
         description=description or f"user SQL rule: {score_sql}")
 
 
@@ -189,11 +221,10 @@ def robots_noindex_rule() -> Rule:
     (run_filter.py --drop-noindex / build_corpus.py --drop-noindex):
     the frozen RULESPEC byte-identity contract is untouched by
     default, and non-WARC inputs have no such column."""
-    return Rule(
-        name="robots_noindex", deps=("robots_noindex",),
-        score=lambda: F.coalesce(
-            F.col("robots_noindex").cast("double"), F.lit(0.0)),
-        fires=lambda s: s >= F.lit(1.0),
+    return sql_rule(
+        "robots_noindex",
+        "coalesce(CAST(robots_noindex AS DOUBLE), 0.0D)",
+        "{score} >= 1.0D", deps=("robots_noindex",),
         description="publisher opt-out: meta robots noindex in <head> "
                     "or X-Robots-Tag: noindex HTTP header")
 
@@ -218,16 +249,11 @@ def multilingual_registry(langs: tuple[str, ...] | None = None
     default registry, and ``multilingual_registry(("en",))`` returns
     the default registry itself — the frozen RULESPEC contract holds
     exactly when only EN is registered (tested)."""
-    from luzzu_spark.rules.stopwords import RULE_PROFILES
-    langs = tuple(langs) if langs else tuple(sorted(RULE_PROFILES))
-    unknown = set(langs) - set(RULE_PROFILES)
-    if unknown:
-        raise ValueError(f"no rule profile for languages "
-                         f"{sorted(unknown)} (registered: "
-                         f"{sorted(RULE_PROFILES)})")
+    from luzzu_spark.rules.heuristics import per_lang_stopword_rule
+    from luzzu_spark.rules.stopwords import rule_profile_langs
+    langs = rule_profile_langs(langs)
     if set(langs) == {"en"}:
         return default_registry()
-    from luzzu_spark.rules.heuristics import per_lang_stopword_rule
     reg = RuleRegistry()
     for r in default_registry().rules:
         reg.register(per_lang_stopword_rule(langs)

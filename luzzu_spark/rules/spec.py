@@ -8,7 +8,9 @@ requires the two to agree at F1 ≥ 0.99 (BASELINE.json:14) — by
 construction they should agree exactly; any gap is an implementation bug.
 
 Do not edit thresholds without updating BOTH implementations' tests.
-Tokenization: tokens = whitespace-split of trimmed text (regex ``\\s+``).
+Tokenization: tokens = whitespace-split of the text, whitespace being the
+characters for which Python's ``str.isspace()`` holds — ``str.split()``
+(rules/heuristics.WS_CLASS is that set as a Java-regex class).
 """
 
 from __future__ import annotations
@@ -43,7 +45,3 @@ RULE_ORDER = (
     "langid_conf",
     "perplexity",
 )
-
-# Rules whose score comes from a pandas UDF (imperative plugins);
-# everything else is a pure Catalyst expression (declarative rules).
-UDF_RULES = frozenset({"langid_conf", "perplexity"})

@@ -56,3 +56,16 @@ RULE_PROFILES: dict[str, dict] = {
     "es": {"stopwords": LANG_PROFILES["es"], "min_stopword_frac": 0.03},
     "de": {"stopwords": LANG_PROFILES["de"], "min_stopword_frac": 0.03},
 }
+
+
+def rule_profile_langs(langs: tuple[str, ...] | None = None
+                       ) -> tuple[str, ...]:
+    """The requested RULE_PROFILES languages (all of them, sorted, when
+    none are named); raises ValueError on a language without one."""
+    langs = tuple(langs) if langs else tuple(sorted(RULE_PROFILES))
+    unknown = set(langs) - set(RULE_PROFILES)
+    if unknown:
+        raise ValueError(f"no rule profile for languages "
+                         f"{sorted(unknown)} (registered: "
+                         f"{sorted(RULE_PROFILES)})")
+    return langs

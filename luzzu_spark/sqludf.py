@@ -4,91 +4,69 @@ Luzzu's LQML lets a user declare quality metrics without writing engine
 code (/root/reference/README.md:11-13). The DataFrame-side recast is
 rules/registry.py; this module is the same registry surface for teams
 that only speak SQL: `register_sql_rules(spark)` installs Spark 4 SQL
-scalar UDFs (CREATE FUNCTION ... RETURNS ... RETURN <expr>) mirroring
-the heuristic rule expressions, so
+scalar UDFs (CREATE FUNCTION ... RETURNS ... RETURN <expr>), so
 
     SELECT url, luzzu_heuristic_keep(text) FROM corpus
 
-is the whole integration. Every function body is a pure Catalyst
-expression — SQL UDFs inline into the calling plan (no Python worker,
-no serialization boundary; they codegen exactly like the DataFrame
-forms, which tests pin row-identically).
-
-Thresholds come from rules/spec.py at registration time — one source of
-truth with the DataFrame rules.
+is the whole integration. Every body is derived from the heuristic
+rules' own SQL text (rules/heuristics.py): the helper columns a rule
+reads (tokens/n_tokens/n_chars) are replaced by their definitions over
+``text``, so no formula or threshold is written here. SQL UDFs inline
+into the calling plan (no Python worker, no serialization boundary;
+tests pin them row-identical to the rule scores).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
-from luzzu_spark.rules import spec
-from luzzu_spark.rules.heuristics import STOPWORD_TOKEN_RE
+from luzzu_spark.rules.heuristics import heuristic_rules, token_cols_sql
+
+_HELPER_COL = re.compile(r"\b(tokens|n_tokens|n_chars)\b")
 
 
-def _sql_str(s: str) -> str:
-    """Escape a Python string into a single-quoted Spark SQL literal
-    (backslashes doubled for the default escaped-literal parser)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-# token model shared with heuristics.tokens_expr: whitespace split of
-# the trimmed, null-coalesced text, empties removed
-_TOKENS = ("array_remove(split(trim(coalesce(text, '')), "
-           + _sql_str(r"\s+") + "), '')")
-_N_TOKENS = f"size({_TOKENS})"
-_NONWS_CHARS = ("length(regexp_replace(coalesce(text, ''), "
-                + _sql_str(r"\s+") + ", ''))")
+def _over_text(sql: str) -> str:
+    """Rule SQL rewritten over the ``text`` argument alone."""
+    cols = token_cols_sql()
+    return _HELPER_COL.sub(lambda m: _over_text(cols[m[1]]), sql)
 
 
 def rule_function_sql() -> dict[str, str]:
-    """name -> CREATE OR REPLACE TEMPORARY FUNCTION statement, one per
-    heuristic rule plus the composite keep verdict."""
-    s = spec
-    symbol_pat = _sql_str("[" + s.SYMBOL_CHARS + "]")
-    stop_pat = _sql_str(STOPWORD_TOKEN_RE)
+    """name -> CREATE OR REPLACE TEMPORARY FUNCTION statement: the two
+    token helpers, one per ratio/length rule score, the composite
+    quality score and the keep verdict."""
+    rules = {r.name: r for r in heuristic_rules()}
+
+    def score(name: str) -> str:
+        return _over_text(rules[name].score_sql)
+
+    def fires(name: str) -> str:
+        return _over_text(rules[name].inline_fire_sql)
+
     defs = {
         "luzzu_n_tokens":
-            f"RETURNS BIGINT RETURN CAST({_N_TOKENS} AS BIGINT)",
+            f"RETURNS BIGINT RETURN CAST({_over_text('n_tokens')} AS BIGINT)",
         "luzzu_n_chars":
-            "RETURNS BIGINT RETURN "
-            "CAST(length(coalesce(text, '')) AS BIGINT)",
+            f"RETURNS BIGINT RETURN CAST({_over_text('n_chars')} AS BIGINT)",
         "luzzu_mean_word_len":
-            "RETURNS DOUBLE RETURN "
-            f"try_divide(CAST({_NONWS_CHARS} AS DOUBLE), {_N_TOKENS})",
+            f"RETURNS DOUBLE RETURN {score('mean_word_len')}",
         "luzzu_max_word_len":
-            "RETURNS BIGINT RETURN CAST(coalesce("
-            f"array_max(transform({_TOKENS}, t -> length(t))), 0) "
-            "AS BIGINT)",
+            f"RETURNS BIGINT RETURN CAST({score('max_word_len')} AS BIGINT)",
         "luzzu_symbol_ratio":
-            "RETURNS DOUBLE RETURN try_divide("
-            f"regexp_count(coalesce(text, ''), {symbol_pat}), "
-            f"{_N_TOKENS})",
+            f"RETURNS DOUBLE RETURN {score('symbol_ratio')}",
         "luzzu_stopword_frac":
-            "RETURNS DOUBLE RETURN try_divide("
-            f"regexp_count(coalesce(text, ''), {stop_pat}), "
-            f"{_N_TOKENS})",
+            f"RETURNS DOUBLE RETURN {score('stopword_frac')}",
+        # 0.25 per passing rule; a NULL (zero-token) ratio passes nothing
         "luzzu_quality_score":
-            "RETURNS DOUBLE RETURN "
-            f"0.25 * CAST(luzzu_n_chars(text) >= {s.MIN_DOC_CHARS} "
-            "AS DOUBLE) "
-            f"+ 0.25 * CAST(luzzu_n_tokens(text) >= {s.MIN_WORDS} "
-            "AS DOUBLE) "
-            "+ 0.25 * coalesce(CAST(luzzu_stopword_frac(text) >= "
-            f"{s.MIN_STOPWORD_FRAC} AS DOUBLE), 0.0) "
-            "+ 0.25 * coalesce(CAST(luzzu_mean_word_len(text) "
-            f"BETWEEN {s.MEAN_WORD_LEN_LO} AND {s.MEAN_WORD_LEN_HI} "
-            "AS DOUBLE), 0.0)",
+            "RETURNS DOUBLE RETURN " + " + ".join(
+                f"0.25 * coalesce(CAST(NOT {fires(n)} AS DOUBLE), 0.0)"
+                for n in ("min_chars", "word_count", "stopword_frac",
+                          "mean_word_len")),
         "luzzu_heuristic_keep":
             "RETURNS BOOLEAN RETURN NOT ("
-            f"luzzu_n_chars(text) < {s.MIN_DOC_CHARS} "
-            f"OR luzzu_n_tokens(text) < {s.MIN_WORDS} "
-            f"OR luzzu_n_tokens(text) > {s.MAX_WORDS} "
-            f"OR luzzu_mean_word_len(text) < {s.MEAN_WORD_LEN_LO} "
-            f"OR luzzu_mean_word_len(text) > {s.MEAN_WORD_LEN_HI} "
-            f"OR luzzu_max_word_len(text) > {s.MAX_WORD_LEN} "
-            f"OR luzzu_symbol_ratio(text) > {s.MAX_SYMBOL_WORD_RATIO} "
-            f"OR luzzu_stopword_frac(text) < {s.MIN_STOPWORD_FRAC})",
+            + " OR ".join(fires(n) for n in rules) + ")",
     }
     return {name: (f"CREATE OR REPLACE TEMPORARY FUNCTION "
                    f"{name}(text STRING) {body}")
@@ -97,8 +75,7 @@ def rule_function_sql() -> dict[str, str]:
 
 def register_sql_rules(spark: SparkSession) -> list[str]:
     """Install the rule functions into the session catalog; returns the
-    registered names (order respects intra-function dependencies:
-    the composite keep references the scalar rules)."""
+    registered names."""
     names = []
     for name, stmt in rule_function_sql().items():
         spark.sql(stmt)

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def build_args() -> argparse.Namespace:
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
@@ -137,7 +137,7 @@ def build_args() -> argparse.Namespace:
     p.add_argument("--format", default="parquet",
                    choices=["parquet", "json"])
     p.add_argument("--json", action="store_true")
-    return p.parse_args()
+    return p
 
 
 def stable_uniform(text_col: str = "text") -> F.Column:
@@ -185,6 +185,11 @@ def assign_seq_ids(docs: DataFrame, budget: int,
 
 
 def build(spark: SparkSession, args: argparse.Namespace) -> dict:
+    # a partial ``args`` is fine: every option it lacks takes the
+    # parser's default
+    args = build_parser().parse_args(
+        ["--input", args.input, "--output", args.output],
+        namespace=argparse.Namespace(**vars(args)))
     from luzzu_spark import dedup
     from luzzu_spark.fixtures import as_webpages
     from luzzu_spark.pipeline import QualityPipeline
@@ -210,8 +215,8 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     if args.as_webpages or "url" not in pages.columns:
         pages = as_webpages(pages, inject_pii=args.inject_pii)
 
-    pipe_kwargs: dict = {"line_scrub": getattr(args, "line_scrub", False)}
-    if getattr(args, "drop_noindex", False):
+    pipe_kwargs: dict = {"line_scrub": args.line_scrub}
+    if args.drop_noindex:
         if "robots_noindex" not in pages.columns:
             raise ValueError(
                 "--drop-noindex needs a robots_noindex column — only "
@@ -261,25 +266,24 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     kept = pin(kept)
     funnel["after_near_dedup"] = kept.count()
 
-    if getattr(args, "dedup_semantic", None):
+    if args.dedup_semantic:
         emb = spark.read.parquet(args.dedup_semantic)
         kept = dedup.semantic_dedup_survivors(
             kept.withColumn("_q", F.length("text")), emb,
-            threshold=getattr(args, "semantic_threshold", 0.95),
+            threshold=args.semantic_threshold,
             score_col="_q").drop("_q")
         funnel["after_semantic_dedup"] = kept.count()
 
-    if getattr(args, "dedup_paragraphs", False):
+    if args.dedup_paragraphs:
         kept = dedup.remove_cross_doc_paragraphs(kept)
         # paragraph excision rewrites text, not rows — report the
         # surviving text volume so the funnel shows what it removed
         funnel["chars_after_para_dedup"] = kept.agg(
             F.sum(F.length("text")).cast("long")).collect()[0][0]
 
-    if getattr(args, "dedup_spans", False):
+    if args.dedup_spans:
         kept = dedup.remove_dup_spans(
-            kept,
-            char_offsets=getattr(args, "span_mode", "token") == "char")
+            kept, char_offsets=args.span_mode == "char")
         funnel["after_span_removal"] = kept.count()
 
     if args.bench_input:
@@ -293,8 +297,7 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     if args.pack_budget > 0:
         kept = assign_seq_ids(kept, args.pack_budget,
-                              tokenizer=getattr(args, "pack_tokenizer",
-                                                "whitespace"))
+                              tokenizer=args.pack_tokenizer)
     # pin the final frame: n_sequences, the datasheet agg, the sink
     # write and the written count all act on it
     if pinned[-1] is not kept:
@@ -334,7 +337,7 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 
 def main() -> None:
-    args = build_args()
+    args = build_parser().parse_args()
     from luzzu_spark.session import DEFAULT_CONFS
     builder = SparkSession.builder.appName("luzzu_spark_build_corpus")
     if args.master:

@@ -43,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import SparkSession  # noqa: E402
 
 
-def build_args() -> argparse.Namespace:
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
@@ -195,7 +195,7 @@ def build_args() -> argparse.Namespace:
     p.add_argument("--bench", action="store_true",
                    help="throughput mode: noop sink, no manifest/metrics; "
                         "repeat N times, report the MIN (steady state)")
-    return p.parse_args()
+    return p
 
 
 # last seen-set anti-join plan, exposed so tests can assert the CLI
@@ -206,7 +206,8 @@ LAST_SEEN_PLAN: str | None = None
 def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
     """The whole filter run against an existing session — the unit the
     CLI wraps and tests drive directly (same code path minus the
-    spark-submit process spawn)."""
+    spark-submit process spawn). ``args`` may be partial: every option
+    it lacks takes the parser's default."""
     global LAST_SEEN_PLAN
     from pyspark.sql import functions as F
 
@@ -217,31 +218,32 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
     from luzzu_spark.sources import DOCUMENTS_SCHEMA, read_corpus, \
         sniff_format
 
+    args = build_parser().parse_args(
+        ["--input", args.input, "--output", args.output],
+        namespace=argparse.Namespace(**vars(args)))
     if args.repeat != 1:
         # pre-flight: the committed-state flags are one-corpus-one-state
         # by contract — fail BEFORE the run, not after paying for it
         for flag, name in ((args.commit_bucket_table,
                             "--commit-bucket-table"),
-                           (getattr(args, "seen_bloom_path", None),
-                            "--seen-bloom-path"),
-                           (getattr(args, "paragraph_bloom_path", None),
-                            "--paragraph-bloom-path")):
+                           (args.seen_bloom_path, "--seen-bloom-path"),
+                           (args.paragraph_bloom_path,
+                            "--paragraph-bloom-path"),
+                           (args.neardup_index, "--neardup-index")):
             if flag:
                 raise ValueError(f"{name} requires --repeat 1 "
                                  "(one corpus, one committed state)")
-    extra = getattr(args, "sql_rule", None)
     extra_rules = []
-    if extra:
+    if args.sql_rule:
         from luzzu_spark.rules.registry import sql_rule
-        extra_rules += [sql_rule(n, sc, fw) for n, sc, fw in extra]
-    if getattr(args, "drop_noindex", False):
+        extra_rules += [sql_rule(n, sc, fw) for n, sc, fw in args.sql_rule]
+    if args.drop_noindex:
         from luzzu_spark.rules.registry import robots_noindex_rule
         extra_rules.append(robots_noindex_rule())
-    lang_profiles = getattr(args, "lang_profiles", None)
-    if lang_profiles:
+    if args.lang_profiles:
         from luzzu_spark.rules.registry import multilingual_registry
-        registry = multilingual_registry(
-            tuple(s.strip() for s in lang_profiles.split(",") if s.strip()))
+        registry = multilingual_registry(tuple(
+            s.strip() for s in args.lang_profiles.split(",") if s.strip()))
     else:
         from luzzu_spark.rules.registry import default_registry
         registry = default_registry()
@@ -249,7 +251,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
         registry.register(r)
     pipe = QualityPipeline(
         registry=registry,
-        line_scrub=getattr(args, "line_scrub", False),
+        line_scrub=args.line_scrub,
         repartition_salted=args.salt_buckets > 0,
         num_partitions=None)
     fmt = args.input_format or sniff_format(args.input)
@@ -258,9 +260,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     seen = spark.table(args.seen_table) if args.seen_table else None
 
-    # getattr: older callers build Namespaces without the near-dup
-    # flags; absent means disabled
-    nd_prefix = getattr(args, "neardup_index", None)
+    nd_prefix = args.neardup_index
     nd_sigs = nd_bands = None
     nd_exists = False
     if nd_prefix:
@@ -276,7 +276,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
         global LAST_SEEN_PLAN
         if args.as_webpages or "url" not in pages.columns:
             pages = as_webpages(pages, inject_pii=args.inject_pii)
-        bloom_path = getattr(args, "seen_bloom_path", None)
+        bloom_path = args.seen_bloom_path
         if bloom_path and os.path.exists(
                 os.path.join(bloom_path, "meta.json")):
             # approximate cross-run dedup: one map-only Arrow stage,
@@ -290,7 +290,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
             # shuffle-free — only this batch pays one Exchange. With
             # --seen-bloom, guaranteed-novel urls skip even that
             # Exchange (map-only Bloom prune; identical result)
-            if getattr(args, "seen_bloom", False):
+            if args.seen_bloom:
                 from luzzu_spark.dedup import seen_bloom_anti_join
                 pages = seen_bloom_anti_join(pages, seen)
             else:
@@ -305,8 +305,8 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
             from luzzu_spark.dedup import incremental_near_dup_filter
             pages = incremental_near_dup_filter(
                 spark, pages, nd_sigs, nd_bands,
-                threshold=getattr(args, "neardup_threshold", 0.5))
-        para_bloom = getattr(args, "paragraph_bloom_path", None)
+                threshold=args.neardup_threshold)
+        para_bloom = args.paragraph_bloom_path
         if para_bloom and os.path.exists(
                 os.path.join(para_bloom, "meta.json")):
             # cross-run PARAGRAPH scrub: committed paragraphs excise
@@ -327,7 +327,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     corpus = read_corpus(spark, args.input, schema=schema, fmt=fmt)
     n_noindex = None
-    if getattr(args, "drop_noindex", False):
+    if args.drop_noindex:
         if "robots_noindex" not in corpus.columns:
             raise ValueError(
                 "--drop-noindex needs a robots_noindex column — only "
@@ -379,9 +379,6 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
               f"({sec:.1f}s, {summary['planned']} batches)",
               file=sys.stderr)
     if args.commit_bucket_table:
-        if args.repeat != 1:
-            raise ValueError("--commit-bucket-table requires --repeat 1 "
-                             "(one corpus, one committed table)")
         # consolidate every committed batch into the url-bucketed
         # catalog table the NEXT run's --seen-table anti-join reads
         # shuffle-free (same layout as write_filtered(bucket_table=…):
@@ -395,10 +392,8 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
          .saveAsTable(args.commit_bucket_table))
         result["bucket_table"] = args.commit_bucket_table
     if nd_prefix:
-        if args.repeat != 1:
-            raise ValueError("--neardup-index requires --repeat 1")
         from luzzu_spark.dedup import commit_minhash_index, next_epoch_id
-        nd_path = getattr(args, "neardup_path", None) or os.path.join(
+        nd_path = args.neardup_path or os.path.join(
             args.output, "neardup_index")
         kept = spark.read.parquet(ResumableRun.output_glob(args.output))
         # every CLI run commits under its OWN epoch id (next integer
@@ -417,8 +412,8 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
         result["neardup_index"] = nd_prefix
         result["neardup_mode"] = "append" if nd_exists else "create"
         result["neardup_epoch"] = epoch_id
-        keep = getattr(args, "neardup_compact", None)
-        expire = getattr(args, "neardup_expire_before", None)
+        keep = args.neardup_compact
+        expire = args.neardup_expire_before
         if keep is not None or expire is not None:
             from luzzu_spark.dedup import compact_minhash_index
             if expire is not None and expire > epoch_id:
@@ -435,32 +430,23 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
                 spark, nd_sigs, nd_bands,
                 keep_epochs=keep if keep is not None else 2**31,
                 expire_before=expire)
-    bloom_path = getattr(args, "seen_bloom_path", None)
-    if bloom_path:
-        if args.repeat != 1:
-            raise ValueError("--seen-bloom-path requires --repeat 1")
+    if args.seen_bloom_path:
         from luzzu_spark.dedup import bloom_index_commit
         kept = spark.read.parquet(ResumableRun.output_glob(args.output))
         result["bloom_index"] = bloom_index_commit(
-            kept, "url", bloom_path,
-            expected_items=getattr(args, "bloom_expected", None),
-            shards=getattr(args, "bloom_shards", 1))
-    para_bloom = getattr(args, "paragraph_bloom_path", None)
-    if para_bloom:
-        if args.repeat != 1:
-            raise ValueError("--paragraph-bloom-path requires "
-                             "--repeat 1")
+            kept, "url", args.seen_bloom_path,
+            expected_items=args.bloom_expected, shards=args.bloom_shards)
+    if args.paragraph_bloom_path:
         from luzzu_spark.dedup import bloom_paragraph_commit
         kept = spark.read.parquet(ResumableRun.output_glob(args.output))
         result["paragraph_bloom_index"] = bloom_paragraph_commit(
-            kept, para_bloom,
-            expected_items=getattr(args, "bloom_expected", None),
-            shards=getattr(args, "bloom_shards", 1))
+            kept, args.paragraph_bloom_path,
+            expected_items=args.bloom_expected, shards=args.bloom_shards)
     return result
 
 
 def main() -> None:
-    args = build_args()
+    args = build_parser().parse_args()
     from luzzu_spark.session import DEFAULT_CONFS
 
     builder = SparkSession.builder.appName("luzzu_spark_filter")

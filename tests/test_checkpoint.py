@@ -599,6 +599,30 @@ def test_run_filter_cli_committed_state_preflight(spark, tmp_path):
     assert not (tmp_path / "none").exists()
 
 
+def test_run_filter_cli_neardup_index_preflight(spark, docs, tmp_path):
+    """--neardup-index is committed state too: with --repeat 2 the
+    run must raise before it writes anything, not after two full
+    passes into the output directory."""
+    import argparse
+
+    import pytest
+
+    import scripts.run_filter as rf
+
+    inp = str(tmp_path / "in")
+    docs.where("doc_id < 10").write.mode("overwrite").parquet(inp)
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="--neardup-index"):
+        rf.run_job(spark, argparse.Namespace(
+            input=inp, output=str(out), master=None, batch_size=2,
+            repeat=2, as_webpages=True, input_format=None,
+            input_schema=None, inject_pii=False, salt_buckets=0,
+            seen_table=None, commit_bucket_table=None, bucket_path=None,
+            n_buckets=4, json=False, bench=False,
+            neardup_index="nd_preflight"))
+    assert not out.exists()
+
+
 def test_run_filter_cli_bloom_sharded_flow(spark, tmp_path):
     """--seen-bloom-path --bloom-shards 4: the GB-scale index layout
     from the production entry point — day 2 still drops every

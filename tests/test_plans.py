@@ -61,6 +61,44 @@ def test_pipeline_single_arrow_stage(spark):
     assert "BatchEvalPython" not in plan, "no row-at-a-time Python"
 
 
+def test_assess_plan_building_round_trips(spark, monkeypatch):
+    """Building the assessment plan is driver work paid again for every
+    batch: the registry compiles each layer to one selectExpr over the
+    rules' SQL text, so assess() stays within a few hundred py4j round
+    trips (Column-builder rules took about 2,000)."""
+    import collections
+    import gc
+    import threading
+
+    import py4j.java_gateway as jg
+
+    pages = as_webpages(load_table(spark, SF, "documents"))
+    QualityPipeline().assess(pages)  # lazy imports and UDF set-up
+    me = threading.get_ident()
+    calls = []
+    send = jg.GatewayClient.send_command
+
+    def counting(self, command, *a, **k):
+        # only this thread's: other threads (callbacks of streams an
+        # earlier test started, say) may talk to the JVM meanwhile
+        if threading.get_ident() == me:
+            calls.append(command.split("\n", 3)[:3])
+        return send(self, command, *a, **k)
+
+    # the cycle collector frees py4j proxies whenever it happens to
+    # run, and each free is a round trip: keep it out of the window
+    gc.collect()
+    gc.disable()
+    try:
+        monkeypatch.setattr(jg.GatewayClient, "send_command", counting)
+        QualityPipeline().assess(pages)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    assert len(calls) <= 600, (len(calls), collections.Counter(
+        "|".join(c) for c in calls).most_common(8))
+
+
 def test_agg_is_partial_then_final(spark):
     li = load_table(spark, SF, "lineitem")
     agg = li.groupBy("l_returnflag").agg(F.sum("l_quantity"))

@@ -29,6 +29,13 @@ NASTY_TEXTS = [
     "@@@@ #### $$$$ %%%% ^^^^ &&&& **** (((( ))))",
     "\x00null\x00bytes\x00inside",
     "mixed 123 numbers 456 and http://urls.example.com/path?q=1",
+    # 24 words separated by whitespace that str.split() honours but
+    # Java's \s does not: NBSP, LINE SEPARATOR, NEL, IDEOGRAPHIC SPACE
+    # and FILE SEPARATOR
+    *(sep.join(("the quick brown fox jumps over the lazy dog and then "
+                "it runs to the old farm where the cows eat green "
+                "grass day").split())
+      for sep in ("\xa0", "\u2028", "\x85", "\u3000", "\x1c")),
 ]
 
 
@@ -58,6 +65,22 @@ def test_verdicts_match_oracle(spark, nasty_assessed):
         assert list(got.drop_reasons) == want["drop_reasons"], (
             i, text[:40], list(got.drop_reasons), want["drop_reasons"])
         assert got.keep == want["keep"], (i, text)
+
+
+def test_whitespace_class_is_str_isspace(spark):
+    """The rules' whitespace class holds exactly the characters for
+    which str.isspace() holds, over every code point (surrogates
+    aside: they do not encode)."""
+    from luzzu_spark.rules.heuristics import WS_CLASS
+    from luzzu_spark.rules.registry import sql_lit
+    texts = ["".join(chr(c) for c in range(lo, hi)
+                     if not 0xD800 <= c < 0xE000)
+             for lo, hi in ((0, 0x10000), (0x10000, 0x110000))]
+    got = [r[0] for r in spark.createDataFrame(
+        [(t,) for t in texts], "t string").selectExpr(
+        f"regexp_replace(t, {sql_lit(WS_CLASS)}, '')").collect()]
+    assert got == ["".join(ch for ch in t if not ch.isspace())
+                   for t in texts]
 
 
 def test_scrub_matches_and_idempotent(spark, nasty_assessed):

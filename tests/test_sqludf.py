@@ -14,9 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from luzzu_spark.rules.heuristics import (heuristic_rules, max_word_len,
-                                          mean_word_len, stopword_frac,
-                                          symbol_ratio,
+from luzzu_spark.rules.heuristics import (heuristic_rules,
                                           with_token_columns)
 from luzzu_spark.sqludf import register_sql_rules
 
@@ -41,7 +39,7 @@ def test_keep_parity_with_dataframe_rules(spark):
     d = with_token_columns(corpus)
     fires_any = None
     for r in heuristic_rules():
-        f = r.fires(r.score())
+        f = F.expr(r.inline_fire_sql)
         fires_any = f if fires_any is None else (fires_any | f)
     df_keep = d.select(
         "doc_id", (~F.coalesce(fires_any, F.lit(False))).alias("k_df"))
@@ -69,11 +67,13 @@ def test_scalar_rule_parity(spark):
                            "FROM sqludf_corpus").collect():
             got.setdefault(r["doc_id"], []).append(r["v"])
     got = {k: tuple(v) for k, v in got.items()}
+    score = {r.name: F.expr(r.score_sql) for r in heuristic_rules()}
     want = {r["doc_id"]: (r["m"], r["sr"], r["sf"], r["mx"])
             for r in with_token_columns(corpus).select(
-                "doc_id", mean_word_len().alias("m"),
-                symbol_ratio().alias("sr"), stopword_frac().alias("sf"),
-                max_word_len().cast("long").alias("mx")).collect()}
+                "doc_id", score["mean_word_len"].alias("m"),
+                score["symbol_ratio"].alias("sr"),
+                score["stopword_frac"].alias("sf"),
+                score["max_word_len"].cast("long").alias("mx")).collect()}
     assert got == want  # exact: identical expressions, identical floats
 
 
