@@ -604,15 +604,26 @@ def bloom_params(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
     return m, max(1, round(m / n * _BLOOM_LN2))
 
 
-def _bloom_positions(h1: np.ndarray, h2: np.ndarray, k: int,
-                     m_bits: int) -> np.ndarray:
-    """(rows, k) bit positions via double hashing h1 + i·h2 (uint64
-    wraparound) mod m — the Kirsch-Mitzenmacher scheme, deterministic
-    from the two xxhash64 values (no RNG, replayable anywhere)."""
+def _bloom_bits(h1: np.ndarray, h2: np.ndarray, k: int,
+                m_bits: int) -> tuple[np.ndarray, np.ndarray]:
+    """(byte index, bit mask), each (rows, k), of the k positions
+    h1 + i·h2 (uint64 wraparound) mod m — the Kirsch-Mitzenmacher
+    double-hashing scheme, deterministic from the two xxhash64 values
+    (no RNG, replayable anywhere)."""
     u1 = h1.astype(np.uint64)[:, None]
     u2 = h2.astype(np.uint64)[:, None]
     i = np.arange(k, dtype=np.uint64)[None, :]
-    return (u1 + i * u2) % np.uint64(m_bits)
+    pos = (u1 + i * u2) % np.uint64(m_bits)
+    return ((pos >> np.uint64(3)).astype(np.int64),
+            np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)))
+
+
+def _bloom_hits(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int,
+                m_bits: int) -> np.ndarray:
+    """bool per row: all k bits of (h1, h2) are set in bitmap ``bm``
+    (might-contain; never a false negative)."""
+    byte, mask = _bloom_bits(h1, h2, k, m_bits)
+    return ((bm[byte] & mask) != 0).all(axis=1)
 
 
 def _bloom_hash_cols(key_col) -> tuple:
@@ -620,48 +631,76 @@ def _bloom_hash_cols(key_col) -> tuple:
             F.xxhash64(key_col, F.lit(1)).alias("_h2"))
 
 
-def bloom_build(seen: DataFrame, key: str, m_bits: int, k: int) -> bytes:
-    """OR-merged Bloom bitmap over the seen keys. Tree-shaped merge:
-    each scan partition folds its rows into ONE m/8-byte bitmap
-    (mapInPandas — the key column is the only thing read), bitmaps OR
-    within 64 groups, then once more to a single row. The driver
-    receives exactly one bitmap — m/8 bytes by construction,
-    independent of corpus row count (allowlisted in plan_audit)."""
+def _bloom_shard_col(key_col, shards: int):
+    """Shard id of a key: a THIRD xxhash64 (seed 2), independent of the
+    two position hashes (seeds 0/1) — sharding on h1 itself would pin
+    every shard-s key's first bit position to a residue class of m."""
+    return F.pmod(F.xxhash64(key_col, F.lit(2)), F.lit(shards)).cast("int")
+
+
+def _bloom_project(df: DataFrame, key: str, shards: int,
+                   keep: tuple = ()) -> DataFrame:
+    """``keep`` + (_h1, _h2, _sh): the fixed-width hash projection of
+    ``key``. A sharded layout shuffles it once on (shard, h1 mod 8) so
+    each task holds ~one shard's rows (executor memory = one shard
+    bitmap, not the whole index); S=1 stays map-only."""
+    kc = F.col(key)
+    sh = _bloom_shard_col(kc, shards) if shards > 1 else F.lit(0)
+    out = df.select(*keep, *_bloom_hash_cols(kc), sh.alias("_sh"))
+    if shards > 1:
+        out = out.repartition(F.col("_sh"), F.pmod(F.col("_h1"), F.lit(8)))
+    return out
+
+
+def bloom_bitmaps(keys: DataFrame, key: str, m_bits: int, k: int,
+                  shards: int = 1):
+    """Yield (shard, bitmap bytes) for every shard that holds a key.
+    Tree-shaped OR-merge: each partition folds its rows into ONE m/8-byte
+    bitmap per shard (mapInPandas — the key column is the only thing
+    read), partial bitmaps OR within (shard, partition % 64) groups,
+    then once more per shard. The driver consumes the result through
+    toLocalIterator — peak ONE shard bitmap (m/8 bytes by construction,
+    independent of corpus row count), never the full index: the
+    property that lets a 100 B-key lifetime index commit from a normal
+    driver."""
     nbytes = m_bits // 8
-    hashed = seen.select(*_bloom_hash_cols(F.col(key)),
-                         (F.spark_partition_id() % 64).alias("_gid"))
+    hashed = (_bloom_project(keys, key, shards)
+              .withColumn("_gid", F.spark_partition_id() % 64))
 
     def fold(batches):
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        gid, any_rows = 0, False
+        bms: dict[tuple[int, int], np.ndarray] = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
-            any_rows = True
-            gid = int(pdf["_gid"].iloc[0])
-            pos = _bloom_positions(pdf["_h1"].to_numpy(),
-                                   pdf["_h2"].to_numpy(),
-                                   k, m_bits).reshape(-1)
-            np.bitwise_or.at(
-                bm, (pos >> np.uint64(3)).astype(np.int64),
-                np.left_shift(np.uint8(1),
-                              (pos & np.uint64(7)).astype(np.uint8)))
-        if any_rows:
-            yield pd.DataFrame({"_gid": [gid], "_bm": [bm.tobytes()]})
+            for (s, g), grp in pdf.groupby(["_sh", "_gid"]):
+                bm = bms.setdefault((int(s), int(g)),
+                                    np.zeros(nbytes, dtype=np.uint8))
+                byte, mask = _bloom_bits(grp["_h1"].to_numpy(),
+                                         grp["_h2"].to_numpy(), k, m_bits)
+                np.bitwise_or.at(bm, byte.reshape(-1), mask.reshape(-1))
+        if bms:
+            yield pd.DataFrame({"_sh": [s for s, _g in bms],
+                                "_gid": [g for _s, g in bms],
+                                "_bm": [b.tobytes() for b in bms.values()]})
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         bm = np.zeros(nbytes, dtype=np.uint8)
         for b in pdf["_bm"]:
             bm |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"_gid": [0], "_bm": [bm.tobytes()]})
+        return pdf.iloc[:1].assign(_bm=[bm.tobytes()])
 
-    schema = "_gid int, _bm binary"
-    lvl1 = (hashed.mapInPandas(fold, schema=schema)
-            .groupBy("_gid").applyInPandas(merge, schema=schema))
-    final = (lvl1.withColumn("_g", F.lit(0)).groupBy("_g")
-             .applyInPandas(merge, schema=schema))
-    bitmap_rows = final.collect()  # bounded: ≤1 row of m/8 bytes
-    return bitmap_rows[0]["_bm"] if bitmap_rows else bytes(nbytes)
+    schema = "_sh int, _gid int, _bm binary"
+    merged = (hashed.mapInPandas(fold, schema=schema)
+              .groupBy("_sh", "_gid").applyInPandas(merge, schema=schema)
+              .groupBy("_sh").applyInPandas(merge, schema=schema))
+    # driver-incremental: one (shard, m/8-byte) row at a time
+    for row in merged.toLocalIterator():
+        yield int(row["_sh"]), row["_bm"]
+
+
+def bloom_build(seen: DataFrame, key: str, m_bits: int, k: int) -> bytes:
+    """OR-merged Bloom bitmap over the seen keys — the single-bitmap
+    case of bloom_bitmaps (all zeros when ``seen`` is empty)."""
+    return dict(bloom_bitmaps(seen, key, m_bits, k)).get(
+        0, bytes(m_bits // 8))
 
 
 def _bloom_membership_col(spark, bloom: bytes, k: int, m_bits: int,
@@ -677,22 +716,11 @@ def _bloom_membership_col(spark, bloom: bytes, k: int, m_bits: int,
     @pandas_udf("boolean")
     def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
         bm = np.frombuffer(bc.value, dtype=np.uint8)
-        pos = _bloom_positions(h1.to_numpy(), h2.to_numpy(), k, m_bits)
-        hits = (bm[(pos >> np.uint64(3)).astype(np.int64)]
-                & np.left_shift(np.uint8(1),
-                                (pos & np.uint64(7)).astype(np.uint8))
-                ) != 0
-        return pd.Series(hits.all(axis=1), index=h1.index)
+        return pd.Series(_bloom_hits(bm, h1.to_numpy(), h2.to_numpy(),
+                                     k, m_bits), index=h1.index)
 
     h1, h2 = _bloom_hash_cols(key_col)
     return might_contain.asNondeterministic()(h1, h2)
-
-
-def _bloom_shard_col(key_col, shards: int):
-    """Shard id of a key: a THIRD xxhash64 (seed 2), independent of the
-    two position hashes (seeds 0/1) — sharding on h1 itself would pin
-    every shard-s key's first bit position to a residue class of m."""
-    return F.pmod(F.xxhash64(key_col, F.lit(2)), F.lit(shards))
 
 
 def _bloom_shard_file(path: str, shard: int, shards: int) -> str:
@@ -702,63 +730,10 @@ def _bloom_shard_file(path: str, shard: int, shards: int) -> str:
     return _os.path.join(path, f"shard_{shard:05d}.bin")
 
 
-def _bloom_build_shards(seen: DataFrame, key: str, m_bits: int, k: int,
-                        shards: int):
-    """Yield (shard_id, bitmap_bytes) for every shard PRESENT in
-    ``seen`` — the sharded twin of bloom_build. The hash projection
-    (h1, h2, shard: 24 B/row) shuffles once on (shard, salt) so each
-    fold task holds bitmaps for ~1 shard (executor memory = one shard,
-    not the whole index); per-shard partial bitmaps merge in one
-    grouped stage (≤ salt·collisions rows each); the driver consumes
-    the result through toLocalIterator — peak ONE shard bitmap, never
-    the full index (the property that lets a 100 B-key lifetime index
-    commit from a normal driver)."""
-    nbytes = m_bits // 8
-    hashed = (seen.select(
-        *_bloom_hash_cols(F.col(key)),
-        _bloom_shard_col(F.col(key), shards).cast("int").alias("_sh"))
-        .repartition(F.col("_sh"), F.pmod(F.col("_h1"), F.lit(8))))
-
-    def fold(batches):
-        bms: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for s, grp in pdf.groupby("_sh"):
-                bm = bms.setdefault(int(s),
-                                    np.zeros(nbytes, dtype=np.uint8))
-                pos = _bloom_positions(grp["_h1"].to_numpy(),
-                                       grp["_h2"].to_numpy(),
-                                       k, m_bits).reshape(-1)
-                np.bitwise_or.at(
-                    bm, (pos >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(np.uint8(1),
-                                  (pos & np.uint64(7)).astype(np.uint8)))
-        if bms:
-            yield pd.DataFrame({"_sh": list(bms),
-                                "_bm": [b.tobytes()
-                                        for b in bms.values()]})
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        for b in pdf["_bm"]:
-            bm |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"_sh": [int(pdf["_sh"].iloc[0])],
-                             "_bm": [bm.tobytes()]})
-
-    schema = "_sh int, _bm binary"
-    merged = (hashed.mapInPandas(fold, schema=schema)
-              .groupBy("_sh").applyInPandas(merge, schema=schema))
-    # driver-incremental: one (shard, m/8-byte) row at a time
-    for row in merged.toLocalIterator():
-        yield int(row["_sh"]), row["_bm"]
-
-
 def bloom_index_commit(df: DataFrame, key: str, path: str,
                        fpp: float = 0.01,
                        expected_items: int | None = None,
                        shards: int = 1,
-                       count_items: bool = True,
                        epoch_id: int | None = None) -> dict:
     """Persist (or update) a Bloom index of the seen keys at ``path``
     — the mode where the BITMAP ITSELF is the cross-run state (the
@@ -775,26 +750,22 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
     ``shards`` (create-time only): past GB-scale bitmaps (≥ ~10⁹ keys
     at 1%), one driver-held/broadcast bitmap stops fitting — S shards
     split the index into S files of (lifetime/S)-sized bitmaps, keyed
-    by an independent hash of the key. Commit then streams ONE shard
-    at a time through the driver (toLocalIterator) and the filter
-    loads exactly one shard per task (see bloom_index_filter). Size S
-    so a shard is ~256 MB–1 GB; S=1 (default) keeps the single-file
-    layout and the map-only filter path.
+    by an independent hash of the key. Commit streams ONE shard at a
+    time through the driver (bloom_bitmaps) and the filter loads
+    exactly one shard per task (see bloom_index_filter). Size S so a
+    shard is ~256 MB–1 GB; S=1 (default) keeps the single-file layout
+    and the map-only filter path.
 
     Atomicity: each bitmap file is written to a temp file then
     os.replace'd — a crashed commit leaves every previous bitmap
     intact (meta, written last, still under-counts: harmless, the
     fill warning fires later), and a REPLAYED commit is idempotent by
-    construction (OR of the same keys is a no-op). A caller that KNOWS
-    it is re-committing already-counted keys (a replayed streaming
-    epoch) passes ``count_items=False`` so the fill counter doesn't
-    double-count (and the count job is skipped). Callers WITH a stable
-    monotone epoch (the streaming sink) pass ``epoch_id`` instead:
-    meta records the last counted epoch, so a replayed commit — even
-    one whose first attempt crashed between writing the bitmaps and
-    the meta — counts each epoch's keys exactly once (review r05: the
-    marker-based count_items=fresh heuristic under-counted on a crash
-    between the marker write and the commit, forever)."""
+    construction (OR of the same keys is a no-op). Callers with a
+    stable monotone epoch (the streaming sink) pass ``epoch_id``: meta
+    records the last counted epoch, so a replayed commit — even one
+    whose first attempt crashed between writing the bitmaps and the
+    meta — counts each epoch's keys exactly once (and skips the count
+    job)."""
     import json as _json
     import os as _os
     meta_p = _os.path.join(path, "meta.json")
@@ -820,9 +791,7 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
         created = True
     if epoch_id is not None and int(epoch_id) <= int(
             meta.get("last_epoch", -1)):
-        count_items = False    # replay of an already-counted epoch
-    if not count_items:
-        n_new = 0
+        n_new = 0    # replay of an already-counted epoch
     elif n_new is None:
         n_new = df.count()
     nbytes = m_bits // 8
@@ -844,18 +813,13 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
             f.write(base.tobytes())
         _os.replace(tmp, fpath)
 
-    if shards == 1:
-        write_shard(0, bloom_build(df.select(key), key, m_bits, k))
-    else:
-        touched = set()
-        for s, bm in _bloom_build_shards(df.select(key), key,
-                                         m_bits, k, shards):
-            write_shard(s, bm)
-            touched.add(s)
-        if created:
-            for s in range(shards):    # zero files for absent shards
-                if s not in touched:
-                    write_shard(s, None)
+    touched = set()
+    for s, bm in bloom_bitmaps(df.select(key), key, m_bits, k, shards):
+        write_shard(s, bm)
+        touched.add(s)
+    if created:
+        for s in set(range(shards)) - touched:  # zero files, absent shards
+            write_shard(s, None)
     meta["committed_items"] = int(meta["committed_items"]) + int(n_new)
     if epoch_id is not None:
         meta["last_epoch"] = max(int(meta.get("last_epoch", -1)),
@@ -916,10 +880,7 @@ def bloom_index_filter(batch: DataFrame, path: str,
                 .where(~F.col("_maybe_seen")).drop("_maybe_seen"))
 
     out_cols = list(batch.columns)
-    hashed = (batch.select(
-        "*", *_bloom_hash_cols(F.col(key)),
-        _bloom_shard_col(F.col(key), shards).cast("int").alias("_sh"))
-        .repartition(F.col("_sh"), F.pmod(F.col("_h1"), F.lit(8))))
+    hashed = _bloom_project(batch, key, shards, keep=("*",))
 
     def survivors(batches):
         cache: dict[int, np.ndarray] = {}
@@ -934,15 +895,9 @@ def bloom_index_filter(batch: DataFrame, path: str,
                                                 shards), "rb") as f:
                         bm = np.frombuffer(f.read(), dtype=np.uint8)
                     cache[int(s)] = bm
-                pos = _bloom_positions(grp["_h1"].to_numpy(),
-                                       grp["_h2"].to_numpy(),
-                                       k, m_bits)
-                hits = (bm[(pos >> np.uint64(3)).astype(np.int64)]
-                        & np.left_shift(
-                            np.uint8(1),
-                            (pos & np.uint64(7)).astype(np.uint8))
-                        ) != 0
-                maybe.loc[grp.index] = hits.all(axis=1)
+                maybe.loc[grp.index] = _bloom_hits(
+                    bm, grp["_h1"].to_numpy(), grp["_h2"].to_numpy(),
+                    k, m_bits)
             yield pdf.loc[~maybe, out_cols]
 
     return hashed.mapInPandas(survivors, schema=batch.schema)
@@ -1001,23 +956,24 @@ def _para_instances(docs: DataFrame, id_col: str,
         .withColumn("_ph", F.md5("_para")))
 
 
-def _rebuild_from_marked(docs: DataFrame, marked: DataFrame,
-                         id_col: str, text_col: str) -> DataFrame:
-    """Rebuild ``text_col`` from the instances of ``marked`` where
-    ``_rm`` is false — every doc keeps its group row (nulls skip
-    collect_list), so a fully-excised doc rebuilds to '' rather than
-    silently reverting to its original text; NULL-text docs have no
-    instances and pass through via the coalesce."""
-    kept_struct = F.when(~F.col("_rm"), F.struct("_pos", "_para"))
-    rebuilt = (marked.groupBy("_id")
+def _rebuild_from_kept(docs: DataFrame, kept: DataFrame,
+                       id_col: str, text_col: str) -> DataFrame:
+    """Rebuild ``text_col`` from the ``kept`` paragraph instances
+    (``_id``, ``_pos``, ``_para``) in position order — the one rebuild
+    of the paragraph-granular dedup family. A non-NULL doc with no
+    kept instance was fully excised and rebuilds to '' (never silently
+    reverting to its original text); NULL text stays NULL."""
+    rebuilt = (kept.groupBy("_id")
                .agg(F.array_join(
                    F.transform(
-                       F.array_sort(F.collect_list(kept_struct)),
+                       F.array_sort(F.collect_list(
+                           F.struct("_pos", "_para"))),
                        lambda x: x["_para"]),
                    "\n\n").alias("_rebuilt")))
     return (docs.join(rebuilt, docs[id_col] == rebuilt["_id"], "left")
             .withColumn(text_col,
-                        F.coalesce("_rebuilt", F.col(text_col)))
+                        F.when(F.col(text_col).isNotNull(),
+                               F.coalesce("_rebuilt", F.lit(""))))
             .drop("_id", "_rebuilt"))
 
 
@@ -1063,14 +1019,10 @@ def seen_bloom_paragraph_scrub(batch: DataFrame, seen: DataFrame,
                                    F.col("_ph"))
              & (F.length("_para") > 0))
     flagged = inst.withColumn("_maybe", maybe)
-    novel = (flagged.where(~F.col("_maybe"))
-             .withColumn("_rm", F.lit(False)))
     cand = (flagged.where(F.col("_maybe"))
-            .join(seen_ph.withColumn("_t", F.lit(True)), "_ph", "left")
-            .withColumn("_rm", F.coalesce("_t", F.lit(False)))
-            .drop("_t"))
-    marked = novel.unionByName(cand).drop("_maybe")
-    return _rebuild_from_marked(batch, marked, id_col, text_col)
+            .join(seen_ph, "_ph", "left_anti"))
+    kept = flagged.where(~F.col("_maybe")).unionByName(cand)
+    return _rebuild_from_kept(batch, kept, id_col, text_col)
 
 
 def bloom_paragraph_commit(docs: DataFrame, path: str,
@@ -1109,28 +1061,10 @@ def bloom_paragraph_filter(docs: DataFrame, path: str,
     through. Sharded indexes work unchanged (the instance rows carry
     fixed-width digests through the one shard shuffle)."""
     inst = _para_instances(docs, id_col, text_col)
-    # bloom_index_filter DROPS might-contain rows, so a fully-excised
-    # doc keeps NO instance and loses its rebuild group row — the
-    # nullability guard below turns that absence into '' (only
-    # NULL-text docs have no instances for any other reason)
     kept = (bloom_index_filter(inst.where(F.length("_para") > 0),
                                path, "_ph")
             .unionByName(inst.where(F.length("_para") == 0)))
-    rebuilt = (kept.groupBy("_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("_pos", "_para"))),
-                       lambda x: x["_para"]),
-                   "\n\n").alias("_rebuilt")))
-    return (docs.join(rebuilt, docs[id_col] == rebuilt["_id"], "left")
-            .withColumn(
-                text_col,
-                # no kept instance + non-NULL text = fully excised
-                F.when(F.col(text_col).isNull(),
-                       F.lit(None).cast("string"))
-                 .otherwise(F.coalesce("_rebuilt", F.lit(""))))
-            .drop("_id", "_rebuilt"))
+    return _rebuild_from_kept(docs, kept, id_col, text_col)
 
 
 def commit_minhash_index(docs: DataFrame, sigs_table: str,
@@ -1689,7 +1623,7 @@ def remove_cross_doc_paragraphs(docs: DataFrame,
     inst = _para_instances(docs, id_col, text_col)
     w = Window.partitionBy("_ph")
     wo = w.orderBy("_id", "_pos")
-    marked = inst.select(
+    kept = inst.select(
         "_id", "_pos", "_para",
         # length > 0: consecutive blank lines / trailing \n\n split
         # into EMPTY paragraphs, which every multi-blank-line doc
@@ -1697,8 +1631,9 @@ def remove_cross_doc_paragraphs(docs: DataFrame,
         # in docs that share no actual text (review r04)
         ((F.length("_para") > 0)
          & (F.min("_id").over(w) != F.max("_id").over(w))
-         & (F.row_number().over(wo) > 1)).alias("_rm"))
-    return _rebuild_from_marked(docs, marked, id_col, text_col)
+         & (F.row_number().over(wo) > 1)).alias("_rm")
+    ).where(~F.col("_rm"))
+    return _rebuild_from_kept(docs, kept, id_col, text_col)
 
 
 def remove_dup_spans(docs: DataFrame, n: int = 20,

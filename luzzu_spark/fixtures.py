@@ -34,7 +34,14 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     At production scale the input arrives as thousands of splits, the
     partition count already exceeds parallelism, and this is a no-op (no
     shuffle added). Only under-parallel inputs pay the one round-robin
-    shuffle, whose cost is proportional to the (small) input."""
+    shuffle, whose cost is proportional to the (small) input.
+
+    Streaming frames pass through unchanged: repartition-by-number is
+    not valid pre-aggregation in a stream, and micro-batch file splits
+    already set parallelism (each foreachBatch micro-batch is a static
+    frame and is spread like any other batch)."""
+    if df.isStreaming:
+        return df
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
@@ -68,7 +75,17 @@ def as_webpages(docs: DataFrame, inject_pii: bool = False) -> DataFrame:
 
     With ``inject_pii`` a deterministic subset of rows (doc_id % k) gets
     seeded emails/phones/IPs/SSNs appended — the scrub-pass test corpus.
+
+    Raises ValueError when ``docs`` already has a ``url`` column: this
+    synthesizes url/warc_ts/html from doc_id and drops every other
+    column, so applying it to real crawl pages would silently overwrite
+    their urls with example.com synthetics and lose robots_noindex.
     """
+    if "url" in docs.columns:
+        raise ValueError(
+            "as_webpages on an input that already has a url column: it "
+            "synthesizes fixture pages and would overwrite the real "
+            "crawl columns — drop --as-webpages")
     text = F.col("text")
     if inject_pii:
         text = F.concat(text, pii_suffix_expr())

@@ -82,9 +82,9 @@ class QualityPipeline:
     # order: line filtering, then doc-level rules). Off by default —
     # the frozen RULESPEC byte-identity contract assumes raw text.
     line_scrub: bool = False
-    repartition_salted: bool = False  # enable for skewed prod inputs
-    num_partitions: int | None = None
-    auto_spread: bool = True  # lift under-parallel inputs to core count
+    # > 0: salted host repartitioning over this many salt buckets (for
+    # skewed prod inputs); 0 lifts under-parallel inputs to core count
+    salt_buckets: int = 0
 
     def assess(self, pages: DataFrame) -> DataFrame:
         """Full per-row assessment: scores, verdict, scrubbed text."""
@@ -93,9 +93,9 @@ class QualityPipeline:
         keep_cols = [c for c in pages.columns
                      if c in deps or c in LINEAGE_COLS]
         df = pages.select(*keep_cols)
-        if self.repartition_salted and "url" in df.columns:
-            df = salted_repartition(df, self.num_partitions)
-        elif self.auto_spread:
+        if self.salt_buckets > 0 and "url" in df.columns:
+            df = salted_repartition(df, salt_buckets=self.salt_buckets)
+        else:
             df = spread(df)
         if self.line_scrub:
             from luzzu_spark.rules.scrub import c4_line_scrub_expr

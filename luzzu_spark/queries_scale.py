@@ -269,10 +269,10 @@ SELECT user_id,
 FROM marked GROUP BY user_id ORDER BY user_id
 """)
 def events_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization via gaps-and-islands (lag + flag-sum) — the
-    oracle-checkable twin of the streaming session_window operator
-    (streaming.session_event_counts). One shuffle on user_id; the sort
-    within each partition feeds both the lag and the count.
+    """Batch sessionization via gaps-and-islands (lag + flag-sum): a
+    user's session closes after 30 minutes of silence, the semantics of
+    Spark's session_window. One shuffle on user_id; the sort within
+    each partition feeds both the lag and the count.
 
     The gap compares EXACT epoch MICROSECONDS on both engines (review
     r05, same class as window_range_time_sum): Spark unix_timestamp

@@ -76,22 +76,9 @@ def scrub_expr(col: Column | str = "text") -> Column:
     return F.when(c.rlike(COMBINED_PROBE), chained).otherwise(c)
 
 
-def scrub_flags(col: Column | str = "text") -> dict[str, Column]:
-    """Per-step fired? booleans (evaluated on the PRE-scrub text)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return {f"scrub_{name}": c.rlike(pat) for name, pat, _ in ALL_STEPS}
-
-
-def with_scrub(df: DataFrame, text_col: str = "text",
-               out_col: str = "text_scrubbed",
-               flags: bool = False) -> DataFrame:
-    """flags=True additionally attaches per-step scrub_<name> booleans
-    (5 extra regex passes/row — reporting runs only; the hot filter path
-    leaves them off)."""
-    cols = {out_col: scrub_expr(text_col)}
-    if flags:
-        cols.update(scrub_flags(text_col))
-    return df.withColumns(cols)
+def with_scrub(df: DataFrame) -> DataFrame:
+    """Attach ``text_scrubbed``: the scrub chain over ``text``."""
+    return df.withColumn("text_scrubbed", scrub_expr("text"))
 
 
 # -- plain-Python twin (used by the pandas oracle and property tests) -----

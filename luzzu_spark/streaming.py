@@ -43,16 +43,9 @@ def assess_stream(pages: DataFrame,
 
     Works unchanged because every pipeline stage is a stateless
     projection/filter (scores, UDFs, verdict, scrub) — no global agg
-    inside assess(). auto_spread is disabled on a COPY of the supplied
-    pipeline (dataclasses.replace — mutating the argument would
-    silently strip auto_spread from a shared instance's later batch
-    use, ADVICE r1): repartition-by-number is not valid
-    pre-aggregation in a stream, and micro-batch file splits already
-    set parallelism."""
-    import dataclasses
-    pipe = (dataclasses.replace(pipeline, auto_spread=False)
-            if pipeline is not None else QualityPipeline(auto_spread=False))
-    return pipe.assess(pages)
+    inside assess(), and fixtures.spread passes a streaming frame
+    through untouched."""
+    return (pipeline or QualityPipeline()).assess(pages)
 
 
 def windowed_verdict_counts(assessed: DataFrame, ts_col: str = "warc_ts",
@@ -73,25 +66,6 @@ def windowed_verdict_counts(assessed: DataFrame, ts_col: str = "warc_ts",
                     "n_docs", "n_keep"))
 
 
-def sliding_event_counts(events: DataFrame, window: str = "10 minutes",
-                         slide: str = "5 minutes",
-                         watermark: str = "30 minutes") -> DataFrame:
-    """Sliding-window stream agg (each event in window/slide windows);
-    batch twin: queries_scale.events_sliding_10x5. State per open
-    window is bounded by the watermark horizon; the overlap factor
-    (window/slide) multiplies state size — the knob to watch at scale.
-
-    ts arrives as TIMESTAMP_NTZ from the parquet fixture; watermarks
-    require TIMESTAMP, so cast first (UTC session tz → same instant)."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (ev.withWatermark("ts", watermark)
-            .groupBy(F.window(F.col("ts"), window, slide).alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.unix_timestamp("w.start").alias("window_start"),
-                    "n_events", "sum_value"))
-
-
 def stream_dedup_urls(pages: DataFrame, ts_col: str = "warc_ts",
                       watermark: str = "30 minutes") -> DataFrame:
     """Seen-URL dedup with bounded state: keeps the first occurrence of
@@ -99,108 +73,6 @@ def stream_dedup_urls(pages: DataFrame, ts_col: str = "warc_ts",
     row_number()-over-url (queries.dedup_first_doc_per_source)."""
     return (pages.withWatermark(ts_col, watermark)
             .dropDuplicatesWithinWatermark(["url"]))
-
-
-def session_event_counts(events: DataFrame, gap: str = "30 minutes",
-                         watermark: str = "1 hour") -> DataFrame:
-    """Session windows over the events stream (SURVEY.md §2.8): activity
-    sessions close after `gap` of silence per user.
-
-    ts arrives as TIMESTAMP_NTZ from the parquet fixture; watermarks
-    require TIMESTAMP, so cast first (UTC session tz → same instant)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.session_window(F.col("ts"), gap).alias("s"),
-                     F.col("user_id"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select("user_id",
-                    F.col("s.start").alias("session_start"),
-                    F.col("s.end").alias("session_end"),
-                    "n_events", "sum_value"))
-
-
-def view_to_click_join(views: DataFrame, clicks: DataFrame,
-                       horizon: str = "10 minutes",
-                       watermark: str = "30 minutes") -> DataFrame:
-    """Stream-stream INTERVAL join (SURVEY.md §2.8 family): each view
-    joins the same user's clicks landing within `horizon` after it —
-    the attribution-window shape (impression→conversion).
-
-    State contract: BOTH sides carry watermarks and the join condition
-    time-bounds the match (click_ts in [view_ts, view_ts + horizon]),
-    so Spark can evict buffered rows once the watermark passes the
-    bound — without the time bound a stream-stream inner join would
-    buffer both streams forever. The same builder runs in batch for
-    the parity twin (tests/test_streaming.py)."""
-    v = (views.withColumn("ts", F.col("ts").cast("timestamp"))
-         .withWatermark("ts", watermark)
-         .select(F.col("user_id").alias("v_user"),
-                 F.col("event_id").alias("view_id"),
-                 F.col("ts").alias("view_ts")))
-    c = (clicks.withColumn("ts", F.col("ts").cast("timestamp"))
-         .withWatermark("ts", watermark)
-         .select(F.col("user_id").alias("c_user"),
-                 F.col("event_id").alias("click_id"),
-                 F.col("ts").alias("click_ts")))
-    return (v.join(
-        c, (F.col("v_user") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts")
-           + F.expr(f"INTERVAL {horizon}")))
-        .select(F.col("v_user").alias("user_id"), "view_id", "click_id",
-                F.unix_timestamp("view_ts").alias("view_epoch"),
-                F.unix_timestamp("click_ts").alias("click_epoch")))
-
-
-def enrich_with_static(stream_df: DataFrame, dim: DataFrame,
-                       key: str = "event_type") -> DataFrame:
-    """Stream-STATIC join (SURVEY.md §2.8 family): each micro-batch
-    joins the static dimension — no watermark or state needed, because
-    the static side is fully known; Spark broadcasts it into every
-    batch. The 100 TB shape: a slowly-changing reference table
-    (source reputation, host metadata) enriches the live crawl stream
-    without any stream-side buffering. Same builder runs in batch for
-    the parity twin (tests/test_streaming.py).
-
-    LEFT join (ADVICE r03): events whose key is missing from the
-    dimension pass through with NULL enrichment columns instead of
-    silently vanishing — enrichment must never act as a filter."""
-    return stream_df.join(F.broadcast(dim), key, "left")
-
-
-def stateful_user_totals(events: DataFrame,
-                         watermark: str = "1 hour") -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): running
-    per-user event count + value sum, emitted each micro-batch.
-
-    This is Luzzu's incremental metric fold made explicit — per-key
-    state carries (n, sum) across batches exactly like a metric
-    object's accumulators across `compute(quad)` calls, and each
-    micro-batch emits the updated `metricValue()`. State is bounded by
-    the key cardinality (per-user), not the stream length."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "sum_value": [round(s, 2)]})
-
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (ev.withWatermark("ts", watermark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fn,
-                outputStructType="user_id bigint, n_events bigint, "
-                                 "sum_value double",
-                stateStructType="n bigint, s double",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
 
 
 def write_epoch_idempotent(df: DataFrame, out_path: str,
@@ -244,10 +116,7 @@ def write_stream_filtered(pages: DataFrame, out_path: str,
     checkpoint.ResumableRun's manifest.
 
     Streaming twin of pipeline.write_filtered + checkpoint.ResumableRun."""
-    import dataclasses
-    pipe = (dataclasses.replace(pipeline, auto_spread=False)
-            if pipeline is not None
-            else QualityPipeline(auto_spread=False))
+    pipe = pipeline or QualityPipeline()
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         write_epoch_idempotent(pipe.filtered(batch_df), out_path,
@@ -281,13 +150,9 @@ def write_stream_filtered_neardup(pages: DataFrame, out_path: str,
     tables, so the index row count is invariant under replay
     (VERDICT r03 item 5; pinned by the replay test in
     tests/test_streaming.py)."""
-    import dataclasses
-
     from luzzu_spark.dedup import (commit_minhash_index,
                                    incremental_near_dup_filter)
-    pipe = (dataclasses.replace(pipeline, auto_spread=False)
-            if pipeline is not None
-            else QualityPipeline(auto_spread=False))
+    pipe = pipeline or QualityPipeline()
     sigs_t = f"{index_prefix}_sigs"
     bands_t = f"{index_prefix}_bands"
 
@@ -362,16 +227,13 @@ def write_stream_filtered_bloom(pages: DataFrame, out_path: str,
       deterministic first-wins row before the bitmap filter (the
       bitmap only knows PRIOR epochs, so a same-batch recrawl would
       otherwise write both copies permanently)."""
-    import dataclasses
     import json as _json
     import os
 
     from pyspark.errors import AnalysisException
 
     from luzzu_spark.dedup import bloom_index_commit, bloom_index_filter
-    pipe = (dataclasses.replace(pipeline, auto_spread=False)
-            if pipeline is not None
-            else QualityPipeline(auto_spread=False))
+    pipe = pipeline or QualityPipeline()
 
     def fingerprint(df: DataFrame) -> dict:
         # order-independent and replay-stable: same rows -> same

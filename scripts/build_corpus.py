@@ -202,16 +202,6 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     # without one — same fallback run_filter.py uses)
     schema = DOCUMENTS_SCHEMA if fmt in ("json", "csv") else None
     pages = read_corpus(spark, args.input, fmt=fmt, schema=schema)
-    if args.as_webpages and "url" in pages.columns:
-        # as_webpages is the FIXTURE decorator: it synthesizes
-        # url/warc_ts/html from doc_id and drops every other column —
-        # applying it to real crawl data would silently overwrite real
-        # urls with example.com synthetics and lose robots_noindex
-        # (review r05; sources.read_wet documents the same trap)
-        raise ValueError(
-            "--as-webpages on an input that already has a url column: "
-            "the flag synthesizes fixture pages and would overwrite "
-            "the real crawl columns — drop the flag")
     if args.as_webpages or "url" not in pages.columns:
         pages = as_webpages(pages, inject_pii=args.inject_pii)
 

@@ -53,13 +53,10 @@ _DRIVER_MAT_ALLOWED = {
      ".where(\"col_name = 'Location'\").collect())"):
         "DESCRIBE FORMATTED metadata — ≤ a few dozen catalog rows, "
         "never data rows",
-    ("luzzu_spark/dedup.py", "bitmap_rows = final.collect()"):
-        "exactly one Bloom bitmap row of m/8 bytes (sized by "
-        "fpp/expected_items), independent of corpus row count",
     ("luzzu_spark/dedup.py", "for row in merged.toLocalIterator()"):
-        "sharded Bloom commit: ≤shards rows of one shard bitmap "
-        "(m/8 bytes) each, consumed ONE at a time — driver peak is a "
-        "single shard regardless of index size",
+        "Bloom bitmaps: ≤shards rows of one shard bitmap (m/8 bytes, "
+        "sized by fpp/expected_items) each, consumed ONE at a time — "
+        "driver peak is a single shard regardless of index size",
     ("luzzu_spark/dedup.py",
      'spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}'):
         "catalog metadata — a handful of property rows per index "
@@ -93,6 +90,21 @@ def driver_materialization_hits(repo: str = REPO) -> list[str]:
                         continue
                     hits.append(f"{rel}:{i}: {line.strip()[:80]}")
     return hits
+
+
+def stale_allowlist_entries(repo: str = REPO) -> list[str]:
+    """_DRIVER_MAT_ALLOWED entries that match no line of their file —
+    an allowance left behind by a deleted call site."""
+    stale = []
+    for rel, sub in sorted(_DRIVER_MAT_ALLOWED):
+        try:
+            with open(os.path.join(repo, rel)) as f:
+                live = any(sub in line for line in f)
+        except FileNotFoundError:
+            live = False
+        if not live:
+            stale.append(f"{rel}: {sub}")
+    return stale
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -193,6 +205,7 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
                 f"| {name} | {c['xchg']} | {c['bhj']} | {c['smj']} "
                 f"| {c['arrow']} | {c['sort']} | {bad} |")
     mat = driver_materialization_hits()
+    stale = stale_allowlist_entries()
     lines += ["",
               f"Flagged queries: {flagged or 'none'}.",
               "",
@@ -200,7 +213,9 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
               ".toPandas() in luzzu_spark/): "
               + (("FLAGGED: " + "; ".join(mat)) if mat else "none — "
                  "every call site is allow-listed with its bound "
-                 "(scripts/plan_audit.py:_DRIVER_MAT_ALLOWED).")]
+                 "(scripts/plan_audit.py:_DRIVER_MAT_ALLOWED).")
+              + (" STALE allowlist entries: " + "; ".join(stale)
+                 if stale else "")]
     return "\n".join(lines) + "\n"
 
 

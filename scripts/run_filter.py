@@ -71,7 +71,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "documents corpus shape)")
     p.add_argument("--inject-pii", action="store_true")
     p.add_argument("--salt-buckets", type=int, default=0,
-                   help=">0 enables salted host repartitioning")
+                   help=">0 enables salted host repartitioning over "
+                        "this many salt buckets")
     p.add_argument("--seen-table", default=None,
                    help="bucketed corpus table from a previous run "
                         "(--commit-bucket-table); incoming pages whose "
@@ -252,8 +253,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
     pipe = QualityPipeline(
         registry=registry,
         line_scrub=args.line_scrub,
-        repartition_salted=args.salt_buckets > 0,
-        num_partitions=None)
+        salt_buckets=args.salt_buckets)
     fmt = args.input_format or sniff_format(args.input)
     schema = (args.input_schema or DOCUMENTS_SCHEMA) \
         if fmt in ("json", "csv") else None
@@ -326,6 +326,8 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
         return partition_lineage(assessed)
 
     corpus = read_corpus(spark, args.input, schema=schema, fmt=fmt)
+    if args.as_webpages:
+        as_webpages(corpus)   # raises on real crawl urls before any write
     n_noindex = None
     if args.drop_noindex:
         if "robots_noindex" not in corpus.columns:

@@ -623,6 +623,26 @@ def test_run_filter_cli_neardup_index_preflight(spark, docs, tmp_path):
     assert not out.exists()
 
 
+@pytest.mark.parametrize("entry", ["run_job", "build"])
+def test_as_webpages_refuses_real_urls(spark, docs, tmp_path, entry):
+    """--as-webpages on page-shaped input (it already has a url column)
+    raises before anything is written: the fixture decorator would
+    overwrite the real crawl urls with example.com synthetics."""
+    import argparse
+
+    import scripts.build_corpus as bc
+    import scripts.run_filter as rf
+
+    inp = str(tmp_path / "pages_in")
+    as_webpages(docs.where("doc_id < 10")).write.parquet(inp)
+    out = tmp_path / "out"
+    run = rf.run_job if entry == "run_job" else bc.build
+    with pytest.raises(ValueError, match="url column"):
+        run(spark, argparse.Namespace(input=inp, output=str(out),
+                                      as_webpages=True))
+    assert not out.exists()
+
+
 def test_run_filter_cli_bloom_sharded_flow(spark, tmp_path):
     """--seen-bloom-path --bloom-shards 4: the GB-scale index layout
     from the production entry point — day 2 still drops every

@@ -1164,6 +1164,29 @@ def test_bloom_index_sharded_matches_guarantees(spark, tmp_path):
                               "url string"), idx, "url").count() == 0
 
 
+def test_bloom_index_files_equal_bloom_build(spark, tmp_path):
+    """One bitmap layout on every path: the S=1 index's bitmap.bin is
+    bloom_build over the same keys, and each S=4 shard file is
+    bloom_build over exactly that shard's keys at the meta's m/k."""
+    import os
+
+    keys = spark.createDataFrame(
+        [(f"http://x.example/{i}",) for i in range(600)], "url string")
+    idx1, idx4 = str(tmp_path / "s1"), str(tmp_path / "s4")
+    meta1 = dedup.bloom_index_commit(keys, "url", idx1)
+    with open(os.path.join(idx1, "bitmap.bin"), "rb") as f:
+        assert f.read() == bytes(dedup.bloom_build(
+            keys, "url", meta1["m_bits"], meta1["k"]))
+
+    meta4 = dedup.bloom_index_commit(keys, "url", idx4, shards=4)
+    sharded = keys.withColumn("_s", dedup._bloom_shard_col(F.col("url"), 4))
+    for s in range(4):
+        with open(os.path.join(idx4, f"shard_{s:05d}.bin"), "rb") as f:
+            assert f.read() == bytes(dedup.bloom_build(
+                sharded.where(F.col("_s") == s), "url",
+                meta4["m_bits"], meta4["k"])), s
+
+
 def test_bloom_index_meta_backcompat_no_shards_key(spark, tmp_path):
     """An index written before the shards field existed (meta without
     'shards') must read as a single-bitmap index — both commit and

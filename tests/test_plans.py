@@ -377,6 +377,14 @@ def test_no_unbounded_driver_materialization():
     assert hits == [], hits
 
 
+def test_driver_materialization_allowlist_has_no_stale_entries():
+    """Every allowance names a live call site: an entry whose line was
+    deleted would silently pre-approve whatever later matches it."""
+    import scripts.plan_audit as pa
+    stale = pa.stale_allowlist_entries()
+    assert stale == [], stale
+
+
 def test_bloom_index_filter_plan_shapes(spark, tmp_path):
     """The persisted Bloom index's two layouts, plan-pinned:
 

@@ -103,17 +103,27 @@ def test_scores_never_nan_or_null_breaks_verdict(spark, nasty_assessed):
 
 
 def test_salted_equals_unsalted(spark):
-    """repartition_salted changes physical placement only — verdicts,
+    """salt_buckets changes physical placement only — verdicts,
     scores, and scrubbed text must be identical."""
     from luzzu_spark.fixtures import as_webpages, load_table
     pages = as_webpages(load_table(
         spark, "/root/testdata/sf0.001", "documents"), inject_pii=True)
     plain = QualityPipeline().assess(pages)
-    salted = QualityPipeline(repartition_salted=True,
-                             num_partitions=16).assess(pages)
+    salted = QualityPipeline(salt_buckets=16).assess(pages)
     cols = ["url", "keep", "text_scrubbed"]
     assert plain.select(cols).exceptAll(salted.select(cols)).count() == 0
     assert salted.select(cols).exceptAll(plain.select(cols)).count() == 0
+
+
+def test_salt_buckets_reaches_the_repartition(pages):
+    """QualityPipeline(salt_buckets=N) salts over N buckets — the
+    optimized plan repartitions on pmod(xxhash64(url), N), not on a
+    fixed default."""
+    import re
+
+    plan = (QualityPipeline(salt_buckets=4).assess(pages)
+            ._jdf.queryExecution().optimizedPlan().toString())
+    assert re.search(r"pmod\(xxhash64\(url#\d+, 42\), 4\)", plan), plan
 
 
 def test_fuzz_corpus_spark_equals_oracle(spark):

@@ -452,7 +452,7 @@ def test_wet_stream_full_filter_composition(spark, tmp_path):
     q.awaitTermination(300)
 
     got = spark.read.parquet(out).select("url", "text")
-    want = QualityPipeline(auto_spread=False).filtered(
+    want = QualityPipeline().filtered(
         read_wet(spark, str(drop))).select("url", "text")
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0

@@ -37,7 +37,7 @@ def test_stream_assess_matches_batch(spark, page_dir):
     _drain(streaming.run_to_memory(assessed, "stream_assessed"))
     got = spark.table("stream_assessed")
 
-    want = QualityPipeline(auto_spread=False).assess(batch_pages) \
+    want = QualityPipeline().assess(batch_pages) \
         .select("url", "keep", "text_scrubbed")
     assert got.count() == want.count() == 500
     # exact per-row equality, both directions
@@ -57,7 +57,7 @@ def test_stream_windowed_counts(spark, page_dir):
                                    output_mode="complete"))
     got = spark.table("stream_counts")
     # batch twin over the same windows
-    assessed = QualityPipeline(auto_spread=False).assess(batch_pages)
+    assessed = QualityPipeline().assess(batch_pages)
     want = (assessed.groupBy(F.window("warc_ts", "10 minutes").alias("w"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(F.col("keep").cast("long")).alias("n_keep"))
@@ -83,78 +83,6 @@ def test_stream_dedup_bounded(spark, page_dir, tmp_path):
     got = spark.table("stream_dedup")
     assert got.count() == 500
     assert got.distinct().count() == 500
-
-
-def test_stream_session_windows(spark):
-    events = load_table(spark, SF, "events")
-    schema = events.schema
-    import tempfile
-    d = tempfile.mkdtemp(prefix="ev_stream_")
-    events.repartition(3).write.mode("overwrite").parquet(d)
-    stream = streaming.read_page_stream(spark, d, schema)
-    sessions = streaming.session_event_counts(stream)
-    _drain(streaming.run_to_memory(sessions, "stream_sessions",
-                                   output_mode="complete"))
-    got = spark.table("stream_sessions")
-    # batch twin (same NTZ→TIMESTAMP cast the streaming helper applies)
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    want = (events.groupBy(
-        F.session_window(F.col("ts"), "30 minutes").alias("s"),
-        F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .select("user_id", F.col("s.start").alias("session_start"),
-                F.col("s.end").alias("session_end"),
-                "n_events", "sum_value"))
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-    assert got.agg(F.sum("n_events")).collect()[0][0] == events.count()
-
-
-def test_stateful_user_totals(spark, tmp_path):
-    """applyInPandasWithState running totals: after draining every
-    micro-batch, the LAST update per user equals the batch aggregate."""
-    events = load_table(spark, SF, "events")
-    d = str(tmp_path / "ev_state")
-    events.repartition(4).write.mode("overwrite").parquet(d)
-    stream = streaming.read_page_stream(spark, d, events.schema,
-                                        max_files_per_trigger=1)
-    totals = streaming.stateful_user_totals(stream)
-    _drain(streaming.run_to_memory(totals, "stream_totals",
-                                   output_mode="update"))
-    got = spark.table("stream_totals")
-    # update mode appends one row per (user, batch); the running max
-    # n_events per user is the final state
-    final = (got.groupBy("user_id")
-             .agg(F.max("n_events").alias("n_events")))
-    want = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"))
-    assert final.exceptAll(want).count() == 0
-    assert want.exceptAll(final).count() == 0
-
-
-def test_stream_sliding_matches_batch_twin(spark, tmp_path_factory):
-    """Sliding-window stream agg must equal the batch twin
-    (events_sliding_10x5) window for window."""
-    from luzzu_spark import queries_scale  # noqa: F401 — registry
-    from luzzu_spark.queries import queries
-
-    path = str(tmp_path_factory.mktemp("stream") / "events")
-    events = load_table(spark, SF, "events")
-    events.repartition(4).write.mode("overwrite").parquet(path)
-
-    schema = spark.read.parquet(path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 2).parquet(path))
-    counts = streaming.sliding_event_counts(stream)
-    _drain(streaming.run_to_memory(counts, "stream_sliding",
-                                   output_mode="complete"))
-    got = spark.table("stream_sliding")
-
-    want = queries()["events_sliding_10x5"](spark, SF)
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
 
 
 def test_stream_restart_resumes_from_checkpoint(spark, tmp_path_factory):
@@ -209,40 +137,11 @@ def test_stream_filtered_sink_matches_batch(spark, page_dir,
     _drain(streaming.write_stream_filtered(stream, sink, ckpt))
 
     got = spark.read.parquet(sink)
-    want = QualityPipeline(auto_spread=False).filtered(batch_pages)
+    want = QualityPipeline().filtered(batch_pages)
     cols = ["url", "text", "lang"]
     assert got.count() == want.count()
     assert got.select(cols).exceptAll(want.select(cols)).count() == 0
     assert want.select(cols).exceptAll(got.select(cols)).count() == 0
-
-
-def test_stream_stream_interval_join_matches_batch(spark,
-                                                   tmp_path_factory):
-    """Stream-stream interval join (view→click attribution window):
-    the streamed join must equal the identical batch join row-for-row.
-    availableNow drains everything, so no matches are withheld by the
-    final watermark."""
-    path = str(tmp_path_factory.mktemp("ssj") / "events")
-    events = load_table(spark, SF, "events")
-    events.repartition(4).write.mode("overwrite").parquet(path)
-    batch = spark.read.parquet(path)
-    schema = batch.schema
-
-    def split(df):
-        return (df.where(F.col("event_type") == "view"),
-                df.where(F.col("event_type") == "click"))
-
-    sv, sc = split(spark.readStream.schema(schema)
-                   .option("maxFilesPerTrigger", 2).parquet(path))
-    joined = streaming.view_to_click_join(sv, sc)
-    _drain(streaming.run_to_memory(joined, "ssj_out"))
-    got = spark.table("ssj_out")
-
-    bv, bc = split(batch)
-    want = streaming.view_to_click_join(bv, bc)
-    assert got.count() == want.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
 
 
 def test_epoch_replay_is_idempotent(spark, page_dir, tmp_path_factory):
@@ -253,7 +152,7 @@ def test_epoch_replay_is_idempotent(spark, page_dir, tmp_path_factory):
     directory byte-for-byte; a distinct epoch still appends."""
     out = str(tmp_path_factory.mktemp("replay") / "corpus")
     pages = spark.read.parquet(page_dir)
-    kept = QualityPipeline(auto_spread=False).filtered(pages)
+    kept = QualityPipeline().filtered(pages)
 
     streaming.write_epoch_idempotent(kept.where("doc_id % 2 = 0"), out, 0)
     n0 = spark.read.parquet(out).count()
@@ -281,7 +180,7 @@ def test_stream_neardup_index_across_epochs(spark, tmp_path_factory):
 
     epoch1_docs = docs.where("doc_id < 10")
     pages1 = as_webpages(epoch1_docs)
-    kept1 = QualityPipeline(auto_spread=False).filtered(pages1)
+    kept1 = QualityPipeline().filtered(pages1)
     seed = sorted(r["doc_id"] for r in kept1.select("doc_id").collect())
     assert seed, "need at least one kept doc to seed the index"
     base_row = epoch1_docs.where(f"doc_id = {seed[0]}").collect()[0]
@@ -348,38 +247,6 @@ def test_stream_neardup_index_across_epochs(spark, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS nd_stream_idx_bands")
 
 
-def test_stream_static_join_matches_batch(spark, tmp_path_factory):
-    """Stream-STATIC enrichment join: each micro-batch broadcasts the
-    static dimension (no state, no watermark); results must equal the
-    identical batch join row-for-row. The dim deliberately OMITS one
-    event type ('error'): enrichment is a LEFT join (ADVICE r03), so
-    those events pass through with NULL weight instead of vanishing."""
-    path = str(tmp_path_factory.mktemp("sstatic") / "events")
-    events = load_table(spark, SF, "events")
-    events.repartition(4).write.mode("overwrite").parquet(path)
-    batch = spark.read.parquet(path)
-
-    dim = spark.createDataFrame(
-        [("view", 1), ("click", 3), ("purchase", 10), ("signup", 0)],
-        "event_type string, weight int")
-
-    stream = (spark.readStream.schema(batch.schema)
-              .option("maxFilesPerTrigger", 2).parquet(path))
-    enriched = streaming.enrich_with_static(stream, dim) \
-        .select("event_id", "event_type", "weight")
-    _drain(streaming.run_to_memory(enriched, "sstatic_out"))
-    got = spark.table("sstatic_out")
-
-    want = streaming.enrich_with_static(batch, dim) \
-        .select("event_id", "event_type", "weight")
-    assert got.count() == want.count() == batch.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    unmatched = got.where(F.col("event_type") == "error")
-    assert unmatched.count() > 0
-    assert unmatched.where(F.col("weight").isNotNull()).count() == 0
-
-
 def test_stream_filtered_bloom_cross_epoch_and_replay(spark, tmp_path):
     """write_stream_filtered_bloom: the persisted-Bloom streaming
     dedup. Epoch 2 re-sends an epoch-1 kept doc — its url must drop
@@ -399,7 +266,7 @@ def test_stream_filtered_bloom_cross_epoch_and_replay(spark, tmp_path):
     epoch1_docs = docs.where("doc_id < 10")
     pages1 = as_webpages(epoch1_docs)
     kept1_ids = sorted(
-        r["doc_id"] for r in QualityPipeline(auto_spread=False)
+        r["doc_id"] for r in QualityPipeline()
         .filtered(pages1).select("doc_id").collect())
     assert kept1_ids, "need kept epoch-1 docs to seed the bitmap"
     pages1.coalesce(1).write.mode("append").parquet(page_dir)
@@ -459,7 +326,7 @@ def test_stream_bloom_in_batch_duplicates_collapse(spark, tmp_path):
     docs = load_table(spark, SF, "documents").where("doc_id < 8")
     pages = as_webpages(docs)
     kept_ids = sorted(
-        r["doc_id"] for r in QualityPipeline(auto_spread=False)
+        r["doc_id"] for r in QualityPipeline()
         .filtered(pages).select("doc_id").collect())
     assert kept_ids, "need kept docs"
     # one file = one micro-batch holding every doc TWICE
