@@ -101,6 +101,9 @@ _CHANGED_SINCE_LAST_GREEN: tuple[str, ...] = (
     # CLAUDE.md rule 1); since then \z for a final-newline stopword and
     # NULL text as zero tokens on both engines (oracle changed too)
     "metrics_run_delta",
+    # the scrub chain lost its combined-probe guard: same bytes by
+    # construction, different Spark-side expression
+    "scrub_pii_identity",
 )
 
 _WINDOW: tuple[str, ...] = (

@@ -81,31 +81,6 @@ def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.round("sim", 6).alias("sim"), "rnk")
 
 
-@register("embed_lsh_topk")  # rows-only: bucketing is hash-seeded
-def embed_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k — the scale path (per-query work
-    shrinks by 2^planes). Rows-only: bucket ids derive from xxhash64."""
-    e = _emb(spark, sf_dir)
-    q = e.where(F.col("vec_id") < 5)
-    return similarity.lsh_topk(e, q, k=5).select(
-        "query_id", "neighbor_id", F.round("sim", 6).alias("sim"), "rnk")
-
-
-@register("embed_lsh_multiprobe_topk")  # rows-only: hash-seeded buckets
-def embed_lsh_multiprobe_topk(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k (VERDICT r02 item 5): each query probes
-    its bucket plus the 2 Hamming-1 buckets across its lowest-|margin|
-    planes — measured recall lift over single-probe is pinned in
-    tests/test_dedup_similarity.py. Rows-only: buckets are
-    hash-seeded; scores are exact cosines (subset-of-brute-force
-    contract shared with embed_lsh_topk)."""
-    e = _emb(spark, sf_dir)
-    q = e.where(F.col("vec_id") < 5)
-    return similarity.lsh_multiprobe_topk(e, q, k=5, probes=2).select(
-        "query_id", "neighbor_id", F.round("sim", 6).alias("sim"), "rnk")
-
-
 # ---- dedup family -------------------------------------------------------
 
 @register("dedup_minhash_pairs",
@@ -690,64 +665,3 @@ def embed_near_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return survivors.agg(
         F.count(F.lit(1)).cast("long").alias("n_survivors"),
         F.sum("label").cast("long").alias("label_sum"))
-
-
-# ---- quality-classifier distillation ------------------------------------
-
-@register("distill_gram_stats", oracle="""
-WITH t AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(text), ' '), x -> x <> '') AS toks
-  FROM documents),
-f AS (
-  SELECT doc_id, substr(md5(unnest(toks)), 1, 2) AS bh FROM t),
-c AS (
-  SELECT doc_id, bh, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM f GROUP BY doc_id, bh),
-g AS (
-  SELECT a.bh AS bh_i, b.bh AS bh_j,
-         CAST(SUM(a.cnt * b.cnt) AS BIGINT) AS g
-  FROM c a JOIN c b USING (doc_id) GROUP BY a.bh, b.bh)
-SELECT bh_i, bh_j, g FROM g ORDER BY g DESC, bh_i, bh_j LIMIT 20
-""")
-def distill_gram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distributed Gram accumulation at the heart of classifier
-    distillation (distill.py), as a hash-checkable query: top-20
-    entries of XᵀX over 256 hashed-bag-of-words buckets — exact
-    BIGINT sums, so the whole treeAggregate-shaped self-join is
-    cross-engine verifiable. Scale: per-task partial aggregation
-    bounds the shuffle at 256² rows regardless of corpus size."""
-    from luzzu_spark import distill
-    from luzzu_spark.rules.heuristics import tokens_expr
-    d = (_docs(spark, sf_dir)
-         .select("doc_id", tokens_expr("text").alias("toks")))
-    c = (d.select("doc_id", F.explode("toks").alias("w"))
-         .select("doc_id", F.substring(F.md5("w"), 1, 2).alias("bh"))
-         .groupBy("doc_id", "bh")
-         .agg(F.count(F.lit(1)).alias("cnt")))
-    return (distill.gram_frame(c)
-            .select("bh_i", "bh_j", F.col("g").cast("long").alias("g"))
-            .orderBy(F.desc("g"), "bh_i", "bh_j")
-            .limit(20))
-
-
-@register("distill_quality_scores")  # rows-only: float ridge solve
-def distill_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full distillation loop (DCLM/FineWeb-Edu pattern): expensive
-    rule verdicts become teacher labels, a 256-bucket linear student
-    trains via the distributed Gram frames + driver ridge solve, and
-    the corpus re-scores through a broadcast weight join. Rows-only:
-    the solve is float linear algebra; the agreement/determinism
-    contracts are pinned in tests/test_distill.py (measured 0.86
-    teacher-student agreement at sf0.01)."""
-    from luzzu_spark import distill
-    out = distill.distill(_docs(spark, sf_dir))
-    return (out.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum((F.col("y") == F.col("y_hat")).cast("long"))
-        .alias("n_agree"),
-        F.sum("y").alias("n_teacher_pos"),
-        F.sum("y_hat").alias("n_student_pos"))
-        .select("n_docs", "n_agree", "n_teacher_pos", "n_student_pos",
-                F.round(F.col("n_agree").cast("double")
-                        / F.col("n_docs"), 6).alias("agreement")))

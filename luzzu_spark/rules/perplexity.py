@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-ALPHABET = "abcdefghijklmnopqrstuvwxyz "
 ADD_K = 0.1
 
 SEED_CORPUS = (

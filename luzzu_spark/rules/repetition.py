@@ -96,10 +96,3 @@ def dup13_udf(texts: pd.Series) -> pd.Series:
 def with_dup13(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("score_dup_ngram_frac",
                          dup13_udf(F.col(text_col)))
-
-
-def dup_frac_py(text: str | None, n: int = spec.NGRAM_N) -> float:
-    """String-gram reference twin (the oracle's definition)."""
-    toks = (text or "").strip().split()
-    grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
-    return (len(grams) - len(set(grams))) / len(grams) if grams else 0.0

@@ -1,11 +1,11 @@
-"""Embedding similarity search: brute-force cosine top-k + LSH variant.
+"""Embedding similarity: brute-force cosine top-k and LSH-blocked
+near-duplicate pairs.
 
-Baseline: broadcast the (small) query set, score candidates with a
+Top-k: broadcast the (small) query set, score candidates with a
 vectorized Arrow pandas UDF (one numpy batch product per Arrow batch),
-rank per query with a window. Scale path: random-hyperplane LSH buckets
-restrict each query to one bucket's candidates — the bucket join
-replaces the full cross product (same blocking idea as
-dedup.lsh_candidate_pairs).
+rank per query with a window. Near-dup pairs: random-hyperplane LSH
+buckets block the self-join, so only same-bucket pairs are scored
+(same blocking idea as dedup.lsh_candidate_pairs).
 
 Round-1 scored candidates with Catalyst higher-order array functions
 (aggregate/zip_with folds); those are CodegenFallback — interpreted,
@@ -26,10 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-# Fixed hyperplane count for the LSH variant (no RNG at run time).
+# Fixed hyperplane count for LSH bucketing (no RNG at run time).
 LSH_PLANES = 8
-
-_U64 = (1 << 64) - 1
 
 
 def _splitmix64_vec(x: np.ndarray) -> np.ndarray:
@@ -89,44 +87,19 @@ def _cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _bucket_udf(planes: int = LSH_PLANES):
-    @pandas_udf(LongType())
-    def f(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=np.int64)
-        V = _mat(v)
-        W = _plane_matrix(V.shape[1], planes)
-        bits = (V @ W > 0).astype(np.int64) << np.arange(planes)
-        return pd.Series(bits.sum(axis=1))
-    # deterministic in fact; flag blocks predicate-pushdown duplication
-    # of the UDF (CLAUDE.md rule 7)
-    return f.asNondeterministic()
+@pandas_udf(LongType())
+def _bucket_udf(v: pd.Series) -> pd.Series:
+    if len(v) == 0:
+        return pd.Series([], dtype=np.int64)
+    V = _mat(v)
+    W = _plane_matrix(V.shape[1], LSH_PLANES)
+    bits = (V @ W > 0).astype(np.int64) << np.arange(LSH_PLANES)
+    return pd.Series(bits.sum(axis=1))
 
 
-def _probe_buckets_udf(planes: int, probes: int):
-    """Multi-probe bucket list for QUERY vectors: the base bucket plus
-    the `probes` Hamming-distance-1 buckets obtained by flipping the
-    lowest-|margin| planes — the planes the vector sits closest to,
-    i.e. exactly where a near-neighbor most likely fell on the other
-    side. Deterministic: stable argsort of |projection margin| with
-    ties broken by plane index; no RNG (VERDICT r02 item 5)."""
-    from pyspark.sql.types import ArrayType
-
-    @pandas_udf(ArrayType(LongType()))
-    def f(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        V = _mat(v)
-        W = _plane_matrix(V.shape[1], planes)
-        proj = V @ W                       # (n, planes) signed margins
-        base = ((proj > 0).astype(np.int64)
-                << np.arange(planes)).sum(axis=1)
-        p = min(probes, planes)
-        order = np.argsort(np.abs(proj), axis=1, kind="stable")[:, :p]
-        flips = base[:, None] ^ (np.int64(1) << order)
-        out = np.concatenate([base[:, None], flips], axis=1)
-        return pd.Series([row.tolist() for row in out])
-    return f.asNondeterministic()
+# deterministic in fact; flag blocks predicate-pushdown duplication of
+# the UDF (CLAUDE.md rule 7)
+_bucket_udf = _bucket_udf.asNondeterministic()
 
 
 # scoring UDF is filtered on (sim >= t, rnk <= k): keep it out of
@@ -155,14 +128,7 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
               .select("query_id", F.col(id_col).alias("neighbor_id"),
                       cosine_expr(F.col("qvec"),
                                   F.col(vec_col)).alias("sim")))
-    return topk_per_query(scored, k)
-
-
-def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k of a (query_id, neighbor_id, sim) frame —
-    deterministic rank (ties → lowest neighbor id). ONE definition for
-    the three ANN rankers (brute/LSH/multi-probe), so a tie-break fix
-    is one patch."""
+    # deterministic rank: ties → lowest neighbor id
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id"))
     return (scored.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -170,59 +136,10 @@ def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
             .orderBy("query_id", "rnk"))
 
 
-def hyperplane_bucket(vec_col: str = "embedding",
-                      planes: int = LSH_PLANES) -> F.Column:
-    """Sign-of-projection LSH bucket id from `planes` pseudo-random
+def hyperplane_bucket(vec_col: str = "embedding") -> F.Column:
+    """Sign-of-projection LSH bucket id from LSH_PLANES pseudo-random
     hyperplanes (one numpy matmul per Arrow batch)."""
-    return _bucket_udf(planes)(F.col(vec_col))
-
-
-def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH
-    bucket. Recall < 1 by design; the scale win is that each query
-    scores one bucket (corpus/2^planes docs) instead of the corpus."""
-    emb_b = embeddings.withColumn("bucket", hyperplane_bucket(vec_col))
-    q = F.broadcast(
-        queries.withColumn("bucket", hyperplane_bucket(vec_col))
-        .select(F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"), "bucket"))
-    scored = (emb_b.join(q, "bucket")
-              .where(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      cosine_expr(F.col("qvec"),
-                                  F.col(vec_col)).alias("sim")))
-    return topk_per_query(scored, k)
-
-
-def lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
-                        k: int = 5, probes: int = 2,
-                        planes: int = LSH_PLANES,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Multi-probe sign-LSH top-k: each query scores its own bucket
-    PLUS the `probes` buckets across its lowest-|margin| hyperplanes
-    (Hamming distance 1). Recall rises toward brute force as `probes`
-    grows while per-query work stays (1 + probes) buckets — the
-    standard multi-probe trade, vs raising `planes` which shrinks all
-    buckets and costs recall. The corpus side is UNCHANGED (one bucket
-    per vector, same single assignment pass as lsh_topk); only the
-    tiny broadcast query side explodes to its probe list, so the plan
-    shape — broadcast join, no corpus shuffle — is identical."""
-    emb_b = embeddings.withColumn("bucket", hyperplane_bucket(vec_col,
-                                                              planes))
-    q = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
-        .withColumn("bucket", F.explode(
-            _probe_buckets_udf(planes, probes)(F.col("qvec")))))
-    scored = (emb_b.join(q, "bucket")
-              .where(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      cosine_expr(F.col("qvec"),
-                                  F.col(vec_col)).alias("sim")))
-    return topk_per_query(scored, k)
+    return _bucket_udf(F.col(vec_col))
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
@@ -238,8 +155,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     the explicit repartition on the bucket key shares ONE exchange
     across both self-join sides, so the bucket UDF runs once.
     Recall < 1 by design (sign-LSH misses some near-pairs across a
-    plane); for higher recall use the multi-probe variant
-    (lsh_multiprobe_topk's probe expansion applies the same way).
+    plane).
     Unsorted — deterministic sort lives in the catalog wrapper."""
     b = (embeddings.withColumn("bucket", hyperplane_bucket(vec_col))
          .repartition(F.col("bucket")))

@@ -41,10 +41,6 @@ _TEXT_KEY = re.compile(
 # ---------------------------------------------------------------------
 _DRIVER_MAT_ALLOWED = {
     # (file, line-substring): why it is bounded
-    ("luzzu_spark/distill.py", "gram_frame(feats).collect()"):
-        "Gram matrix ≤ 256² rows by construction",
-    ("luzzu_spark/distill.py", "xty_frame(feats).collect()"):
-        "XtY vector ≤ 256 rows by construction",
     ("luzzu_spark/dedup.py",
      'spark.sql(f"SHOW PARTITIONS {table}").collect())'):
         "catalog metadata — one row per index epoch (compaction keeps "

@@ -80,74 +80,6 @@ def test_brute_force_topk_matches_numpy(spark, docs_pdf):
         assert mine == want, (qid, mine, want)
 
 
-def test_lsh_topk_subset_of_brute_force_scores(spark):
-    """LSH answers must be real cosine scores (approx in recall only)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3)
-    bf = {(r["query_id"], r["neighbor_id"]): r["sim"]
-          for r in similarity.brute_force_topk(emb, q, k=500).collect()}
-    for r in similarity.lsh_topk(emb, q, k=5).collect():
-        key = (r["query_id"], r["neighbor_id"])
-        assert key in bf
-        assert abs(bf[key] - r["sim"]) < 1e-9
-
-
-def test_lsh_multiprobe_recall_lift(spark):
-    """Multi-probe sign-LSH (VERDICT r02 item 5): probing the query's
-    bucket PLUS the Hamming-1 buckets across its 2 lowest-|margin|
-    planes must recover planted twins that single-probe loses across a
-    hyperplane. Fully deterministic: splitmix64-derived perturbation
-    sized (0.15·‖v‖/√dim per coord) so some twins straddle a plane —
-    measured here: single-probe twin recall 0.80, probes=2 recall 1.0."""
-    import numpy as np
-    import pandas as pd
-    from luzzu_spark.similarity import _splitmix64_vec
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.toPandas()
-    nq = 40
-    tw = base.head(nq).copy()
-    tw["vec_id"] = tw["vec_id"] + 100000
-
-    def perturb(row):
-        v = np.array(row["embedding"], dtype=np.float64)
-        idx = (np.arange(len(v), dtype=np.uint64)
-               + np.uint64(int(row["vec_id"]) * 1000))
-        with np.errstate(over="ignore"):
-            h = _splitmix64_vec(idx)
-        noise = ((h % np.uint64(2000)).astype(np.float64) - 1000.0) / 1000.0
-        return (v + 0.15 * np.linalg.norm(v) / np.sqrt(len(v))
-                * noise).tolist()
-
-    tw["embedding"] = tw.apply(perturb, axis=1)
-    both = spark.createDataFrame(pd.concat([base, tw]), schema=emb.schema)
-    q = both.where(F.col("vec_id") < nq)
-
-    def twin_recall(df):
-        got: dict[int, set] = {}
-        for r in df.collect():
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return sum((i + 100000) in got.get(i, set())
-                   for i in range(nq)) / nq
-
-    single = twin_recall(similarity.lsh_topk(both, q, k=5))
-    multi = twin_recall(similarity.lsh_multiprobe_topk(both, q, k=5,
-                                                       probes=2))
-    assert single < 1.0, "perturbation no longer straddles any plane"
-    assert multi > single, (single, multi)
-    assert multi >= 0.95, multi
-
-    # multi-probe answers still carry EXACT cosine scores (the
-    # subset-of-brute-force contract shared with lsh_topk)
-    bf = {(r["query_id"], r["neighbor_id"]): r["sim"]
-          for r in similarity.brute_force_topk(both, q, k=2000).collect()}
-    for r in similarity.lsh_multiprobe_topk(both, q, k=5,
-                                            probes=2).collect():
-        key = (r["query_id"], r["neighbor_id"])
-        assert key in bf
-        assert abs(bf[key] - r["sim"]) < 1e-9
-
-
 def test_zero_and_null_embeddings_never_near_dup(spark):
     """Spark's NaN total ordering puts NaN ABOVE every number, so a
     NaN cosine would both pass `sim >= threshold` and rank FIRST under
@@ -1034,6 +966,57 @@ def test_bloom_paragraph_index_two_run_flow(spark, tmp_path):
     assert meta2["committed_items"] == 2
     with open(os.path.join(idx, "bitmap.bin"), "rb") as f:
         assert f.read() == before
+
+
+def test_paragraph_family_null_id_passes_through(spark, tmp_path):
+    """A NULL-id doc cannot be joined back to a rebuild, so it passes
+    through with its text unchanged and its paragraphs take no part in
+    the batch-side marking — in all three paragraph scrubs."""
+    from luzzu_spark.dedup import remove_cross_doc_paragraphs
+    docs = spark.createDataFrame(
+        [(None, "p\n\nq"), (5, "p\n\nr"), (6, "p")],
+        "doc_id long, text string")
+    out = {r["doc_id"]: r["text"] for r in
+           remove_cross_doc_paragraphs(docs).collect()}
+    assert out == {None: "p\n\nq", 5: "p\n\nr", 6: ""}
+
+    seen = spark.createDataFrame([(1, "p")], "doc_id long, text string")
+    batch = spark.createDataFrame([(None, "p\n\nq"), (5, "p\n\nr")],
+                                  "doc_id long, text string")
+    want = {None: "p\n\nq", 5: "r"}
+    exact = {r["doc_id"]: r["text"] for r in
+             dedup.seen_bloom_paragraph_scrub(batch, seen).collect()}
+    assert exact == want
+    idx = str(tmp_path / "para_idx")
+    dedup.bloom_paragraph_commit(seen, idx, expected_items=100)
+    approx = {r["doc_id"]: r["text"] for r in
+              dedup.bloom_paragraph_filter(batch, idx).collect()}
+    assert approx == want
+
+
+def test_benchmark_decontaminate_contract(spark):
+    """13-gram decontamination: a doc sharing one 13-gram with the bench
+    set drops; tokens split on a single space only (a tab or newline
+    stays inside its token), runs of spaces add no empty tokens; docs
+    under 13 tokens and NULL text are never flagged; the bench frame
+    needs no id column."""
+    words = [f"w{i}" for i in range(13)]
+    gram = " ".join(words)
+    short = " ".join(words[:12])
+    bench = spark.createDataFrame(
+        [(f"bench prefix {gram} tail",), (short,)], "text string")
+    docs = spark.createDataFrame(
+        [(1, f"lead {gram} end"),                        # shares a gram
+         (2, gram.replace(" ", "  ", 3)),                # double spaces
+         (3, gram.replace(" ", "\t", 1)),                # tab in a token
+         (4, gram.replace(" ", "\n", 1)),                # newline in one
+         (5, short),                                     # 12 tokens
+         (6, None),
+         (7, "unrelated text " * 10)],
+        "doc_id long, text string")
+    out = dedup.benchmark_decontaminate(docs, bench)
+    assert sorted(r["doc_id"] for r in out.collect()) == [3, 4, 5, 6, 7]
+    assert out.columns == docs.columns
 
 
 def test_bloom_commit_epoch_counter_exact(spark, tmp_path):
