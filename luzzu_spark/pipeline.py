@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from luzzu_spark.rules.heuristics import with_token_columns
-from luzzu_spark.rules.registry import RuleRegistry, default_registry
+from luzzu_spark.rules.registry import (RuleRegistry, default_registry,
+                                        with_sql_columns)
 from luzzu_spark.rules.scrub import with_scrub
 
 LINEAGE_COLS = ("url", "lang", "doc_id", "source", "warc_ts")
@@ -49,11 +50,11 @@ def with_plugin_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     (rules/plugins.py). Values are identical to the standalone UDFs."""
     from luzzu_spark.rules.plugins import plugin_bundle_udf
     df = df.withColumn("_pb", plugin_bundle_udf(F.col(text_col)))
-    return (df.withColumn("lang_pred", F.col("_pb.lang_pred"))
-            .withColumn("score_langid_conf", F.col("_pb.lang_conf"))
-            .withColumn("score_perplexity", F.col("_pb.ppl"))
-            .withColumn("score_dup_ngram_frac", F.col("_pb.dup13"))
-            .drop("_pb"))
+    return with_sql_columns(df, {
+        "lang_pred": "_pb.lang_pred",
+        "score_langid_conf": "_pb.lang_conf",
+        "score_perplexity": "_pb.ppl",
+        "score_dup_ngram_frac": "_pb.dup13"}).drop("_pb")
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
@@ -77,7 +78,6 @@ class QualityPipeline:
     """Build once, apply to any web-page DataFrame."""
 
     registry: RuleRegistry = field(default_factory=default_registry)
-    scrub: bool = True
     # OPT-IN C4 line-level scrub BEFORE assessment (Raffel et al.
     # order: line filtering, then doc-level rules). Off by default —
     # the frozen RULESPEC byte-identity contract assumes raw text.
@@ -104,9 +104,7 @@ class QualityPipeline:
         df = self.registry.with_scores(df)
         df = with_plugin_scores(df)  # ONE fused ArrowEvalPython stage
         df = self.registry.with_late_scores(df)  # may read lang_pred
-        df = self.registry.with_verdict(df)
-        if self.scrub:
-            df = with_scrub(df)
+        df = with_scrub(self.registry.with_verdict(df))
         # drop the token array (wide); keep the scalar stats
         # (n_chars/n_tokens) — cheap lineage
         return df.drop("tokens")
@@ -123,12 +121,7 @@ class QualityPipeline:
         out = assessed.filter(F.col("keep"))
         cols = [c for c in ("url", "warc_ts", "lang", "lang_pred",
                             "doc_id", "source") if c in out.columns]
-        # scrub=False pipelines never attach text_scrubbed — emit the
-        # raw text instead of failing UNRESOLVED_COLUMN (review r05)
-        text = ("text_scrubbed" if "text_scrubbed" in out.columns
-                else "text")
-        return out.select(*cols,
-                          F.col(text).alias("text"),
+        return out.select(*cols, F.col("text_scrubbed").alias("text"),
                           "rule_scores")
 
     def problem_report(self, assessed: DataFrame) -> DataFrame:

@@ -104,6 +104,12 @@ _CHANGED_SINCE_LAST_GREEN: tuple[str, ...] = (
     # the scrub chain lost its combined-probe guard: same bytes by
     # construction, different Spark-side expression
     "scrub_pii_identity",
+    # the composite quality score is read from heuristics'
+    # quality_score_sql (no interpreted lambdas), and its DuckDB twins
+    # gained the word-count upper bound
+    "docs_quality_score", "mix_weights_by_source", "sample_quality_mix",
+    # one shared packer body (pack_offsets / pack_token_count)
+    "pack_token_sequences", "pack_bpe_sequences",
 )
 
 _WINDOW: tuple[str, ...] = (
@@ -113,13 +119,14 @@ _WINDOW: tuple[str, ...] = (
     "dedup_dup_span_excision",
     "dedup_bloom_seen_filter",
     "dedup_bloom_paragraph_scrub",
-    # (b) changed since their r04 green row (freshness rule)
+    # (b) changed since their last green row (freshness rule)
     "dedup_minhash_pairs", "dedup_simhash_pairs", "dedup_simhash_near",
     "dedup_jaccard_verified", "dedup_ngram_jaccard_exact",
     "dedup_cluster_quality_survivors", "dedup_incremental_pairs",
     "dedup_near_survivors", "split_leakage_audit", "mix_epoch_plan",
     "text_alpha_word_fraction", "text_dup_para_fraction",
     "events_session_counts", "metrics_run_delta",
+    "docs_quality_score", "pack_token_sequences",
     # (c) refill -- r01-latest (stalest green rows in the catalog)
     "agg_cube_lang_source", "window_top2_docs_per_source",
     "supplier_revenue_by_nation", "part_type_price_stats",
@@ -132,10 +139,10 @@ _WINDOW: tuple[str, ...] = (
     # (c) refill -- r01+r02 twice-green, 23 of 31
     "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
     "agg_rollup_acctbal", "join_broadcast_dims",
-    "join_semi_customers_with_orders", "join_anti_customers_no_orders",
+    "join_anti_customers_no_orders",
     "join_range_events_orders", "window_rank_customers",
     "sort_topk_parts",
-    "set_except_sources", "set_intersect_sources",
+    "set_except_sources",
     "dedup_first_doc_per_source",
     "events_tumbling_10min", "text_fingerprint",
     "scrub_pii_identity", "embed_cosine_topk",
@@ -145,8 +152,11 @@ _WINDOW: tuple[str, ...] = (
     # dedup_bloom_paragraph_scrub; window_lag_deltas +
     # window_running_avg for the microsecond-exact
     # events_session_counts and regex-counted metrics_run_delta
-    # re-verifies — all six r01+r02 twice-green and unchanged since
-    # their rows (the displacement rule)
+    # re-verifies; join_semi_customers_with_orders +
+    # set_intersect_sources for the docs_quality_score and
+    # pack_token_sequences re-verifies (rule-derived quality score,
+    # shared packer) — all eight r01+r02 twice-green and unchanged
+    # since their rows (the displacement rule)
 )
 
 # Declared overflow (r03 mechanism): oracle-matched first-timers that

@@ -517,7 +517,7 @@ def pipeline_rank_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from luzzu_spark.metrics import rank_sources
     from luzzu_spark.pipeline import QualityPipeline
     pages = as_webpages(_docs(spark, sf_dir), inject_pii=True)
-    assessed = QualityPipeline(scrub=False).assess(pages)
+    assessed = QualityPipeline().assess(pages)
     return rank_sources(assessed).orderBy("rank", "source")
 
 

@@ -17,7 +17,8 @@ from luzzu_spark import dedup as _dedup
 from luzzu_spark.fixtures import load_table, spread
 from luzzu_spark.queries import register
 from luzzu_spark.rules import spec
-from luzzu_spark.rules.heuristics import with_token_columns
+from luzzu_spark.rules.heuristics import (quality_score_sql,
+                                          with_token_columns)
 from luzzu_spark.rules.stopwords import STOPWORDS
 
 _SW_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
@@ -277,55 +278,35 @@ def scrub_pii_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     row ⇒ the chain is not byte-deterministic (BASELINE.json:15)."""
     from luzzu_spark.fixtures import pii_suffix_expr
     from luzzu_spark.rules.scrub import scrub_expr
-    d = _docs(spark, sf_dir)
-    raw = F.concat(F.col("text"), pii_suffix_expr())
+    d = _docs(spark, sf_dir).select(
+        "doc_id", F.concat(F.col("text"), pii_suffix_expr()).alias("raw"))
     return (d.select("doc_id",
-                     F.md5(scrub_expr(raw)).alias("scrubbed_md5"))
+                     F.md5(scrub_expr("raw")).alias("scrubbed_md5"))
             .orderBy("doc_id"))
 
 
 def quality_score_expr() -> F.Column:
-    """Composite 4-rule quality score in [0, 1] (0.25 per passing rule)
-    over a frame that has token helper columns. Multiples of 0.25 are
-    exact doubles, so SUMs of this score are order-independent — safe
-    to aggregate across engines and partitionings.
-
-    Empty-doc semantics pinned (ADVICE r02): for a zero-token doc the
-    ratio terms divide by zero — Spark's try_divide yields NULL, which
-    would NULL the whole score while the oracle's CASE … ELSE 0 yields
-    0 — so each ratio term is coalesced to 0.0 (an empty doc fails the
-    ratio rules on both engines)."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    hits = F.size(F.filter("tokens", lambda t: F.array_contains(sw, t)))
-    stop_frac = F.try_divide(hits.cast("double"), F.col("n_tokens"))
-    total_len = F.aggregate("tokens", F.lit(0).cast("long"),
-                            lambda acc, t: acc + F.length(t))
-    mwl = F.try_divide(total_len.cast("double"), F.col("n_tokens"))
-    return (
-        0.25 * (F.col("n_chars") >= spec.MIN_DOC_CHARS).cast("double")
-        + 0.25 * (F.col("n_tokens") >= spec.MIN_WORDS).cast("double")
-        + 0.25 * F.coalesce(
-            (stop_frac >= spec.MIN_STOPWORD_FRAC).cast("double"),
-            F.lit(0.0))
-        + 0.25 * F.coalesce(
-            ((mwl >= spec.MEAN_WORD_LEN_LO)
-             & (mwl <= spec.MEAN_WORD_LEN_HI)).cast("double"),
-            F.lit(0.0)))
+    """The composite 4-rule quality score (heuristics.quality_score_sql)
+    over a frame that has the token helper columns."""
+    return F.expr(quality_score_sql())
 
 
-@register("docs_quality_score", oracle=f"""
-SELECT source,
-  CAST(ROUND(AVG(
+# the DuckDB twin of quality_score_sql, over the oracle token model
+_SCORE_SQL = f"""(
     0.25 * CASE WHEN n_chars >= {spec.MIN_DOC_CHARS} THEN 1 ELSE 0 END
-  + 0.25 * CASE WHEN len({_TOKS}) >= {spec.MIN_WORDS} THEN 1 ELSE 0 END
+  + 0.25 * CASE WHEN len({_TOKS}) BETWEEN {spec.MIN_WORDS}
+       AND {spec.MAX_WORDS} THEN 1 ELSE 0 END
   + 0.25 * CASE WHEN CAST(len(list_filter({_TOKS},
        x -> list_contains({_SW_SQL}, x))) AS DOUBLE) / len({_TOKS})
        >= {spec.MIN_STOPWORD_FRAC} THEN 1 ELSE 0 END
   + 0.25 * CASE WHEN CAST(len(replace(trim(text), ' ', '')) AS DOUBLE)
        / len({_TOKS}) BETWEEN {spec.MEAN_WORD_LEN_LO}
-       AND {spec.MEAN_WORD_LEN_HI} THEN 1 ELSE 0 END), 6) AS DOUBLE)
-    AS avg_quality,
-  CAST(COUNT(*) AS BIGINT) AS n_docs
+       AND {spec.MEAN_WORD_LEN_HI} THEN 1 ELSE 0 END)"""
+
+
+@register("docs_quality_score", oracle=f"""
+SELECT source, CAST(ROUND(AVG({_SCORE_SQL}), 6) AS DOUBLE) AS avg_quality,
+       CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM documents GROUP BY source ORDER BY source
 """)
 def docs_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,17 +393,6 @@ def dedup_ngram_jaccard_exact(spark: SparkSession,
             .select("id_a", "id_b",
                     F.round("jaccard_raw", 6).alias("jaccard"))
             .orderBy("id_a", "id_b"))
-
-
-_SCORE_SQL = f"""(
-    0.25 * CASE WHEN n_chars >= {spec.MIN_DOC_CHARS} THEN 1 ELSE 0 END
-  + 0.25 * CASE WHEN len({_TOKS}) >= {spec.MIN_WORDS} THEN 1 ELSE 0 END
-  + 0.25 * CASE WHEN CAST(len(list_filter({_TOKS},
-       x -> list_contains({_SW_SQL}, x))) AS DOUBLE) / len({_TOKS})
-       >= {spec.MIN_STOPWORD_FRAC} THEN 1 ELSE 0 END
-  + 0.25 * CASE WHEN CAST(len(replace(trim(text), ' ', '')) AS DOUBLE)
-       / len({_TOKS}) BETWEEN {spec.MEAN_WORD_LEN_LO}
-       AND {spec.MEAN_WORD_LEN_HI} THEN 1 ELSE 0 END)"""
 
 
 @register("sample_stable_hash", oracle="""

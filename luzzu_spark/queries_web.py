@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from luzzu_spark.fixtures import as_webpages, load_table, spread
 from luzzu_spark.queries import register
+from luzzu_spark.rules.heuristics import tokens_expr
 
 # deterministic blocklist: these sources' hosts are banned
 BLOCKED_SOURCES = ("src3", "src7", "src11")
@@ -329,7 +330,6 @@ def text_top_word_dominance(spark: SparkSession,
     Scale: explode -> hash-agg on (doc_id, md5(word)) — fixed-width
     keys, word text never shuffles; the per-doc fold then runs over
     distinct-word counts (bounded by vocabulary, not corpus size)."""
-    from luzzu_spark.rules.heuristics import tokens_expr
     d = spread(load_table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", "lang",
                    F.explode(tokens_expr("text")).alias("w"))
@@ -400,7 +400,6 @@ def text_top_ngram_coverage(spark: SparkSession,
     dedup_ngram_jaccard_exact trade: string grams keep the math
     bit-identical to the oracle; dedup.py owns the vectorized hashed
     shingler for the blocking paths)."""
-    from luzzu_spark.rules.heuristics import tokens_expr
     d = (spread(load_table(spark, sf_dir, "documents"))
          .select("doc_id", "lang", "n_chars",
                  tokens_expr("text").alias("toks")))
@@ -760,78 +759,6 @@ def text_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang"))
 
 
-PACK_BUDGET = 256  # tokens per training sequence (fixture scale)
-
-
-@register("pack_token_sequences", oracle=f"""
-WITH t AS (
-  SELECT doc_id, source,
-         len(list_filter(string_split(trim(text), ' '), x -> x <> ''))
-           AS n_toks
-  FROM documents),
-packed AS (
-  SELECT source, n_toks,
-         COALESCE(SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS cum_before
-  FROM t)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
-       CAST((SUM(n_toks) + {PACK_BUDGET} - 1) // {PACK_BUDGET} AS BIGINT)
-         AS n_seqs,
-       CAST(SUM(CASE WHEN n_toks > 0 AND
-                  (cum_before + n_toks - 1) // {PACK_BUDGET}
-                   > cum_before // {PACK_BUDGET}
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_straddlers,
-       CASE WHEN SUM(n_toks) = 0 THEN 0.0
-            ELSE CAST(ROUND(CAST(SUM(n_toks) AS DOUBLE)
-                 / (((SUM(n_toks) + {PACK_BUDGET} - 1) // {PACK_BUDGET})
-                    * {PACK_BUDGET}), 6) AS DOUBLE) END AS fill_frac
-FROM packed GROUP BY source ORDER BY source
-""")
-def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for pretraining batches: documents fill
-    fixed-budget token sequences contiguously (deterministic doc_id
-    order within source), so the packer's plan - how many sequences
-    each source yields, how many documents straddle a sequence
-    boundary, and the fill fraction - is a pure function of the
-    corpus. All boundary math is exact BIGINT integer division on
-    running sums; the only float is the final fill ratio, rounded
-    once from exact sums (rule-12 discipline).
-
-    Scale: ordered packing is inherently sequential WITHIN a pack
-    unit, so the unit is (source) here and (source, shard) at 100 TB
-    - one shuffle on the pack key, a running-sum window per unit over
-    (doc_id, n_toks) pairs only (text never enters the window), then
-    a hash-agg. Zero-token docs are pinned on both engines: they pack
-    nowhere (never straddle) but still count in n_docs."""
-    from luzzu_spark.rules.heuristics import tokens_expr
-    b = PACK_BUDGET
-    t = (spread(load_table(spark, sf_dir, "documents"))
-         .select("doc_id", "source",
-                 F.size(tokens_expr("text")).cast("long").alias("n_toks")))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    packed = t.withColumn(
-        "cum_before", F.coalesce(F.sum("n_toks").over(w), F.lit(0)))
-    straddles = ((F.col("n_toks") > 0)
-                 & (F.expr(f"(cum_before + n_toks - 1) DIV {b}")
-                    > F.expr(f"cum_before DIV {b}")))
-    total = F.sum("n_toks")
-    n_seqs = F.expr(f"(sum(n_toks) + {b} - 1) DIV {b}")
-    return (packed.groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 total.cast("long").alias("total_tokens"),
-                 n_seqs.cast("long").alias("n_seqs"),
-                 F.sum(straddles.cast("long")).alias("n_straddlers"),
-                 F.when(total == F.lit(0), F.lit(0.0))
-                 .otherwise(F.round(total.cast("double")
-                                    / (n_seqs * F.lit(b)), 6))
-                 .alias("fill_frac"))
-            .orderBy("source"))
-
-
 @register("dsir_importance_weights", oracle="""
 WITH t AS (
   SELECT doc_id, lang,
@@ -882,7 +809,6 @@ def dsir_importance_weights(spark: SparkSession,
     prefixes BEFORE any shuffle (fixed-width keys, TEXT-KEY audit
     discipline); the 4096-row weight table broadcasts, so scoring
     shuffles only (doc_id, lang) partial sums."""
-    from luzzu_spark.rules.heuristics import tokens_expr
     d = (spread(load_table(spark, sf_dir, "documents"))
          .select("doc_id", "lang", tokens_expr("text").alias("toks")))
     grams = F.expr("""
@@ -1164,7 +1090,6 @@ def dsir_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample at 100 TB); sampling itself is a broadcast-join predicate —
     reshard-invariant, deterministic, pushdown-composable like
     sample_stable_hash."""
-    from luzzu_spark.rules.heuristics import tokens_expr
     d = (spread(load_table(spark, sf_dir, "documents"))
          .select("doc_id", "lang", "text",
                  tokens_expr("text").alias("toks")))
@@ -1470,7 +1395,6 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     global agg. At 100 TB this is the cheapest full-scan query in the
     catalog: partial aggs fold map-side, a single row leaves each
     executor."""
-    from luzzu_spark.rules.heuristics import tokens_expr
     d = (spread(load_table(spark, sf_dir, "documents"))
          .select("lang", "source", "n_chars",
                  F.size(tokens_expr("text")).cast("long")
@@ -2029,6 +1953,8 @@ def docs_lang_profile_rates(spark: SparkSession,
             .orderBy("lang_key"))
 
 
+PACK_BUDGET = 256  # tokens per training sequence (fixture scale)
+
 # BPE pre-tokenizer pattern (text_bpe_token_counts' lookahead-free
 # GPT-2 family subset — identical in Java regex and RE2): the token
 # BUDGET real training packs against, vs the whitespace-word proxy.
@@ -2037,11 +1963,41 @@ _BPE_PACK_PAT_SQL = (
     r"'''(s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s'")
 
 
-@register("pack_bpe_sequences", oracle=f"""
+def pack_token_count(tokenizer: str) -> F.Column:
+    """Per-doc token count of ``text`` that the packer budgets against:
+    'whitespace' words (the rules' token list) or 'bpe', the
+    pre-tokenizer count real training packs against."""
+    if tokenizer == "bpe":
+        n = F.regexp_count(F.coalesce(F.col("text"), F.lit("")),
+                           F.lit(_BPE_PACK_PAT))
+    else:
+        n = F.size(tokens_expr("text"))
+    return n.cast("long")
+
+
+def pack_offsets(docs: DataFrame, n_toks: F.Column,
+                 id_col: str = "doc_id") -> DataFrame:
+    """(id, source, n_toks, cum_before): each doc's token offset in its
+    source's contiguous packing, in deterministic id order.
+
+    Scale: ordered packing is sequential WITHIN a pack unit, so the
+    unit is (source) here and (source, shard) at 100 TB — one shuffle
+    on the pack key, then a running-sum window over (id, n_toks)
+    only: n_toks is computed in the projection, so text never enters
+    the window or the shuffle."""
+    w = (Window.partitionBy("source").orderBy(id_col)
+         .rowsBetween(Window.unboundedPreceding, -1))
+    return (docs.select(id_col, "source", n_toks.alias("n_toks"))
+            .withColumn("cum_before",
+                        F.coalesce(F.sum("n_toks").over(w), F.lit(0))))
+
+
+def _pack_oracle_sql(n_toks_sql: str, total_alias: str) -> str:
+    b = PACK_BUDGET
+    return f"""
 WITH t AS (
   SELECT doc_id, source,
-         len(regexp_extract_all(coalesce(text, ''),
-             {_BPE_PACK_PAT_SQL})) AS n_toks
+         {n_toks_sql} AS n_toks
   FROM documents),
 packed AS (
   SELECT source, n_toks,
@@ -2051,40 +2007,35 @@ packed AS (
   FROM t)
 SELECT source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_toks) AS BIGINT) AS total_bpe_tokens,
-       CAST((SUM(n_toks) + {PACK_BUDGET} - 1) // {PACK_BUDGET} AS BIGINT)
+       CAST(SUM(n_toks) AS BIGINT) AS {total_alias},
+       CAST((SUM(n_toks) + {b} - 1) // {b} AS BIGINT)
          AS n_seqs,
        CAST(SUM(CASE WHEN n_toks > 0 AND
-                  (cum_before + n_toks - 1) // {PACK_BUDGET}
-                   > cum_before // {PACK_BUDGET}
+                  (cum_before + n_toks - 1) // {b}
+                   > cum_before // {b}
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_straddlers,
        CASE WHEN SUM(n_toks) = 0 THEN 0.0
             ELSE CAST(ROUND(CAST(SUM(n_toks) AS DOUBLE)
-                 / (((SUM(n_toks) + {PACK_BUDGET} - 1) // {PACK_BUDGET})
-                    * {PACK_BUDGET}), 6) AS DOUBLE) END AS fill_frac
+                 / (((SUM(n_toks) + {b} - 1) // {b})
+                    * {b}), 6) AS DOUBLE) END AS fill_frac
 FROM packed GROUP BY source ORDER BY source
-""")
-def pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing on the BPE-token budget (VERDICT r04 next #7):
-    identical packing math to pack_token_sequences, but the per-doc
-    token count is the BPE pre-tokenizer count — the budget a real
-    training loader packs against (whitespace words undercount
-    punctuation-heavy web text by 20-40%, so a whitespace-packed
-    corpus silently overfills real sequences). Boundary math stays
-    exact BIGINT; the only float is one final rounded ratio.
+"""
 
-    Scale: one codegen'd regexp_count projection, one shuffle on the
-    pack unit (source; (source, shard) at 100 TB), a (doc_id, n_toks)
-    window — text never enters the window or the shuffle."""
+
+def _pack_sequences(spark: SparkSession, sf_dir: str, tokenizer: str,
+                    total_alias: str) -> DataFrame:
+    """Sequence packing for pretraining batches: documents fill
+    fixed-budget token sequences contiguously (:func:`pack_offsets`),
+    so the packer's plan - how many sequences each source yields, how
+    many documents straddle a sequence boundary, and the fill fraction
+    - is a pure function of the corpus. All boundary math is exact
+    BIGINT integer division on running sums; the only float is the
+    final fill ratio, rounded once from exact sums (rule-12
+    discipline). Zero-token docs are pinned on both engines: they pack
+    nowhere (never straddle) but still count in n_docs."""
     b = PACK_BUDGET
-    n = F.regexp_count(F.coalesce(F.col("text"), F.lit("")),
-                       F.lit(_BPE_PACK_PAT))
-    t = (spread(load_table(spark, sf_dir, "documents"))
-         .select("doc_id", "source", n.cast("long").alias("n_toks")))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    packed = t.withColumn(
-        "cum_before", F.coalesce(F.sum("n_toks").over(w), F.lit(0)))
+    packed = pack_offsets(spread(load_table(spark, sf_dir, "documents")),
+                          pack_token_count(tokenizer))
     straddles = ((F.col("n_toks") > 0)
                  & (F.expr(f"(cum_before + n_toks - 1) DIV {b}")
                     > F.expr(f"cum_before DIV {b}")))
@@ -2092,7 +2043,7 @@ def pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_seqs = F.expr(f"(sum(n_toks) + {b} - 1) DIV {b}")
     return (packed.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
-                 total.cast("long").alias("total_bpe_tokens"),
+                 total.cast("long").alias(total_alias),
                  n_seqs.cast("long").alias("n_seqs"),
                  F.sum(straddles.cast("long")).alias("n_straddlers"),
                  F.when(total == F.lit(0), F.lit(0.0))
@@ -2100,3 +2051,22 @@ def pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     / (n_seqs * F.lit(b)), 6))
                  .alias("fill_frac"))
             .orderBy("source"))
+
+
+@register("pack_token_sequences", oracle=_pack_oracle_sql(
+    "len(list_filter(string_split(trim(text), ' '), x -> x <> ''))",
+    "total_tokens"))
+def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_pack_sequences` on the whitespace-word budget."""
+    return _pack_sequences(spark, sf_dir, "whitespace", "total_tokens")
+
+
+@register("pack_bpe_sequences", oracle=_pack_oracle_sql(
+    "len(regexp_extract_all(coalesce(text, ''),\n"
+    f"             {_BPE_PACK_PAT_SQL}))", "total_bpe_tokens"))
+def pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_pack_sequences` on the BPE-token budget (VERDICT r04
+    next #7): the budget a real training loader packs against —
+    whitespace words undercount punctuation-heavy web text by 20-40%,
+    so a whitespace-packed corpus silently overfills real sequences."""
+    return _pack_sequences(spark, sf_dir, "bpe", "total_bpe_tokens")

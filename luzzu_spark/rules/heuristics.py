@@ -198,3 +198,18 @@ def heuristic_rules() -> list[Rule]:
         # dominated the whole pipeline; the vectorized Arrow form rides
         # the same Python-worker stage as langid/perplexity.
     ]
+
+
+def quality_score_sql() -> str:
+    """Composite quality score in [0, 1]: 0.25 per passing rule of
+    min_chars, word_count, stopword_frac and mean_word_len (Luzzu's
+    weighted ranking input, reference README.md:15), over the helper
+    columns. A NULL (zero-token) ratio passes nothing. Multiples of
+    0.25 are exact doubles, so sums of the score are order-independent
+    across engines and partitionings."""
+    rules = {r.name: r for r in heuristic_rules()}
+    return " + ".join(
+        f"0.25D * coalesce(CAST(NOT {rules[n].inline_fire_sql} AS DOUBLE), "
+        "0.0D)"
+        for n in ("min_chars", "word_count", "stopword_frac",
+                  "mean_word_len"))

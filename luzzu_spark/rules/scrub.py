@@ -13,8 +13,8 @@ contract (BASELINE.json:15 — byte-identical scrubbed text per url):
   chain, the pandas oracle, and the DuckDB oracle SQL — patterns stay in
   the RE2 ∩ java.util.regex common subset (no backrefs, no lookaround).
 
-Spark-side this is a chain of regexp_replace Column expressions: JVM
-whole-stage codegen, zero Python per row.
+Spark-side this is one nested regexp_replace SQL expression
+(:func:`scrub_sql`): JVM whole-stage codegen, zero Python per row.
 """
 
 from __future__ import annotations
@@ -23,6 +23,8 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from luzzu_spark.rules.registry import sql_lit, with_sql_columns
 
 # (name, pattern, replacement) — FROZEN ORDER.
 SCRUB_CHAIN: tuple[tuple[str, str, str], ...] = (
@@ -59,22 +61,26 @@ ALL_STEPS: tuple[tuple[str, str, str], ...] = SCRUB_CHAIN + (
 COMBINED_PROBE = "|".join(f"(?:{pat})" for _name, pat, _ in ALL_STEPS)
 
 
-def scrub_expr(col: Column | str = "text") -> Column:
-    """The full scrub chain as one nested Catalyst expression.
+def scrub_sql(text: str = "text") -> str:
+    """The full scrub chain over the column ``text`` as one nested SQL
+    expression, folded from :data:`ALL_STEPS` in the frozen order.
 
     No guard pass: each replace is the identity where its pattern does
     not match, and a guard that scans every byte costs more than the
     chain it would skip."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.coalesce(c, F.lit(""))   # null doc scrubs to "" (matches oracle)
+    sql = f"coalesce({text}, '')"   # null doc scrubs to "" (matches oracle)
     for _name, pat, repl in ALL_STEPS:
-        c = F.regexp_replace(c, pat, repl)
-    return c
+        sql = f"regexp_replace({sql}, {sql_lit(pat)}, {sql_lit(repl)})"
+    return sql
+
+
+def scrub_expr(text: str = "text") -> Column:
+    return F.expr(scrub_sql(text))
 
 
 def with_scrub(df: DataFrame) -> DataFrame:
     """Attach ``text_scrubbed``: the scrub chain over ``text``."""
-    return df.withColumn("text_scrubbed", scrub_expr("text"))
+    return with_sql_columns(df, {"text_scrubbed": scrub_sql("text")})
 
 
 # -- plain-Python twin (used by the pandas oracle and property tests) -----

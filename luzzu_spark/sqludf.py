@@ -9,8 +9,10 @@ scalar UDFs (CREATE FUNCTION ... RETURNS ... RETURN <expr>), so
     SELECT url, luzzu_heuristic_keep(text) FROM corpus
 
 is the whole integration. Every body is derived from the heuristic
-rules' own SQL text (rules/heuristics.py): the helper columns a rule
-reads (tokens/n_tokens/n_chars) are replaced by their definitions over
+rules' own SQL text (rules/heuristics.py), and ``luzzu_quality_score``
+from ``heuristics.quality_score_sql``, the composite score the catalog
+queries also read: the helper columns a rule reads
+(tokens/n_tokens/n_chars) are replaced by their definitions over
 ``text``, so no formula or threshold is written here. SQL UDFs inline
 into the calling plan (no Python worker, no serialization boundary;
 tests pin them row-identical to the rule scores).
@@ -22,7 +24,8 @@ import re
 
 from pyspark.sql import SparkSession
 
-from luzzu_spark.rules.heuristics import heuristic_rules, token_cols_sql
+from luzzu_spark.rules.heuristics import (heuristic_rules,
+                                          quality_score_sql, token_cols_sql)
 
 _HELPER_COL = re.compile(r"\b(tokens|n_tokens|n_chars)\b")
 
@@ -58,12 +61,8 @@ def rule_function_sql() -> dict[str, str]:
             f"RETURNS DOUBLE RETURN {score('symbol_ratio')}",
         "luzzu_stopword_frac":
             f"RETURNS DOUBLE RETURN {score('stopword_frac')}",
-        # 0.25 per passing rule; a NULL (zero-token) ratio passes nothing
         "luzzu_quality_score":
-            "RETURNS DOUBLE RETURN " + " + ".join(
-                f"0.25 * coalesce(CAST(NOT {fires(n)} AS DOUBLE), 0.0)"
-                for n in ("min_chars", "word_count", "stopword_frac",
-                          "mean_word_len")),
+            f"RETURNS DOUBLE RETURN {_over_text(quality_score_sql())}",
         "luzzu_heuristic_keep":
             "RETURNS BOOLEAN RETURN NOT ("
             + " OR ".join(fires(n) for n in rules) + ")",

@@ -52,7 +52,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -140,43 +140,17 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def stable_uniform(text_col: str = "text") -> F.Column:
-    """Exact dyadic uniform in [0,1) from six md5 hex digits — the
-    reshard-invariant sampling coin. ONE shared definition with the
-    sample_quality_mix catalog query (review r05: a third copy here
-    could drift and silently break split stability)."""
-    from luzzu_spark.queries_text import stable_uniform_expr
-    return stable_uniform_expr(text_col)
-
-
 def assign_seq_ids(docs: DataFrame, budget: int,
                    id_col: str = "doc_id",
                    tokenizer: str = "whitespace") -> DataFrame:
     """seq_id = <source>#<bin> via contiguous token-budget packing in
     deterministic doc_id order per source (the pack_token_sequences /
-    pack_bpe_sequences semantics, materialized per doc). One shuffle
-    on the pack unit; only (doc_id, n_toks) enters the window.
+    pack_bpe_sequences semantics, materialized per doc); the narrow
+    seq_id frame joins back on the well-distributed id.
     tokenizer: 'whitespace' words or 'bpe' (the pre-tokenizer count
     real training budgets against)."""
-    from luzzu_spark.rules.heuristics import tokens_expr
-    if tokenizer == "bpe":
-        from luzzu_spark.queries_web import _BPE_PACK_PAT
-        n_toks = F.regexp_count(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(_BPE_PACK_PAT)).cast("long")
-    else:
-        n_toks = F.size(tokens_expr("text")).cast("long")
-    # only (id, source, n_toks) enters the window exchange — computing
-    # n_toks inside the projection prunes text/html BEFORE the shuffle
-    # (review r05: the previous withColumn carried every column,
-    # including the corpus text, through the per-source sort); the
-    # narrow seq_id frame then joins back on the well-distributed id
-    w = (Window.partitionBy("source").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    seq = (docs.select(F.col(id_col), F.col("source"),
-                       n_toks.alias("n_toks"))
-           .withColumn("cum_before",
-                       F.coalesce(F.sum("n_toks").over(w), F.lit(0)))
+    from luzzu_spark.queries_web import pack_offsets, pack_token_count
+    seq = (pack_offsets(docs, pack_token_count(tokenizer), id_col)
            .select(id_col, "n_toks",
                    F.concat_ws("#", "source",
                                F.expr(f"cum_before DIV {budget}"))
@@ -282,7 +256,8 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
         funnel["after_decontamination"] = kept.count()
 
     if args.sample_rate < 1.0:
-        kept = kept.where(stable_uniform() < F.lit(args.sample_rate))
+        from luzzu_spark.queries_text import stable_uniform_expr
+        kept = kept.where(stable_uniform_expr() < F.lit(args.sample_rate))
         funnel["after_sampling"] = kept.count()
 
     if args.pack_budget > 0:

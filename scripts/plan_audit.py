@@ -166,6 +166,8 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
             "smj": p.count("SortMergeJoin"),
             "arrow": p.count("ArrowEvalPython"),
             "sort": len(re.findall(r"\bSort \[", p)),
+            # interpreted per-element lambdas (CLAUDE.md rule 1)
+            "hof": p.count("lambdafunction"),
         }
         bad = []
         if "CartesianProduct" in p:
@@ -184,26 +186,30 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
         "",
         f"Generated by `python scripts/plan_audit.py` at `{sf_dir}`.",
         "Columns: shuffle exchanges / broadcast joins / sort-merge joins"
-        " / Arrow Python stages / sorts. Flags: CARTESIAN product,"
+        " / Arrow Python stages / sorts / interpreted lambda functions"
+        " (higher-order functions). Flags: CARTESIAN product,"
         " row-at-a-time Python, or a raw-text column used as a shuffle"
         " key (all banned; the hard assertions are in"
         " tests/test_plans.py).",
         "",
-        "| query | xchg | bhj | smj | arrow | sort | flags |",
-        "| --- | --- | --- | --- | --- | --- | --- |",
+        "| query | xchg | bhj | smj | arrow | sort | hof | flags |",
+        "| --- | --- | --- | --- | --- | --- | --- | --- |",
     ]
     for row in rows:
         if len(row) == 2:
-            lines.append(f"| {row[0]} | | | | | | {row[1]} |")
+            lines.append(f"| {row[0]} | | | | | | | {row[1]} |")
         else:
             name, c, bad = row
             lines.append(
                 f"| {name} | {c['xchg']} | {c['bhj']} | {c['smj']} "
-                f"| {c['arrow']} | {c['sort']} | {bad} |")
+                f"| {c['arrow']} | {c['sort']} | {c['hof']} | {bad} |")
     mat = driver_materialization_hits()
     stale = stale_allowlist_entries()
+    hof = [row[0] for row in rows if len(row) == 3 and row[1]["hof"]]
     lines += ["",
               f"Flagged queries: {flagged or 'none'}.",
+              "",
+              f"Queries with interpreted lambdas (hof > 0): {hof}.",
               "",
               "Driver-materialization audit (unallowed .collect()/"
               ".toPandas() in luzzu_spark/): "

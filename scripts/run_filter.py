@@ -199,17 +199,11 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-# last seen-set anti-join plan, exposed so tests can assert the CLI
-# path reads the committed corpus bucket-aligned (tests/test_checkpoint)
-LAST_SEEN_PLAN: str | None = None
-
-
 def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
     """The whole filter run against an existing session — the unit the
     CLI wraps and tests drive directly (same code path minus the
     spark-submit process spawn). ``args`` may be partial: every option
     it lacks takes the parser's default."""
-    global LAST_SEEN_PLAN
     from pyspark.sql import functions as F
 
     from luzzu_spark.checkpoint import ResumableRun
@@ -273,7 +267,6 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
     # (ResumableRun persists it); both sinks derive from that frame —
     # the round-1 version re-assessed in metrics_fn (ADVICE r1)
     def prepare(pages):
-        global LAST_SEEN_PLAN
         if args.as_webpages or "url" not in pages.columns:
             pages = as_webpages(pages, inject_pii=args.inject_pii)
         bloom_path = args.seen_bloom_path
@@ -295,8 +288,6 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
                 pages = seen_bloom_anti_join(pages, seen)
             else:
                 pages = seen_anti_join(pages, seen)
-            LAST_SEEN_PLAN = (pages._jdf.queryExecution()
-                              .executedPlan().toString())
         if nd_exists:
             # cross-run NEAR-dup dedup: docs near-duplicating the
             # committed MinHash index drop before the UDF stage, and

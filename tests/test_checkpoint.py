@@ -121,7 +121,7 @@ def test_cross_run_seen_set_dedup(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS seen_corpus_ckpt")
 
 
-def test_run_filter_cli_seen_set_flow(spark, tmp_path):
+def test_run_filter_cli_seen_set_flow(spark, tmp_path, monkeypatch):
     """VERDICT r02 item 4: the production entry point itself wires the
     cross-run seen-set. Day 1 commits a bucketed corpus table
     (--commit-bucket-table); day 2's run (--seen-table) drops every
@@ -131,6 +131,7 @@ def test_run_filter_cli_seen_set_flow(spark, tmp_path):
     import argparse
 
     import scripts.run_filter as rf
+    from luzzu_spark import dedup
     from luzzu_spark.fixtures import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -161,12 +162,23 @@ def test_run_filter_cli_seen_set_flow(spark, tmp_path):
                      .select("url").collect()}
         assert day1_urls
 
+        # capture the frame run_job's anti-join returns; its plan is
+        # built while broadcasts are still off
+        anti_join, seen_frames = dedup.seen_anti_join, []
+
+        def capture(batch, seen, *a, **kw):
+            seen_frames.append(anti_join(batch, seen, *a, **kw))
+            return seen_frames[-1]
+
+        monkeypatch.setattr(dedup, "seen_anti_join", capture)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             r2 = rf.run_job(spark, mkargs(
                 input=day2_in, output=str(tmp_path / "day2_out"),
                 seen_table="cli_seen_corpus"))
+            plan = (seen_frames[-1]._jdf.queryExecution()
+                    .executedPlan().toString() if seen_frames else None)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         assert r2["complete"]
@@ -181,7 +193,6 @@ def test_run_filter_cli_seen_set_flow(spark, tmp_path):
 
         # CLI-path plan contract: committed side bucket-aligned, url
         # column only, the single Exchange belongs to the incoming batch
-        plan = rf.LAST_SEEN_PLAN
         assert plan is not None
         assert "Bucketed: true" in plan, plan
         assert plan.count("Exchange hashpartitioning") == 1, plan

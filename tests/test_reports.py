@@ -68,16 +68,6 @@ def test_score_histogram_degenerate_range_raises(spark, assessed):
         score_histogram(assessed, "langid_conf", 0.0, 0.0)
 
 
-def test_scrub_false_pipeline_filters(spark):
-    """QualityPipeline(scrub=False) must still produce the filtered
-    corpus (raw text column) instead of failing UNRESOLVED_COLUMN on
-    the never-attached text_scrubbed (review r05)."""
-    pages = as_webpages(load_table(spark, SF, "documents"))
-    out = QualityPipeline(scrub=False).filtered(pages)
-    assert "text" in out.columns
-    assert out.count() > 0
-
-
 def test_observation_facets_complete(spark, assessed):
     obs = observations(assessed)
     rows = {r.metric: r for r in obs.collect()}

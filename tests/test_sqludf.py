@@ -243,3 +243,30 @@ def test_quality_score_sql_udf_parity(spark):
             .select("doc_id", quality_score_expr().alias("q"))
             .collect()}
     assert got == want
+
+
+def test_quality_score_counts_word_count_upper_bound(spark):
+    """A document over MAX_WORDS tokens fails the word_count rule in
+    all three forms of the composite score: the SQL function, the
+    catalog's DataFrame expression and the DuckDB twin of the oracles
+    (each used to check only the lower bound, or read 1.0)."""
+    import duckdb
+
+    from luzzu_spark.queries_text import _SCORE_SQL, quality_score_expr
+    from luzzu_spark.rules import spec
+
+    text = " ".join(["the quick brown fox jumps over lazy dogs"] * 12501)
+    assert len(text.split()) > spec.MAX_WORDS
+    register_sql_rules(spark)
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    df.createOrReplaceTempView("sqludf_long_doc")
+    udf = spark.sql("SELECT luzzu_quality_score(text) FROM "
+                    "sqludf_long_doc").collect()[0][0]
+    expr = (with_token_columns(df).select(quality_score_expr())
+            .collect()[0][0])
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 1 AS doc_id, "
+                "? AS text, ? AS n_chars", [text, len(text)])
+    duck = float(con.execute(f"SELECT {_SCORE_SQL} FROM documents")
+                 .fetchone()[0])
+    assert (udf, expr, duck) == (0.75, 0.75, 0.75)
