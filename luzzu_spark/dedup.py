@@ -9,8 +9,6 @@ document text:
               sharing a shingle (BASELINE.json:6);
 - MinHash+LSH: shingles → k minhashes → bands → bucket join; candidate
               pairs verified by exact Jaccard on signatures;
-- SimHash:    64-bit signature; near-dups = identical signature buckets
-              (banded pigeonhole for ≤k-bit differences);
 - clusters:   LSH-confirmed pairs → iterative min-label propagation →
               exact connected components (lowest-id cluster heads).
 
@@ -24,7 +22,7 @@ evaluated the tokenize chain 4× per pair query and dominated the round-1
 bench at 9.97 s; the Arrow form + exchange reuse runs it once).
 
 Determinism: token hashes are content-based and identical across
-batches/executors/runs — the SIGNATURE family (minhash/simhash/shingle
+batches/executors/runs — the SIGNATURE family (minhash/shingle
 sets) uses SQL-replayable modular arithmetic so DuckDB recomputes the
 exact signatures (see the _REPLAY_B block), the SPAN family keeps
 fixed-key siphash (pandas hash_array); permutation constants derive
@@ -74,12 +72,12 @@ _HASH_A = [(_splitmix64_py(i) % (_MERSENNE_P - 1)) + 1
 _HASH_B = [_splitmix64_py(0x5EED + i) % _MERSENNE_P
            for i in range(MINHASH_K)]
 
-SHINGLE_N = 5  # word-shingle width for minhash/simhash
+SHINGLE_N = 5  # word-shingle width for minhash
 _SHINGLE_MULT = np.uint64(0x9E3779B97F4A7C15)
 
 # ---------------------------------------------------------------------
-# SQL-replayable shingle-hash family (VERDICT r03 item 6): minhash and
-# simhash signatures must be REPLAYABLE in DuckDB so the driver can
+# SQL-replayable shingle-hash family (VERDICT r03 item 6): minhash
+# signatures must be REPLAYABLE in DuckDB so the driver can
 # hash-check them like docs_langid/docs_perplexity_hist replay their
 # models. pd.util.hash_array (siphash) cannot be expressed in SQL, so
 # the signature path hashes with pure modular arithmetic instead:
@@ -155,7 +153,7 @@ def _shingle_segments(texts: pd.Series, n: int = SHINGLE_N,
     modular-arithmetic scheme (module docstring above _REPLAY_B): the
     returned values are 62-bit h62 = h_hi·2³¹ + h_lo, reproducible
     bit-for-bit in DuckDB/Spark SQL — used by the signature kernels so
-    the driver can hash-check minhash/simhash end-to-end. The default
+    the driver can hash-check minhash end-to-end. The default
     keeps the faster 64-bit siphash+polynomial family (span kernel).
 
     tokens of every doc are flattened into ONE object array → pandas
@@ -244,30 +242,6 @@ def minhash_batch(texts: pd.Series) -> pd.Series:
     return pd.Series(out, index=texts.index, dtype=object)
 
 
-def simhash_batch(texts: pd.Series) -> pd.Series:
-    """63-bit SimHash per doc (bit b = majority of bit b over shingle
-    hashes; bit 63 excluded so the value stays positive — and bit 62
-    is always 0 under the 62-bit replayable family); None for docs
-    with no shingles. Replayable: simhash_pairs_oracle_sql recomputes
-    these exact values in DuckDB."""
-    h, starts, m = _shingle_segments(texts, replayable=True)
-    out = np.zeros(len(texts), dtype=np.int64)
-    if h.size:
-        nz = m > 0
-        nz_starts = starts[nz]
-        n_sh = m[nz]
-        acc = np.zeros(int(nz.sum()), dtype=np.int64)
-        for b in range(63):
-            cnt = np.add.reduceat(
-                ((h >> np.uint64(b)) & np.uint64(1)).astype(np.int64),
-                nz_starts)
-            acc |= (cnt * 2 > n_sh).astype(np.int64) << b
-        out[nz] = acc
-    s = pd.Series(out, index=texts.index).astype("object")
-    s[m == 0] = None
-    return s
-
-
 def shingle_set_batch(texts: pd.Series) -> pd.Series:
     """Distinct shingle hashes per doc (int64 list; empty for short
     docs) — the exact-Jaccard verify input (replayable family, same
@@ -353,11 +327,6 @@ def _minhash_udf(texts: pd.Series) -> pd.Series:
     return minhash_batch(texts)
 
 
-@pandas_udf(LongType())
-def _simhash_udf(texts: pd.Series) -> pd.Series:
-    return simhash_batch(texts)
-
-
 @pandas_udf(ArrayType(LongType()))
 def _shingle_set_udf(texts: pd.Series) -> pd.Series:
     return shingle_set_batch(texts)
@@ -368,7 +337,6 @@ def _shingle_set_udf(texts: pd.Series) -> pd.Series:
 # pushdown would otherwise duplicate the whole Arrow stage into a
 # Filter below the projection — the measured 4× trap, CLAUDE.md rule 7).
 _minhash_udf = _minhash_udf.asNondeterministic()
-_simhash_udf = _simhash_udf.asNondeterministic()
 _shingle_set_udf = _shingle_set_udf.asNondeterministic()
 
 
@@ -476,77 +444,6 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     sigs = minhash_signatures(docs, id_col).localCheckpoint(eager=True)
     return (lsh_candidate_pairs(sigs, id_col, bands=bands)
             .where(F.col("est_jaccard") >= threshold))
-
-
-def simhash_signatures(docs: DataFrame,
-                       id_col: str = "doc_id") -> DataFrame:
-    """(id, simhash: long) — 63-bit majority-vote SimHash, one
-    vectorized Arrow pass (see simhash_batch). No-shingle docs drop."""
-    from luzzu_spark.fixtures import spread
-    return (spread(docs)
-            .select(F.col(id_col),
-                    _simhash_udf(F.col("text")).alias("simhash"))
-            .where(F.col("simhash").isNotNull()))
-
-
-def simhash_bucket_pairs(docs: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
-    """Exact-signature collision pairs (Hamming distance 0 blocking);
-    k-bit tolerance → simhash_near_pairs. The explicit repartition on
-    the join key shares one exchange across both self-join sides —
-    the signature UDF runs once. Unsorted (catalog wrapper sorts)."""
-    sigs = (simhash_signatures(docs, id_col)
-            .repartition(F.col("simhash")))
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash"))
-    return (a.join(b, "simhash")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "simhash"))
-
-
-SIMHASH_BANDS = 4  # pigeonhole blocking: dist ≤ BANDS-1 ⇒ ≥1 equal band
-
-
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
-                       id_col: str = "doc_id") -> DataFrame:
-    """Hamming-tolerant near-dup pairs via banded pigeonhole blocking.
-
-    The 63-bit signature splits into SIMHASH_BANDS contiguous bands; two
-    signatures within Hamming distance ≤ SIMHASH_BANDS-1 must agree on
-    at least one whole band (pigeonhole), so the candidate join is per
-    (band index, band value) bucket — never corpus². Candidates are then
-    verified exactly with bit_count(a XOR b) ≤ max_hamming. Complete
-    (recall 1.0) whenever max_hamming ≤ SIMHASH_BANDS-1.
-
-    Scale: same blocking shape as MinHash LSH banding; shuffle keys are
-    (int, long) pairs, signatures 1 long per side; the repartition
-    shares one exchange across both self-join sides. Unsorted."""
-    if max_hamming > SIMHASH_BANDS - 1:
-        raise ValueError(
-            f"pigeonhole completeness needs max_hamming <= "
-            f"{SIMHASH_BANDS - 1}; raise SIMHASH_BANDS for more")
-    sigs = simhash_signatures(docs, id_col)
-    width = 63 // SIMHASH_BANDS + 1  # 16 bits/band over 63 bits
-    bands = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned("simhash", i * width)
-             .bitwiseAND(F.lit((1 << width) - 1)).alias("bv"))
-        for i in range(SIMHASH_BANDS)])
-    exploded = (sigs.withColumn("b", F.explode(bands))
-                .select(F.col(id_col), "simhash",
-                        F.col("b.band"), F.col("b.bv"))
-                .repartition(F.col("band"), F.col("bv")))
-    left = exploded.select(F.col(id_col).alias("id_a"),
-                           F.col("simhash").alias("sh_a"), "band", "bv")
-    right = exploded.select(F.col(id_col).alias("id_b"),
-                            F.col("simhash").alias("sh_b"), "band", "bv")
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (left.join(right, ["band", "bv"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", dist.alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .dropDuplicates(["id_a", "id_b"]))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, candidates: DataFrame,
@@ -1783,7 +1680,7 @@ def remove_dup_spans(docs: DataFrame, n: int = 20,
 # DuckDB oracle replays of the signature computations (VERDICT r03
 # item 6). These generate the EXACT signatures the Arrow kernels above
 # produce — same constants, same modular arithmetic, same tokenizer —
-# so the driver's hash-compare verifies the production minhash/simhash
+# so the driver's hash-compare verifies the production minhash
 # end-to-end, the way docs_langid/docs_perplexity_hist replay their
 # models. Generated from the module constants: one source of truth.
 # ---------------------------------------------------------------------
@@ -1846,21 +1743,6 @@ sigarr AS (SELECT doc_id, list(v ORDER BY k) AS sig
            FROM sig GROUP BY doc_id)"""
 
 
-def _simhash_cte() -> str:
-    """CTE ``sim``: (doc_id, simhash) — the exact simhash_batch
-    output (63-bit majority vote; bit 62 is always 0 under h62)."""
-    pow2 = _sql_list(1 << b for b in range(63))
-    return f""",
-bits AS (SELECT doc_id, b,
-           CASE WHEN SUM((h62 // ({pow2})[b + 1]) % 2) * 2 > COUNT(*)
-                THEN 1 ELSE 0 END AS bit
-         FROM x CROSS JOIN (SELECT unnest(range(63)) AS b)
-         GROUP BY doc_id, b),
-sim AS (SELECT doc_id, CAST(SUM(bit * ({pow2})[b + 1]) AS BIGINT)
-               AS simhash
-        FROM bits GROUP BY doc_id)"""
-
-
 def minhash_pairs_oracle_sql(threshold: float = 0.5,
                              bands: int = LSH_BANDS) -> str:
     """Full DuckDB replay of minhash_dedup_pairs: signatures → LSH
@@ -1891,36 +1773,6 @@ FROM cand c JOIN sigarr sa ON sa.doc_id = c.id_a
 WHERE CAST(len(list_filter(list_zip(sa.sig, sb.sig),
                            pr -> pr[1] = pr[2])) AS DOUBLE)
       / {MINHASH_K} >= {threshold}
-ORDER BY id_a, id_b
-"""
-
-
-def simhash_pairs_oracle_sql() -> str:
-    """DuckDB replay of simhash_bucket_pairs (identical-signature
-    collisions): signatures via the bit-majority replay, pairs via
-    equality self-join."""
-    return f"""
-WITH {_replayable_sig_ctes()}{_simhash_cte()}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.simhash
-FROM sim a JOIN sim b ON a.simhash = b.simhash
-                      AND a.doc_id < b.doc_id
-ORDER BY id_a, id_b
-"""
-
-
-def simhash_near_oracle_sql(max_hamming: int = 3) -> str:
-    """EXHAUSTIVE DuckDB twin of simhash_near_pairs: every pair within
-    Hamming ≤ k, by brute force over all doc pairs — deliberately
-    stronger than replaying the pigeonhole blocking, so a driver match
-    also certifies the blocking's completeness (recall 1.0), not just
-    the signature math. Quadratic by design: an ORACLE at fixture
-    scale, never a production plan."""
-    return f"""
-WITH {_replayable_sig_ctes()}{_simhash_cte()}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 ORDER BY id_a, id_b
 """
 

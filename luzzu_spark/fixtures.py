@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+TABLES = ("region", "nation", "customer", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 

@@ -99,17 +99,6 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b"))
 
 
-@register("dedup_simhash_pairs",
-          oracle=dedup.simhash_pairs_oracle_sql())
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identical-SimHash collision pairs — oracle-checked since r04:
-    the DuckDB twin recomputes the 63-bit majority-vote signatures from
-    the replayable shingle family and must match (id_a, id_b, simhash)
-    exactly."""
-    return (dedup.simhash_bucket_pairs(_docs(spark, sf_dir))
-            .orderBy("id_a", "id_b"))
-
-
 @register("dedup_exact_survivors", oracle="""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_survivors,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -519,22 +508,6 @@ def pipeline_rank_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = as_webpages(_docs(spark, sf_dir), inject_pii=True)
     assessed = QualityPipeline().assess(pages)
     return rank_sources(assessed).orderBy("rank", "source")
-
-
-@register("dedup_simhash_near",
-          oracle=dedup.simhash_near_oracle_sql(max_hamming=3))
-def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming-tolerant SimHash near-dup pairs (banded pigeonhole
-    blocking + bit_count verify; complete for dist <= bands-1).
-    Oracle-checked since r04 — and the oracle is EXHAUSTIVE (every
-    pair within Hamming ≤ 3 by brute force over the replayed
-    signatures), so a driver match certifies both the signature math
-    AND the blocking's recall-1.0 completeness, strictly stronger than
-    the local brute-force test in tests/test_dedup_similarity.py."""
-    from luzzu_spark.dedup import simhash_near_pairs
-    return (simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
-            .withColumn("hamming", F.col("hamming").cast("long"))
-            .orderBy("id_a", "id_b"))
 
 
 @register("dedup_near_survivors",

@@ -1,5 +1,6 @@
-"""Scale-technique queries: salting, approx sketches, cube facets,
-host-partitioned ranking — SURVEY.md §2.4/§2.5/§2.6 completions.
+"""Scale-technique queries over the documents table: salting, cube
+facets, host-partitioned ranking, percentiles and skew audits; plus
+one mergeable HLL sketch over the `events` fixture.
 
 The salted variants are oracle-checked against the PLAIN aggregation
 SQL: two-phase salted aggregation must be result-identical to direct
@@ -81,18 +82,6 @@ def join_salted_docs_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang"))
 
 
-@register("agg_approx_distinct")
-def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL++ sketch path (rows-only: approx values are engine-specific;
-    the exact twin agg_distinct_stats is the oracle-checked op). At
-    10^12 docs, exact distinct-host counting is a full shuffle of every
-    key — the sketch is mergeable per partition, rsd-bounded."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.agg(
-        F.approx_count_distinct("o_custkey", 0.02).alias("approx_custs"),
-        F.approx_count_distinct("o_orderstatus").alias("approx_statuses"))
-
-
 @register("agg_cube_lang_source", oracle="""
 SELECT lang, source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -131,50 +120,6 @@ def window_top2_docs_per_source(spark: SparkSession,
             .where(F.col("rnk") <= 2)
             .select("source", "doc_id", "n_chars", "rnk")
             .orderBy("source", "rnk"))
-
-
-@register("supplier_revenue_by_nation", oracle="""
-SELECT n.n_name,
-       CAST(COUNT(DISTINCT s.s_suppkey) AS BIGINT) AS n_suppliers,
-       CAST(ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2)
-            AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n   ON s.s_nationkey = n.n_nationkey
-GROUP BY n.n_name ORDER BY n.n_name
-""")
-def supplier_revenue_by_nation(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Fact⋈dim⋈dim star: supplier+nation broadcast, one fact shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    dim = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-    return (li.join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey)
-            .groupBy("n_name")
-            .agg(F.countDistinct("s_suppkey").alias("n_suppliers"),
-                 F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy("n_name"))
-
-
-@register("part_type_price_stats", oracle="""
-SELECT p_type,
-       CAST(COUNT(*) AS BIGINT) AS n_parts,
-       CAST(ROUND(AVG(p_retailprice), 6) AS DOUBLE) AS avg_price,
-       CAST(ROUND(MIN(p_retailprice), 2) AS DOUBLE) AS min_price,
-       CAST(ROUND(MAX(p_retailprice), 2) AS DOUBLE) AS max_price
-FROM part GROUP BY p_type ORDER BY p_type
-""")
-def part_type_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part")
-    return (p.groupBy("p_type")
-            .agg(F.count(F.lit(1)).alias("n_parts"),
-                 F.round(F.avg("p_retailprice"), 6).alias("avg_price"),
-                 F.round(F.min("p_retailprice"), 2).alias("min_price"),
-                 F.round(F.max("p_retailprice"), 2).alias("max_price"))
-            .orderBy("p_type"))
 
 
 @register("set_union_lang_counts", oracle="""
@@ -254,73 +199,6 @@ def text_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang"))
 
 
-@register("events_session_counts", oracle="""
-WITH marked AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER (
-              PARTITION BY user_id ORDER BY ts, event_id))
-              > 1800000000 OR LAG(ts) OVER (
-              PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events)
-SELECT user_id,
-       CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM marked GROUP BY user_id ORDER BY user_id
-""")
-def events_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization via gaps-and-islands (lag + flag-sum): a
-    user's session closes after 30 minutes of silence, the semantics of
-    Spark's session_window. One shuffle on user_id; the sort within
-    each partition feeds both the lag and the count.
-
-    The gap compares EXACT epoch MICROSECONDS on both engines (review
-    r05, same class as window_range_time_sum): Spark unix_timestamp
-    TRUNCATES sub-second fractions while DuckDB EPOCH keeps them, so a
-    true gap of 1800.x s straddling the threshold could sessionize
-    differently per engine — previous green runs were fractional-
-    alignment luck."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"),
-                                              F.asc("event_id"))
-    gap = (F.unix_micros(F.col("ts").cast("timestamp"))
-           - F.unix_micros(F.lag("ts").over(w).cast("timestamp")))
-    new_session = (gap.isNull() | (gap > 1_800_000_000)).cast("long")
-    return (e.withColumn("ns", new_session)
-            .groupBy("user_id")
-            .agg(F.sum("ns").cast("long").alias("n_sessions"),
-                 F.count(F.lit(1)).alias("n_events"))
-            .orderBy("user_id"))
-
-
-@register("window_range_time_sum", oracle="""
-SELECT event_id,
-       CAST(ROUND(SUM(value) OVER (PARTITION BY user_id
-             ORDER BY epoch_us(ts)
-             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW), 2)
-            AS DOUBLE) AS sum_10min
-FROM events ORDER BY event_id
-""")
-def window_range_time_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-RANGE window frame (SURVEY.md §2.6): trailing-10-minute
-    value sum per user. RANGE frames include peer rows (same ts) in
-    both engines, so no tie-break column is needed — unlike ROWS
-    frames, which would be order-sensitive. The frame key is EXACT
-    epoch MICROSECONDS on both engines: unix_timestamp()/EPOCH()
-    truncate/keep sub-second fractions differently, which flips events
-    sitting exactly ~600 s apart across the frame boundary (found at
-    sf0.01 — whole-second keys silently agreed at sf0.001)."""
-    from pyspark.sql import Window as W
-    e = load_table(spark, sf_dir, "events")
-    w = (W.partitionBy("user_id")
-         .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
-         .rangeBetween(-600_000_000, 0))
-    return (e.select("event_id",
-                     F.round(F.sum("value").over(w), 2)
-                     .alias("sum_10min"))
-            .orderBy("event_id"))
-
-
 @register("docs_chars_histogram", oracle="""
 SELECT LEAST(19, GREATEST(0,
          CAST(FLOOR(n_chars / 30.0) AS INTEGER))) AS bucket,
@@ -337,76 +215,6 @@ def docs_chars_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (d.groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("bucket"))
-
-
-@register("join_asof_event_order", oracle="""
-SELECT event_id, user_id, asof_orderkey FROM (
-  SELECT e.event_id, e.user_id, o.o_orderkey AS asof_orderkey,
-         ROW_NUMBER() OVER (PARTITION BY e.event_id
-             ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-  FROM events e
-  JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
-WHERE rn = 1 ORDER BY event_id
-""")
-def join_asof_event_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (SURVEY.md §2.5): each event picks the LATEST order
-    of the same user at or before the event time (tie-break: highest
-    o_orderkey).
-
-    Scale shape — union-sort-last, NOT join-then-rank: tagging both
-    tables, sorting once per user on (time, tag, key) and carrying the
-    last non-null order key forward costs ONE shuffle+sort of
-    |events|+|orders| rows. The naive non-equi join (the oracle's
-    formulation, fine for DuckDB at fixture scale) multiplies each
-    event by ALL its prior orders before ranking — quadratic per user
-    at production scale."""
-    e = load_table(spark, sf_dir, "events")
-    o = load_table(spark, sf_dir, "orders")
-    ev = e.select("user_id", F.col("ts").alias("t"),
-                  F.lit(1).alias("is_event"), "event_id",
-                  F.lit(None).cast("long").alias("okey"))
-    od = o.select(F.col("o_custkey").alias("user_id"),
-                  F.col("o_orderdate").alias("t"),
-                  F.lit(0).alias("is_event"),
-                  F.lit(None).cast("long").alias("event_id"),
-                  F.col("o_orderkey").alias("okey"))
-    w = (Window.partitionBy("user_id")
-         .orderBy("t", "is_event", "okey")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    return (od.unionByName(ev)
-            .withColumn("asof_orderkey",
-                        F.last("okey", ignorenulls=True).over(w))
-            .where((F.col("is_event") == 1)
-                   & F.col("asof_orderkey").isNotNull())
-            .select("event_id", "user_id", "asof_orderkey")
-            .orderBy("event_id"))
-
-
-@register("events_sliding_10x5", oracle="""
-WITH starts AS (
-  SELECT CAST(FLOOR(EPOCH(ts) / 300) * 300 AS BIGINT) AS window_start,
-         value FROM events
-  UNION ALL
-  SELECT CAST(FLOOR(EPOCH(ts) / 300) * 300 - 300 AS BIGINT), value
-  FROM events)
-SELECT window_start,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(ROUND(SUM(value), 2) AS DOUBLE) AS sum_value
-FROM starts GROUP BY window_start ORDER BY window_start
-""")
-def events_sliding_10x5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window agg (10-minute window, 5-minute slide) — each
-    event lands in exactly two windows; the oracle replays that
-    membership with a two-start UNION ALL. window() start returned as
-    epoch seconds for portability (queries.py determinism rules)."""
-    e = load_table(spark, sf_dir, "events")
-    return (e.groupBy(F.window("ts", "10 minutes", "5 minutes")
-                      .alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.unix_timestamp("w.start").alias("window_start"),
-                    "n_events", "sum_value")
-            .orderBy("window_start"))
 
 
 @register("agg_pivot_source_lang", oracle="""
@@ -445,7 +253,7 @@ def agg_percentile_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     language (score-distribution reporting). Exact percentile needs
     the full value multiset per group — fine for bounded-cardinality
     report groups like lang; the streaming/per-host path uses
-    approx_percentile (agg_approx_distinct's contract) instead."""
+    approx_percentile instead."""
     return (_docs(spark, sf_dir).groupBy("lang")
             .agg(F.round(F.percentile("n_chars", F.lit(0.5)), 6)
                  .alias("p50_chars"),

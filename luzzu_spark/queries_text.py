@@ -17,12 +17,19 @@ from luzzu_spark import dedup as _dedup
 from luzzu_spark.fixtures import load_table, spread
 from luzzu_spark.queries import register
 from luzzu_spark.rules import spec
-from luzzu_spark.rules.heuristics import (quality_score_sql,
+from luzzu_spark.rules.heuristics import (heuristic_rules,
+                                          quality_score_sql,
                                           with_token_columns)
 from luzzu_spark.rules.stopwords import STOPWORDS
 
 _SW_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 _TOKS = "list_filter(string_split(trim(text), ' '), x -> x <> '')"
+
+
+def _rule_score(name: str) -> F.Column:
+    """A heuristic rule's score SQL, over the token helper columns."""
+    return F.expr(next(r.score_sql for r in heuristic_rules()
+                       if r.name == name))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,10 +61,7 @@ FROM documents GROUP BY lang ORDER BY lang
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize + mean-word-length metrics aggregated per language."""
     d = with_token_columns(_docs(spark, sf_dir))
-    total_len = F.aggregate("tokens", F.lit(0).cast("long"),
-                            lambda acc, t: acc + F.length(t))
-    return (d.withColumn("mwl", F.try_divide(total_len.cast("double"),
-                                             F.col("n_tokens")))
+    return (d.withColumn("mwl", _rule_score("mean_word_len"))
             .groupBy("lang")
             .agg(F.round(F.avg("n_tokens"), 6).alias("avg_tokens"),
                  F.max("n_tokens").cast("long").alias("max_tokens"),
@@ -73,14 +77,9 @@ SELECT lang,
 FROM documents GROUP BY lang ORDER BY lang
 """)
 def text_stopword_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher stop-word fraction, averaged per language (the broadcast
-    reference-table pattern: stopword list ships as a literal array)."""
+    """Gopher stop-word fraction, averaged per language."""
     d = with_token_columns(_docs(spark, sf_dir))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    hits = F.size(F.filter("tokens",
-                           lambda t: F.array_contains(sw, t)))
-    return (d.withColumn("sf", F.try_divide(hits.cast("double"),
-                                            F.col("n_tokens")))
+    return (d.withColumn("sf", _rule_score("stopword_frac"))
             .groupBy("lang")
             .agg(F.round(F.avg("sf"), 6).alias("avg_stop_frac"))
             .orderBy("lang"))
@@ -104,9 +103,7 @@ def text_quality_flag_counts(spark: SparkSession,
     """Per-rule firing counts for the declarative heuristics — the
     rule-firing-rate metric (BASELINE.json:6) with a SQL oracle."""
     d = with_token_columns(_docs(spark, sf_dir))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    hits = F.size(F.filter("tokens", lambda t: F.array_contains(sw, t)))
-    stop_frac = F.try_divide(hits.cast("double"), F.col("n_tokens"))
+    stop_frac = _rule_score("stopword_frac")
     return (d.groupBy("lang").agg(
         F.sum((F.col("n_chars") < spec.MIN_DOC_CHARS).cast("long"))
          .alias("n_too_short"),

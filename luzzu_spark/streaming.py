@@ -15,7 +15,7 @@ a finite file, ours is an unbounded crawl feed):
 
 Every builder takes/returns DataFrames so batch tests can exercise the
 identical expressions; streaming tests run the real engine against a
-file source over the events/documents fixtures with an in-memory sink.
+file source over the documents fixture with an in-memory sink.
 """
 
 from __future__ import annotations

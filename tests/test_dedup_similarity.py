@@ -55,12 +55,6 @@ def test_exact_dedup_idempotent(spark, docs):
     assert once.count() == dedup.exact_dedup(once).count()
 
 
-def test_simhash_pairs_are_near_dups(spark, docs, ground_truth_pairs):
-    pairs = dedup.simhash_bucket_pairs(docs).collect()
-    for r in pairs:
-        assert ground_truth_pairs.get((r["id_a"], r["id_b"]), 0) >= 0.5
-
-
 def test_brute_force_topk_matches_numpy(spark, docs_pdf):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pdf = emb.toPandas()
@@ -167,38 +161,6 @@ def test_near_dup_survivors(spark):
     # originals of the twins survive
     orig_ids = {i - 100000 for i in twin_ids}
     assert orig_ids <= ids
-
-
-def test_simhash_near_pairs_complete_vs_brute_force(spark, docs):
-    """Banded blocking must find EVERY pair within max_hamming
-    (pigeonhole completeness) — checked against a brute-force numpy
-    Hamming scan over all signature pairs."""
-    import numpy as np
-    sigs = dedup.simhash_signatures(docs).collect()
-    ids = np.array([r.doc_id for r in sigs])
-    vals = np.array([r.simhash for r in sigs], dtype=np.uint64)
-    xor = vals[:, None] ^ vals[None, :]
-    # vectorized popcount via uint8 view + unpackbits-free table
-    dist = np.zeros(xor.shape, dtype=np.int64)
-    v = xor.copy()
-    while v.any():
-        dist += (v & np.uint64(1)).astype(np.int64)
-        v >>= np.uint64(1)
-    iu = np.triu_indices(len(ids), 1)
-    want = set()
-    for i, j in zip(*iu):
-        if dist[i, j] <= 3:
-            a, b = int(ids[i]), int(ids[j])
-            want.add((min(a, b), max(a, b)))
-    got = {(r.id_a, r.id_b)
-           for r in dedup.simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert got == want, (sorted(want - got)[:5], sorted(got - want)[:5])
-
-
-def test_simhash_near_pairs_guard(spark, docs):
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_near_pairs(docs, max_hamming=10)
 
 
 def test_near_dup_clusters_exact_components(spark):
@@ -683,8 +645,8 @@ def test_near_dup_clusters_long_chain_converges(spark):
 
 
 def test_replayable_signature_kernels_match_python_reference():
-    """The vectorized signature kernels (minhash_batch / simhash_batch
-    / shingle_set_batch) must equal a transparent pure-Python
+    """The vectorized signature kernels (minhash_batch /
+    shingle_set_batch) must equal a transparent pure-Python
     implementation of the documented hash spec (dedup.py _REPLAY_B
     block) on random corpora — including non-ASCII codepoints and
     tokens beyond the 32-char truncation point. This pins the numpy
@@ -720,16 +682,6 @@ def test_replayable_signature_kernels_match_python_reference():
         return [min((a * (h % P) + b) % P for h in hs)
                 for a, b in zip(dedup._HASH_A, dedup._HASH_B)]
 
-    def ref_simhash(text: str):
-        hs = shingles(text)
-        if not hs:
-            return None
-        acc = 0
-        for b in range(63):
-            if sum((h >> b) & 1 for h in hs) * 2 > len(hs):
-                acc |= 1 << b
-        return acc
-
     token = st.text(
         alphabet=st.sampled_from(list("abzé中9!") + ["x"]),
         min_size=1, max_size=40)
@@ -741,11 +693,9 @@ def test_replayable_signature_kernels_match_python_reference():
     def prop(texts):
         s = pd.Series(texts)
         got_min = dedup.minhash_batch(s)
-        got_sim = dedup.simhash_batch(s)
         got_set = dedup.shingle_set_batch(s)
         for i, t in enumerate(texts):
             assert got_min[i] == ref_minhash(t), (t, got_min[i])
-            assert got_sim[i] == ref_simhash(t), (t, got_sim[i])
             assert sorted(got_set[i]) == sorted(set(shingles(t))), t
 
     prop()

@@ -27,7 +27,7 @@ from tests.conftest import SF_SMOKE
 # reproduces the driver's exact scale.
 ORACLE_SF = os.environ.get("LUZZU_ORACLE_SF", SF_SMOKE)
 
-_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+_TABLES = ("region", "nation", "customer", "part", "orders",
            "lineitem", "events", "documents", "embeddings")
 
 
