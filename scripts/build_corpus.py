@@ -60,7 +60,9 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
-    p.add_argument("--master", default=None)
+    p.add_argument("--master", default=None,
+                   help="override; else inherit spark-submit's --master, "
+                   "or local[<cpus>] when run with python")
     p.add_argument("--as-webpages", action="store_true")
     p.add_argument("--inject-pii", action="store_true")
     p.add_argument("--bench-input", default=None,
@@ -303,13 +305,8 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 def main() -> None:
     args = build_parser().parse_args()
-    from luzzu_spark.session import DEFAULT_CONFS
-    builder = SparkSession.builder.appName("luzzu_spark_build_corpus")
-    if args.master:
-        builder = builder.master(args.master)
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    from luzzu_spark.session import get_spark
+    spark = get_spark("luzzu_spark_build_corpus", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     funnel = build(spark, args)
     if args.json:

@@ -48,7 +48,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--master", default=None,
-                   help="override; else inherit spark-submit's --master")
+                   help="override; else inherit spark-submit's --master, "
+                   "or local[<cpus>] when run with python")
     p.add_argument("--batch-size", type=int, default=8,
                    help="input files per committed batch")
     p.add_argument("--repeat", type=int, default=1)
@@ -440,14 +441,8 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 def main() -> None:
     args = build_parser().parse_args()
-    from luzzu_spark.session import DEFAULT_CONFS
-
-    builder = SparkSession.builder.appName("luzzu_spark_filter")
-    if args.master:
-        builder = builder.master(args.master)
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    from luzzu_spark.session import get_spark
+    spark = get_spark("luzzu_spark_filter", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     result = run_job(spark, args)
     if args.json:
