@@ -9,8 +9,12 @@ document text:
               sharing a shingle (BASELINE.json:6);
 - MinHash+LSH: shingles → k minhashes → bands → bucket join; candidate
               pairs verified by exact Jaccard on signatures;
-- clusters:   LSH-confirmed pairs → iterative min-label propagation →
-              exact connected components (lowest-id cluster heads).
+- clusters:   LSH-confirmed pairs → per-partition numpy union-find
+              (one Arrow pass) → min-label rounds over the contracted
+              graph of cross-partition roots only → exact connected
+              components (lowest-id cluster heads);
+- decontam:   one Arrow flag pass tests each doc's 13-gram hashes
+              against the broadcast bench hashes — no explode, no join.
 
 Signature derivation is ONE vectorized Arrow pass (pandas hash_array →
 uint64 rolling shingle hash → per-doc reduceat), not Catalyst
@@ -46,7 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 # MinHash parameters (frozen): k permutations in b bands of r rows.
 MINHASH_K = 32
@@ -1310,41 +1314,74 @@ def compact_minhash_index(spark, sigs_table: str, bands_table: str,
     return report
 
 
-def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
-                      id_col: str = "doc_id") -> DataFrame:
-    """Exact connected components over near-dup pairs → (id, cluster)
-    where cluster = lowest reachable id (the cluster head).
+def _union_find_roots(a: np.ndarray, b: np.ndarray
+                      ) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the edges (a[i], b[i]) → (ids, roots):
+    every endpoint once, with the lowest id of its component.
 
-    Iterative min-label propagation WITH per-round pointer doubling:
-    every node takes the min of (its label, its neighbors' labels,
-    its label's label). The neighbor step moves the component min one
-    hop per round; the shortcut step then halves the remaining
-    distance, so convergence needs O(log diameter) rounds — a
-    10^6-node chain converges inside the default max_iter, where
-    plain propagation would need 10^6 rounds. Both steps only ever
-    replace a label with a smaller label of a node in the same
-    component, so the fixpoint is exactly the component minimum.
-    Converged when the global label sum stops falling (labels are
-    monotone non-increasing, so the sum is a complete convergence
-    certificate); if max_iter rounds pass without the certificate,
-    this RAISES instead of returning silently-wrong clusters.
+    Vectorized union-find: endpoints factorize to sorted indices, every
+    tree root hooks onto the smallest root across its edges, then
+    pointer jumping flattens the forest. Pointers only ever move to a
+    smaller index of the same component, so the forest stays acyclic,
+    and each round at least halves the trees of every component that
+    still has an edge between two of them (O(log n) rounds)."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[:a.size], inv[a.size:]
+    lab = np.arange(ids.size)
+    while True:
+        la, lb = lab[ea], lab[eb]
+        cross = la != lb
+        if not cross.any():
+            return ids, ids[lab]
+        lo = np.minimum(la[cross], lb[cross])
+        np.minimum.at(lab, la[cross], lo)
+        np.minimum.at(lab, lb[cross], lo)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
 
-    Scale: each round is two shuffle-on-id joins over (edge, label) /
-    (label, label) rows; localCheckpoint() truncates the growing
-    lineage so round N doesn't replan rounds 1..N-1 (the standard
-    Spark iterative-algorithm discipline). No collect — the only
-    driver value is the Σlabel convergence probe."""
-    # both edge directions from ONE read of pairs (a union of two
-    # reads would evaluate the pair plan twice)
+
+def _local_roots_arrow(batches):
+    """mapInArrow body: one union-find over the partition's edges."""
+    import pyarrow as pa
+    tables = [b for b in batches if b.num_rows]
+    if not tables:
+        return
+    t = pa.Table.from_batches(tables)
+    ids, roots = _union_find_roots(
+        t.column(0).to_numpy(), t.column(1).to_numpy())
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, t.schema.field(0).type),
+         pa.array(roots, t.schema.field(0).type)], ["id", "root"])
+
+
+def _min_label_rounds(links: DataFrame, max_iter: int) -> DataFrame:
+    """Exact connected components of an (src, dst) edge frame → (id,
+    label), label = the component's lowest id, by distributed min-label
+    propagation WITH per-round pointer doubling: every node takes the
+    min of (its label, its neighbors' labels, its label's label). The
+    neighbor step moves the component min one hop per round; the
+    shortcut step then halves the remaining distance, so convergence
+    needs O(log diameter) rounds. Both steps only ever replace a label
+    with a smaller label of a node in the same component, so the
+    fixpoint is exactly the component minimum. Converged when the
+    global label sum stops falling (labels are monotone
+    non-increasing, so the sum is a complete convergence certificate);
+    if max_iter rounds pass without the certificate, this RAISES
+    instead of returning silently-wrong clusters.
+
+    Each round is two shuffle-on-id joins; localCheckpoint() truncates
+    the growing lineage so round N doesn't replan rounds 1..N-1."""
     both = F.array(
-        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = (pairs.select(F.explode(both).alias("e"))
+        F.struct(F.col("src"), F.col("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = (links.select(F.explode(both).alias("e"))
              .select("e.src", "e.dst").distinct().localCheckpoint())
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     prev_sum = None
-    converged = False
     for _ in range(max_iter):
         nbr_min = (edges.join(labels,
                               edges.dst == labels.id)
@@ -1366,16 +1403,58 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
                   .localCheckpoint())
         cur = labels.agg(F.sum("label")).first()[0]
         if cur == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur
-    if not converged:
-        raise RuntimeError(
-            f"near_dup_clusters: no convergence certificate after "
-            f"{max_iter} rounds — raise max_iter (log2(diameter) "
-            f"rounds suffice with pointer doubling)")
-    return labels.select(F.col("id").alias(id_col),
-                         F.col("label").alias("cluster"))
+    raise RuntimeError(
+        f"near_dup_clusters: no convergence certificate after "
+        f"{max_iter} rounds — raise max_iter (log2(diameter) "
+        f"rounds suffice with pointer doubling)")
+
+
+def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
+                      id_col: str = "doc_id") -> DataFrame:
+    """Exact connected components over near-dup pairs → (id, cluster)
+    where cluster = lowest reachable id (the cluster head).
+
+    Two levels. First, ONE mapInArrow pass runs a numpy union-find
+    over each partition's (id_a, id_b) edges and emits (id, root),
+    root = the lowest id of the node's LOCAL component; that frame is
+    checkpointed. A node whose edges sit in several partitions has one
+    root per partition, and those roots belong to one component: they
+    are the only links left, the contracted graph. When it is empty
+    (always, for an edge frame in one partition) every root is already
+    its component's minimum. Otherwise the distributed min-label
+    rounds (_min_label_rounds, with their convergence certificate —
+    too few rounds RAISE) run on the contracted graph alone, whose
+    nodes are local roots, not documents, and each id maps through
+    its root. The label is the exact component minimum either way, so
+    every survivor policy built on it is unchanged.
+
+    Scale: the union-find is partition-local and linear-ish in the
+    partition's edges; the contracted graph holds one node per local
+    root that a partition boundary cut, so the shuffled rounds shrink
+    with the partition count, not the corpus. No collect — the driver
+    sees an emptiness probe and, per round, a Σlabel probe."""
+    id_type = pairs.schema["id_a"].dataType
+    local = (pairs.select("id_a", "id_b")
+             .mapInArrow(_local_roots_arrow,
+                         f"id {id_type.simpleString()}, "
+                         f"root {id_type.simpleString()}")
+             .localCheckpoint())
+    out = local  # one partition: one union-find saw every edge
+    if local.rdd.getNumPartitions() > 1:
+        out = local.groupBy("id").agg(F.min("root").alias("root"))
+        links = (local.join(out.withColumnRenamed("root", "head"), "id")
+                 .where(F.col("root") != F.col("head"))
+                 .select(F.col("root").alias("src"),
+                         F.col("head").alias("dst")))
+        if not links.isEmpty():
+            labels = _min_label_rounds(links, max_iter)
+            out = (out.join(labels, out.root == labels.id, "left")
+                   .select(out.id, F.coalesce(labels.label, out.root)
+                           .alias("root")))
+    return out.select(F.col("id").alias(id_col),
+                      F.col("root").alias("cluster"))
 
 
 def near_dup_survivors(docs: DataFrame, threshold: float = 0.5,
@@ -1407,6 +1486,18 @@ def _drop_cluster_losers(docs: DataFrame, pairs: DataFrame,
     return docs.join(losers, id_col, "left_anti")
 
 
+def _gram_hit_flags(texts: pd.Series, grams: np.ndarray,
+                    n: int) -> pd.Series:
+    """Per doc: does any n-gram window hash occur in ``grams``?"""
+    h, starts, m = _shingle_segments(texts, n, space_split=True)
+    flags = np.zeros(len(texts), dtype=bool)
+    nz = m > 0
+    if h.size:
+        hit = np.isin(h.view(np.int64), grams)
+        flags[nz] = np.logical_or.reduceat(hit, starts[nz])
+    return pd.Series(flags, index=texts.index)
+
+
 def benchmark_decontaminate(docs: DataFrame, bench_docs: DataFrame,
                             n: int = 13, id_col: str = "doc_id",
                             text_col: str = "text") -> DataFrame:
@@ -1415,28 +1506,43 @@ def benchmark_decontaminate(docs: DataFrame, bench_docs: DataFrame,
     for LLM corpora (the doc-level filter behind the
     docs_benchmark_contamination catalog query).
 
-    Scale shape: the benchmark's distinct gram DIGESTS broadcast (each
-    gram md5-hashed INSIDE the transform — fixed-width keys, the gram
-    string never materializes as a row); candidates explode digests
-    and left-semi join locally, so the corpus never shuffles; the
-    final anti-join removes flagged ids."""
-    def digests(df, keys):
-        toks = F.filter(F.split(F.trim(F.col(text_col)), " "),
-                        lambda x: x != "")
-        t = df.select(*keys, toks.alias("toks"))
-        g = F.when(
-            F.size("toks") >= n,
-            F.expr(f"transform(sequence(1, size(toks) - {n - 1}),"
-                   f" i -> md5(array_join(slice(toks, i, {n}), ' ')))")
-        ).otherwise(F.expr("CAST(array() AS array<string>)"))
-        return t.select(*keys, F.explode(g).alias("gh"))
+    Token model: single-space separators, empty tokens dropped, so a
+    tab or newline stays inside its token; docs under n tokens and
+    NULL text are never flagged. Both sides hash their n-gram windows
+    with the same content-stable kernel as span_hash_batch
+    (_shingle_segments: fixed-key siphash per token, uint64 rolling
+    polynomial per window), so a hash means the same gram in every
+    batch, executor and run. ``id_col`` is unused: the flag needs no
+    id.
 
-    # the bench side only contributes digests — no id column required
-    bench_g = F.broadcast(digests(bench_docs, []).distinct())
-    contaminated = (digests(docs, [F.col(id_col)])
-                    .join(bench_g, "gh", "left_semi")
-                    .select(id_col).distinct())
-    return docs.join(contaminated, id_col, "left_anti")
+    Scale shape: the benchmark text comes to the driver once, and its
+    distinct gram hashes (8 bytes each) are sorted and broadcast — the
+    same size class as the old broadcast of one 32-char md5 digest per
+    distinct bench gram. The candidates then take ONE vectorized flag
+    pass — a Series→Series pandas UDF builds each batch's window
+    hashes, tests them with np.isin and folds them per doc with
+    np.logical_or.reduceat — and the flag is filtered on: no explode,
+    no join, the corpus never shuffles. Collision trade
+    (as span_hash_batch): a 64-bit window hash matches some other bench
+    gram's hash with probability ~B/2^64 for B bench grams, so W corpus
+    windows raise ~W·B/2^64 false flags — about one doc at W = 10^12,
+    B = 10^7. A false flag drops a clean doc; it never keeps a
+    contaminated one."""
+    from luzzu_spark.fixtures import spread
+    bench = bench_docs.select(text_col).toPandas()[text_col]
+    h, _, _ = _shingle_segments(bench, n, space_split=True)
+    grams = np.unique(h.view(np.int64))
+    bc = docs.sparkSession.sparkContext.broadcast(grams)
+
+    @pandas_udf(BooleanType())
+    def contaminated(texts: pd.Series) -> pd.Series:
+        return _gram_hit_flags(texts, bc.value, n)
+
+    # nondeterministic only to keep Catalyst from copying the UDF into
+    # a pushed-down Filter (CLAUDE.md rule 7)
+    flag = contaminated.asNondeterministic()(F.col(text_col))
+    return (spread(docs).withColumn("_contaminated", flag)
+            .where(~F.col("_contaminated")).drop("_contaminated"))
 
 
 def cluster_survivors_by_quality(docs: DataFrame, pairs: DataFrame,
@@ -1449,10 +1555,12 @@ def cluster_survivors_by_quality(docs: DataFrame, pairs: DataFrame,
     longest / highest-quality member so the survivor is the superset
     copy (cf. the crawl-dedup practice behind C4/Gopher/RefinedWeb).
 
-    Scale: components via near_dup_clusters (per-round shuffle on id,
-    rounds = cluster diameter); the argmax is ONE window over cluster
-    members only (rows = Σ|component|, a vanishing fraction of the
-    corpus); losers anti-join back — broadcastable when small.
+    Scale: components via near_dup_clusters (one union-find pass per
+    edge partition; shuffled rounds only over the roots a partition
+    boundary cut, O(log diameter) of them); the argmax is ONE window
+    over cluster members only (rows = Σ|component|, a vanishing
+    fraction of the corpus); losers anti-join back — broadcastable
+    when small.
     """
     members = near_dup_clusters(pairs, id_col=id_col)
     scored = members.join(docs.select(id_col, score_col), id_col)

@@ -14,6 +14,8 @@ drops in without code changes (SURVEY.md §2.1).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,7 +24,7 @@ TABLES = ("region", "nation", "customer", "part", "orders",
 
 
 def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Ensure at least core-count partitions before compute-heavy stages.
+    """Right-size ``df``'s partitions before a compute-heavy stage.
 
     A single small parquet file (one row group) scans as ONE partition,
     which serializes every downstream per-row stage onto one core — at
@@ -32,16 +34,76 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     shuffle added). Only under-parallel inputs pay the one round-robin
     shuffle, whose cost is proportional to the (small) input.
 
+    The other way round, a small frame cut into many tiny partitions
+    (a persisted hash-join output keeps all spark.sql.shuffle.partitions
+    of them: AQE may not coalesce inside a cached plan) folds with a
+    narrow coalesce to the count AQE gives a shuffle of its size, never
+    below the target. Every task of a Python stage has a fixed cost
+    (about 0.25 s on a 4-CPU box), so 32 tasks over 1,600 short docs
+    took 2.2 s where 4 took 0.5 s.
+
     Streaming frames pass through unchanged: repartition-by-number is
     not valid pre-aggregation in a stream, and micro-batch file splits
     already set parallelism (each foreachBatch micro-batch is a static
-    frame and is spread like any other batch)."""
+    frame and is spread like any other batch).
+
+    The decision reads the plan and runs no job (planned_shape)."""
     if df.isStreaming:
         return df
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    parts, size = planned_shape(df)
+    if parts < target:
         return df.repartition(target)
+    fold = max(target, _aqe_partitions(df, size))
+    if parts > fold:
+        return df.coalesce(fold)
     return df
+
+
+# Spark's AQE coalescing defaults (advisoryPartitionSizeInBytes,
+# coalescePartitions.minPartitionSize); session.py sets neither
+_ADVISORY_PARTITION_BYTES = 64 << 20
+_MIN_PARTITION_BYTES = 1 << 20
+
+
+def planned_shape(df: DataFrame) -> tuple[int, int]:
+    """(partitions, bytes) of ``df``, read from its plan without running
+    it (``df.rdd`` runs the shuffles of an adaptive plan). Bytes is the
+    optimizer's size estimate — exact for a filled cache.
+
+    A plan holding an exchange is re-planned by AQE at run time, which
+    coalesces small shuffles, so its partitions follow AQE's own rule
+    (parallelismFirst: default-parallelism partitions, none under
+    1 MiB or over 64 MiB) applied to the size. A persisted frame whose
+    cache is not filled yet is counted the same way, since building its
+    RDD would run the cached plan. Any other plan (scans, local data,
+    checkpoints, filled caches) builds its RDD, which only lists its
+    splits or cached blocks."""
+    qe = df._jdf.queryExecution()
+    size = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan, exchanges placed
+    stack, runs = [plan], False
+    while stack and not runs:
+        node = stack.pop()
+        name = node.nodeName()
+        runs = "Exchange" in name or (
+            name == "InMemoryTableScan" and not
+            node.relation().cacheBuilder().isCachedColumnBuffersLoaded())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.length()))
+    if not runs:
+        return qe.toRdd().getNumPartitions(), size
+    return _aqe_partitions(df, size), size
+
+
+def _aqe_partitions(df: DataFrame, size: int) -> int:
+    """Partitions AQE coalesces a shuffle of ``size`` bytes into."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    part_bytes = min(_ADVISORY_PARTITION_BYTES,
+                     max(_MIN_PARTITION_BYTES, size / par))
+    return max(1, math.ceil(size / part_bytes))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

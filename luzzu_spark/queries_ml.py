@@ -624,7 +624,7 @@ def pipeline_confusion_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embed_near_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space near-dup removal end-to-end: hyperplane-LSH
     blocking → exact-cosine verify (cosine_near_dup_pairs) → exact
-    connected components (min-label propagation) → lowest-id cluster
+    connected components (dedup.near_dup_clusters) → lowest-id cluster
     head survives. The embedding twin of dedup_near_survivors (same
     clustering machinery, different similarity space)."""
     from luzzu_spark.dedup import near_dup_clusters

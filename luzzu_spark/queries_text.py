@@ -686,18 +686,20 @@ def dedup_cluster_quality_survivors(spark: SparkSession,
     """Quality-priority near-dup survivor selection, END TO END
     hash-checkable: exact 5-gram Jaccard pairs (the inverted-index
     blocking of dedup_ngram_jaccard_exact) → exact connected
-    components (dedup.near_dup_clusters, iterative min-label
-    propagation) → keep the LONGEST member per cluster (ties → lowest
-    id). The oracle replays the *clustering itself* with a DuckDB
-    recursive-CTE transitive closure, so the iterative Spark algorithm
-    — not just its inputs — is verified against an independent engine.
+    components (dedup.near_dup_clusters: a union-find per edge
+    partition, then min-label rounds over the roots partitions share)
+    → keep the LONGEST member per cluster (ties → lowest id). The
+    oracle replays the *clustering itself* with a DuckDB recursive-CTE
+    transitive closure, so the Spark algorithm — not just its inputs —
+    is verified against an independent engine.
 
     Scale: pair discovery is the inverted shingle index over the
     replayable HASH shingles (one Arrow pass; 8-byte join keys — the
     r04 rewrite that retired this query's shingle-string shuffle
-    keys); components shuffle (id,label) rows only, rounds = cluster
-    diameter; the argmax window runs over cluster MEMBERS (a vanishing
-    fraction of the corpus), never the corpus itself."""
+    keys); components shuffle (id,label) rows only, and only for
+    roots a partition boundary cut (O(log diameter) rounds); the
+    argmax window runs over cluster MEMBERS (a vanishing fraction of
+    the corpus), never the corpus itself."""
     from luzzu_spark.dedup import _shingle_set_udf, near_dup_clusters
 
     d = _docs(spark, sf_dir).select("doc_id", "n_chars", "text")

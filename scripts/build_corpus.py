@@ -14,8 +14,10 @@ the same input produce byte-identical corpora):
                      scrub); drops low-quality docs, scrubs PII.
 2. exact dedup     — first-wins on content hash (dedup.exact_dedup).
 3. near-dup dedup  — MinHash+LSH candidates → exact connected
-                     components; survivor = lowest id (default) or the
-                     longest member (--survivor-policy quality).
+                     components (a numpy union-find per edge partition;
+                     Spark rounds only over roots partitions share);
+                     survivor = lowest id (default) or the longest
+                     member (--survivor-policy quality).
 3a. semantic dedup — optional (--dedup-semantic <embeddings.parquet>):
                      SemDeDup-style cosine-near-duplicate clusters over
                      document embeddings keep only the longest member
@@ -29,7 +31,9 @@ the same input produce byte-identical corpora):
                      duplicated token ranges (Lee et al.
                      exact-substring removal, dedup.remove_dup_spans).
 4. decontaminate   — drop docs sharing any 13-gram with the benchmark
-                     set (dedup.benchmark_decontaminate), if given.
+                     set, if given: one vectorized flag pass against
+                     the broadcast bench gram hashes
+                     (dedup.benchmark_decontaminate).
 5. hash-sample     — reshard-invariant content-hash sampling at
                      --sample-rate (the exact dyadic md5 uniform; same
                      doc → same split on any cluster, forever).
@@ -201,14 +205,17 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     else:
         funnel["input"] = pages.count()
 
-    # persist discipline (review r05): every funnel count below is an
-    # action, and without pinning each one re-runs the full upstream
-    # DAG — the Arrow-UDF assessment (the single most expensive stage)
-    # would execute once PER COUNT. Pin the assessment output, the
-    # post-near-dup frame (the expensive join stage) and the
-    # decontaminated frame (its digest explode + anti-join would
-    # otherwise rerun for the sampling count, the pack window and the
-    # final pin); unpersist everything before returning.
+    # persist discipline: every funnel count below is an action, and
+    # without pinning each one re-runs the full upstream DAG — the
+    # Arrow-UDF assessment (the single most expensive stage) would
+    # execute once PER COUNT. Pin the assessment output; the exact-dedup
+    # output (else its semi-join is planned again by the signature pass
+    # and the near-dup anti-join); the post-near-dup frame (the
+    # expensive join stage); and the decontaminated frame (else its
+    # flag pass reruns for the sampling count, the pack window and the
+    # final pin). A pinned frame is counted before its next reader, so
+    # fixtures.spread reads its partition count from the filled cache.
+    # Unpersist everything before returning.
     pinned: list = []
 
     def pin(df):
@@ -219,7 +226,7 @@ def build(spark: SparkSession, args: argparse.Namespace) -> dict:
     kept = pin(QualityPipeline(**pipe_kwargs).filtered(pages))
     funnel["quality_kept"] = kept.count()
 
-    kept = dedup.exact_dedup(kept)
+    kept = pin(dedup.exact_dedup(kept))
     funnel["after_exact_dedup"] = kept.count()
 
     if args.survivor_policy == "quality":

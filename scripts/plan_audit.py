@@ -57,6 +57,11 @@ _DRIVER_MAT_ALLOWED = {
      'spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}'):
         "catalog metadata — a handful of property rows per index "
         "table, never data rows",
+    ("luzzu_spark/dedup.py",
+     "bench = bench_docs.select(text_col).toPandas()[text_col]"):
+        "the benchmark/eval set's text, once per decontamination — "
+        "the set whose distinct gram hashes are broadcast anyway "
+        "(the old broadcast held a 32-char md5 digest per gram)",
     ("luzzu_spark/streaming.py",
      'F.lit(2**31 - 1))).alias("d")).collect()[0]'):
         "exactly one aggregate row (count + folded key digest) per "

@@ -1145,3 +1145,134 @@ def test_bloom_index_meta_backcompat_no_shards_key(spark, tmp_path):
     dedup.bloom_index_commit(more, "url", idx)
     assert os.path.exists(os.path.join(idx, "bitmap.bin"))
     assert dedup.bloom_index_filter(more, idx, "url").count() == 0
+
+
+def _union_find_reference(edges):
+    """Pure-python union-find: node → lowest id of its component."""
+    parent = {n: n for e in edges for n in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _count_rounds(monkeypatch):
+    """Record every call of the distributed min-label rounds."""
+    calls = []
+    rounds = dedup._min_label_rounds
+
+    def counted(links, max_iter):
+        calls.append(max_iter)
+        return rounds(links, max_iter)
+
+    monkeypatch.setattr(dedup, "_min_label_rounds", counted)
+    return calls
+
+
+def test_near_dup_clusters_contracted_rounds(spark, monkeypatch):
+    """Edges spread over 8 partitions: each partition's union-find
+    sees part of every component, so the contracted graph of local
+    roots is non-empty and the distributed rounds must finish the
+    job — on a seeded random graph and on a 60-node chain."""
+    import random
+    rng = random.Random(11)
+    graph = sorted({tuple(sorted(rng.sample(range(80), 2)))
+                    for _ in range(200)})
+    chain = [(i, i + 1) for i in range(1, 60)]
+    for edges in (graph, chain):
+        calls = _count_rounds(monkeypatch)
+        pairs = spark.createDataFrame(
+            edges, "id_a long, id_b long").repartition(8)
+        got = {r.doc_id: r.cluster
+               for r in dedup.near_dup_clusters(pairs).collect()}
+        assert got == _union_find_reference(edges)
+        assert calls, "the contracted-graph rounds never ran"
+
+
+def test_near_dup_clusters_single_partition_runs_no_round(spark,
+                                                         monkeypatch):
+    """One edge partition: its union-find sees every edge, so the
+    labels come straight from it and no distributed round runs."""
+    calls = _count_rounds(monkeypatch)
+    edges = [(i, i + 1) for i in range(1, 60)] + [(100, 101)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long") \
+        .coalesce(1)
+    got = {r.doc_id: r.cluster
+           for r in dedup.near_dup_clusters(pairs).collect()}
+    assert got == _union_find_reference(edges)
+    assert calls == []
+
+
+def test_near_dup_clusters_max_iter_raises_across_partitions(spark):
+    """The convergence certificate survives the contraction: a chain
+    cut across partitions cannot certify within one round."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 60)],
+        "id_a long, id_b long").repartition(8)
+    with pytest.raises(RuntimeError, match="no convergence certificate"):
+        dedup.near_dup_clusters(pairs, max_iter=1)
+
+
+def test_benchmark_decontaminate_matches_md5_reference(spark):
+    """Seeded property test: the vectorized flag pass drops exactly the
+    docs the retired Catalyst form dropped — md5 digests of every
+    13-token window built by transform(sequence(...)), explode,
+    left-semi join, anti-join — over docs with tabs, newlines, runs of
+    spaces, NULL, empty and under-13-token texts and non-ASCII
+    tokens."""
+    import random
+    n = 13
+
+    def md5_reference(docs, bench):
+        def digests(df, keys):
+            toks = F.filter(F.split(F.trim(F.col("text")), " "),
+                            lambda x: x != "")
+            t = df.select(*keys, toks.alias("toks"))
+            g = F.when(
+                F.size("toks") >= n,
+                F.expr(f"transform(sequence(1, size(toks) - {n - 1}),"
+                       f" i -> md5(array_join(slice(toks, i, {n}), ' ')))")
+            ).otherwise(F.expr("CAST(array() AS array<string>)"))
+            return t.select(*keys, F.explode(g).alias("gh"))
+
+        bench_g = F.broadcast(digests(bench, []).distinct())
+        hit = (digests(docs, [F.col("doc_id")])
+               .join(bench_g, "gh", "left_semi").select("doc_id")
+               .distinct())
+        return docs.join(hit, "doc_id", "left_anti")
+
+    vocab = ["a", "b", "c", "é", "日本", "x y", "ß", "—"]
+    seps = [" ", " ", " ", "  ", "\t", "\n", " \n ", "   "]
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+
+        def text(k):
+            out = []
+            for _ in range(k):
+                out += [rng.choice(vocab), rng.choice(seps)]
+            return "".join(out)
+
+        texts = [text(rng.randrange(0, 40)) for _ in range(150)]
+        # bench docs quote windows of corpus docs, so flags do occur
+        bench = [" ".join(t.split(" ")[rng.randrange(0, 8):][:30])
+                 for t in rng.sample(texts, 12)]
+        bench += [text(20) for _ in range(8)] + [None, ""]
+        rows = list(enumerate(texts)) + [(1000, None), (1001, ""),
+                                         (1002, "  a  b  ")]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        bench_df = spark.createDataFrame([(b,) for b in bench],
+                                         "text string")
+        got = sorted(r.doc_id for r in dedup.benchmark_decontaminate(
+            docs, bench_df).collect())
+        want = sorted(r.doc_id
+                      for r in md5_reference(docs, bench_df).collect())
+        assert got == want, seed
+        assert len(want) < len(rows), "no doc was flagged"

@@ -414,3 +414,91 @@ def test_bloom_index_filter_plan_shapes(spark, tmp_path):
     assert "MapInPandas" in p8, p8
     # no second scan: the index is files, not a joined relation
     assert p8.count("Scan") <= p1.count("Scan") + 1, p8
+
+
+def _sql_plans_since(spark, mark: int) -> list[str]:
+    """Physical plans of the SQL executions with id > ``mark``."""
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return [e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.length()))
+            if e.executionId() > mark]
+
+
+def _last_sql_execution(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return max((execs.apply(i).executionId()
+                for i in range(execs.length())), default=-1)
+
+
+def test_decontamination_flag_pass_has_no_hof(spark):
+    """benchmark_decontaminate is one vectorized flag pass: no
+    interpreted transform/sequence lambdas (CLAUDE.md rule 1), no
+    explode and no join against the bench grams."""
+    from luzzu_spark import dedup
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(i, i + 20)))
+         for i in range(50)], "doc_id long, text string")
+    bench = spark.createDataFrame([("w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 "
+                                    "w13 w14 w15",)], "text string")
+    plan = _plan(dedup.benchmark_decontaminate(docs, bench))
+    assert "lambdafunction" not in plan, plan
+    for node in ("transform(", "sequence(", "Generate", "Join"):
+        assert node not in plan, (node, plan)
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_near_dup_clusters_plans_one_map_in_arrow(spark):
+    """The local union-find is ONE mapInArrow pass over the edge
+    frame, whatever the partitioning."""
+    from luzzu_spark import dedup
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 60)],
+        "id_a long, id_b long").repartition(8)
+    mark = _last_sql_execution(spark)
+    dedup.near_dup_clusters(pairs).collect()
+    arrow = [p for p in _sql_plans_since(spark, mark) if "MapInArrow" in p]
+    assert len(arrow) == 1, arrow
+    final = arrow[0].split("== Initial Plan ==")[0]
+    assert final.count("+- MapInArrow") == 1, final
+
+
+def test_spread_runs_no_job(spark):
+    """spread() decides from the plan: neither an adaptive plan (whose
+    RDD would run its shuffles) nor a scan or a filled cache starts a
+    job."""
+    from luzzu_spark import dedup
+    from luzzu_spark.fixtures import spread
+    store = spark.sparkContext._jsc.sc().statusStore()
+    docs = load_table(spark, SF, "documents").persist()
+    try:
+        docs.count()
+        frames = [load_table(spark, SF, "documents"), docs,
+                  dedup.exact_dedup(docs)]
+        before = store.jobsList(None).length()
+        for df in frames:
+            spread(df)
+        assert store.jobsList(None).length() == before
+    finally:
+        docs.unpersist()
+
+
+def test_spread_folds_tiny_partitions(spark):
+    """A small frame cut into many partitions (a persisted shuffle
+    output keeps all of them) folds to the target with a narrow
+    coalesce; an under-parallel one is lifted to it."""
+    from luzzu_spark.fixtures import spread
+    target = spark.sparkContext.defaultParallelism
+    many = spark.range(200).repartition(target * 8).persist()
+    try:
+        many.count()
+        folded = spread(many)
+        assert folded.rdd.getNumPartitions() == target
+        above_cache = _plan(folded).split("InMemoryTableScan")[0]
+        assert "Coalesce" in above_cache, above_cache
+        assert "Exchange" not in above_cache, above_cache
+    finally:
+        many.unpersist()
+    one = spark.range(200).coalesce(1)
+    assert spread(one).rdd.getNumPartitions() == target
